@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from schemamap_spark.catalog.base import CatalogAdapter
+from schemamap_spark.entities.registry import local_frame
 
 CONSTRAINTS_SCHEMA = T.StructType([
     T.StructField("schema_name", T.StringType()),
@@ -69,8 +70,10 @@ class SparkNativeCatalog(CatalogAdapter):
                   "column_description string, attnum int")
         return self.spark.createDataFrame(rows, schema)
 
+    # the two always-empty frames are JVM local relations, so the SMO joins
+    # over them start no Python workers (entities/registry.local_frame)
     def constraints(self) -> DataFrame:
-        return self.spark.createDataFrame([], CONSTRAINTS_SCHEMA)
+        return local_frame(self.spark, [], CONSTRAINTS_SCHEMA)
 
     def indexes(self) -> DataFrame:
-        return self.spark.createDataFrame([], INDEXES_SCHEMA)
+        return local_frame(self.spark, [], INDEXES_SCHEMA)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,10 +47,8 @@ class SchemamapEngine:
         )
         self._i18n: dict = {}
         self._smo: DataFrame | None = None
-        # (smo snapshot, registry version, frame) — see columns()/status()
-        self._columns_plan: tuple | None = None
-        self._status_plan: tuple | None = None
-        self._candidates_plan: tuple | None = None
+        # plan memos: slot -> (anchor, version, frame); see _memo()
+        self._plans: dict[str, tuple] = {}
 
     # --- SMO lifecycle ---------------------------------------------------
     def refresh(self, concurrently: bool = False) -> DataFrame:
@@ -70,7 +69,7 @@ class SchemamapEngine:
         # refresh is the user's "re-read the catalog" signal: drop the
         # candidates plan memo too (columns/status memos key on the SMO
         # snapshot identity, which this method rebinds)
-        self._candidates_plan = None
+        self._plans.pop("candidates", None)
         smo = build_smo(self.catalog, ordered=self.warehouse_dir is not None)
         if self.warehouse_dir:
             fs = fscommit.fs_for(self.warehouse_dir, self.spark)
@@ -89,6 +88,19 @@ class SchemamapEngine:
         return self._smo
 
     # --- derived views ----------------------------------------------------
+    def _memo(
+        self, slot: str, anchor: object, version: object, build: Callable[[], DataFrame]
+    ) -> DataFrame:
+        """The frame last built for `slot`, reused while `anchor` is the same
+        object (`is`) and `version` is equal; otherwise `build()` replaces it.
+        Only the plan is kept: every action on the frame still recomputes."""
+        hit = self._plans.get(slot)
+        if hit is not None and hit[0] is anchor and hit[1] == version:
+            return hit[2]
+        df = build()
+        self._plans[slot] = (anchor, version, df)
+        return df
+
     def columns(self) -> DataFrame:
         """Wide, concept-extended view (the reference's dynamic `columns`).
 
@@ -102,36 +114,23 @@ class SchemamapEngine:
         returned frame still recomputes from the snapshot — this caches no
         data beyond what the localCheckpoint already holds."""
         smo = self.smo()
-        cached = self._columns_plan
-        if (
-            cached is not None
-            and cached[0] is smo
-            and cached[1] == self.concepts.version
-        ):
-            return cached[2]
-        wide = self.concepts.wide_columns(smo)
-        self._columns_plan = (smo, self.concepts.version, wide)
-        return wide
+        return self._memo(
+            "columns", smo, self.concepts.version, lambda: self.concepts.wide_columns(smo)
+        )
 
     def status(self) -> DataFrame:
         # same plan-memo discipline (and invalidation key) as columns()
-        smo = self.smo()
-        cached = self._status_plan
-        if (
-            cached is not None
-            and cached[0] is smo
-            and cached[1] == self.concepts.version
-        ):
-            return cached[2]
-        st = status_aggregate(self.columns())
-        self._status_plan = (smo, self.concepts.version, st)
-        return st
+        return self._memo(
+            "status", self.smo(), self.concepts.version,
+            lambda: status_aggregate(self.columns()),
+        )
 
     def status_json(self) -> str:
+        # the tenant and MDE lists come from the driver-side registry: only
+        # a user list_tenants override runs a Spark job (entities/registry.py)
         row = self.status().collect()[0].asDict()
-        tenants = [r.asDict() for r in self.entities.list_tenants().orderBy("tenant_id").collect()]
-        mdes = [r.asDict() for r in self.entities.list_mdes().orderBy("mde_name").collect()]
-        row["tenants"] = tenants or None
+        mdes = [{"mde_name": n} for n in self.entities.mde_names()]
+        row["tenants"] = self.entities.tenant_rows() or None
         row["master_data_entities"] = mdes or None
         return json.dumps(row, indent=2, sort_keys=True, default=str)
 
@@ -149,12 +148,10 @@ class SchemamapEngine:
         # "re-read the catalog" signal.
         if getattr(self.catalog, "materializes_snapshots", False):
             return master_data_entity_candidates(self.catalog)
-        cached = self._candidates_plan
-        if cached is not None and cached[0] is self.catalog:
-            return cached[1]
-        df = master_data_entity_candidates(self.catalog)
-        self._candidates_plan = (self.catalog, df)
-        return df
+        return self._memo(
+            "candidates", self.catalog, None,
+            lambda: master_data_entity_candidates(self.catalog),
+        )
 
     # --- misc SDK parity ---------------------------------------------------
     def doctor(self, role_edges: DataFrame | None = None, table_grants: DataFrame | None = None) -> dict:
@@ -208,8 +205,8 @@ class SchemamapEngine:
     def verify_installation(self) -> dict:
         """Reference verify_installation() (SCHEMA:391-396)."""
         return {
-            "tenants_defined": not self.entities.list_tenants().isEmpty(),
-            "mdes_defined": not self.entities.list_mdes().isEmpty(),
+            "tenants_defined": self.entities.tenants_defined(),
+            "mdes_defined": bool(self.entities.mde_names()),
         }
 
     def _i18n_path(self) -> str | None:

@@ -9,12 +9,21 @@
 - `update_function_definition` parity: re-defining an existing entry replaces
   it (create-or-replace semantics); non-identifier names are rejected, the
   Spark-side stand-in for the reference's quote_ident guard.
+
+Driver-held lists (the default empty tenants frame, the MDE names) never go
+through `spark.createDataFrame(list)`: PySpark ships such a list through
+`parallelize` into a PythonRDD, so every action on the frame (even over zero
+rows) waits for Python workers, ~1 s per collect on a 4-core host.
+`local_frame` builds a JVM LocalRelation instead, which plans to a
+`LocalTableScan` and runs without any executor-side Python. Callers that only
+need the values (`status_json`, `verify_installation`) read the registry
+directly, and run a Spark job only over a user `list_tenants` override.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -30,6 +39,26 @@ TENANTS_SCHEMA = T.StructType([
 ])
 
 
+MDES_SCHEMA = T.StructType([T.StructField("mde_name", T.StringType())])
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: T.StructType
+) -> DataFrame:
+    """A DataFrame over driver-held rows as a JVM LocalRelation (see the
+    module docstring). Values must be JVM-convertible scalars of the
+    schema's types (str/None for string columns)."""
+    jvm = spark._jvm
+    jrows = jvm.java.util.ArrayList()
+    for row in rows:
+        values = spark.sparkContext._gateway.new_array(jvm.java.lang.Object, len(row))
+        for i, v in enumerate(row):
+            values[i] = v
+        jrows.add(jvm.org.apache.spark.sql.RowFactory.create(values))
+    jschema = spark._jsparkSession.parseDataType(schema.json())
+    return DataFrame(spark._jsparkSession.createDataFrame(jrows, jschema), spark)
+
+
 class EntityRegistry:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -42,13 +71,25 @@ class EntityRegistry:
 
     def list_tenants(self) -> DataFrame:
         if self._tenants_fn is None:
-            return self.spark.createDataFrame([], TENANTS_SCHEMA)
+            return local_frame(self.spark, [], TENANTS_SCHEMA)
         df = self._tenants_fn(self.spark)
         got = [f.name for f in df.schema.fields]
         want = [f.name for f in TENANTS_SCHEMA.fields]
         if got != want:
             raise ValueError(f"list_tenants override must return columns {want}, got {got}")
         return df
+
+    def tenant_rows(self) -> list[dict]:
+        """`list_tenants()` as dicts in `orderBy("tenant_id")` order
+        (ascending, nulls first). Without an override this runs no Spark
+        job; an override is collected once and sorted in the driver."""
+        if self._tenants_fn is None:
+            return []
+        rows = [r.asDict() for r in self.list_tenants().collect()]
+        return sorted(rows, key=lambda r: (r["tenant_id"] is not None, r["tenant_id"]))
+
+    def tenants_defined(self) -> bool:
+        return self._tenants_fn is not None and not self.list_tenants().isEmpty()
 
     # --- master data entities -----------------------------------------
     def define_master_data_entity(self, name: str, fn: Callable[[SparkSession], DataFrame]) -> str:
@@ -62,7 +103,8 @@ class EntityRegistry:
     def mde(self, name: str) -> DataFrame:
         return self._mdes[name](self.spark)
 
+    def mde_names(self) -> list[str]:
+        return sorted(self._mdes)
+
     def list_mdes(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [(n,) for n in sorted(self._mdes)], "mde_name string"
-        )
+        return local_frame(self.spark, [(n,) for n in self.mde_names()], MDES_SCHEMA)

@@ -6,6 +6,9 @@ import json
 
 from pyspark.sql import functions as F
 
+from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
+from schemamap_spark.entities import TENANTS_SCHEMA
+
 
 def test_tenants_default_empty_then_override(spark, engine):
     assert engine.entities.list_tenants().count() == 0
@@ -163,3 +166,108 @@ def test_candidates_memo_cleared_by_refresh(engine):
     assert engine.master_data_entity_candidates() is c1  # plan reuse
     engine.refresh()
     assert engine.master_data_entity_candidates() is not c1
+
+
+def _fresh_engine(spark):
+    from schemamap_spark import SchemamapEngine
+    from schemamap_spark.catalog import FixtureCatalog
+
+    return SchemamapEngine(spark, FixtureCatalog(spark))
+
+
+def _jobs_in_group(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jobs_probe_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_status_json_runs_only_the_status_jobs(spark):
+    """The tenant and MDE lists of status_json come from the driver-side
+    registry: a warm status_json runs exactly the jobs of the status
+    aggregate, and the registry frames plan without a PythonRDD scan."""
+    from schemamap_spark.catalog import SparkNativeCatalog
+
+    engine = _fresh_engine(spark)
+    engine.entities.define_master_data_entity(
+        "jobs_probe",
+        lambda s: s.read.parquet(f"{DEFAULT_FIXTURE_DIR}/organizations.parquet"),
+    )
+    engine.status_json()  # warm: snapshot, plan memo, codegen
+    status_jobs = _jobs_in_group(spark, lambda: engine.status().collect())
+    assert status_jobs > 0
+    assert _jobs_in_group(spark, engine.status_json) == status_jobs
+
+    native = SparkNativeCatalog(spark)
+    for df in (
+        engine.entities.list_mdes(),
+        engine.entities.list_tenants(),
+        native.constraints(),
+        native.indexes(),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
+    assert [r.mde_name for r in engine.entities.list_mdes().collect()] == ["jobs_probe"]
+    assert engine.entities.list_tenants().schema == TENANTS_SCHEMA
+    assert native.constraints().count() == 0 and native.indexes().count() == 0
+
+
+def _old_status_json(engine) -> str:
+    """status_json as rendered before the registry lists moved to the
+    driver: each list sorted by a Spark orderBy and collected."""
+    row = engine.status().collect()[0].asDict()
+    tenants = [
+        r.asDict() for r in engine.entities.list_tenants().orderBy("tenant_id").collect()
+    ]
+    mdes = [r.asDict() for r in engine.entities.list_mdes().orderBy("mde_name").collect()]
+    row["tenants"] = tenants or None
+    row["master_data_entities"] = mdes or None
+    return json.dumps(row, indent=2, sort_keys=True, default=str)
+
+
+def _old_verify_installation(engine) -> dict:
+    return {
+        "tenants_defined": not engine.entities.list_tenants().isEmpty(),
+        "mdes_defined": not engine.entities.list_mdes().isEmpty(),
+    }
+
+
+def test_status_json_and_verify_installation_match_old_rendering(spark):
+    """Byte-identical status_json and the same verify_installation dict in
+    the default, MDE-only and tenants-override cases. The override holds
+    the fixture tenants plus a null tenant_id row, which orderBy puts
+    first; ids are strings, so '10' sorts before '2'."""
+    engine = _fresh_engine(spark)
+    assert engine.status_json() == _old_status_json(engine)
+    assert engine.verify_installation() == _old_verify_installation(engine)
+    assert engine.verify_installation() == {"tenants_defined": False, "mdes_defined": False}
+
+    engine.entities.define_master_data_entity(
+        "parity_orgs",
+        lambda s: s.read.parquet(f"{DEFAULT_FIXTURE_DIR}/organizations.parquet"),
+    )
+    assert engine.status_json() == _old_status_json(engine)
+    assert engine.verify_installation() == _old_verify_installation(engine)
+    assert engine.verify_installation() == {"tenants_defined": False, "mdes_defined": True}
+
+    null_row = spark.createDataFrame(
+        [(None, "nobody", "No Tenant", "en_US", None)], TENANTS_SCHEMA
+    )
+    engine.entities.define_tenants(
+        lambda s: s.read.parquet(f"{DEFAULT_FIXTURE_DIR}/tenants.parquet").unionByName(null_row)
+    )
+    js = engine.status_json()
+    assert js == _old_status_json(engine)
+    tenants = json.loads(js)["tenants"]
+    assert len(tenants) == 26
+    assert [t["tenant_id"] for t in tenants[:4]] == [None, "1", "10", "11"]
+    assert engine.verify_installation() == _old_verify_installation(engine)
+    assert engine.verify_installation() == {"tenants_defined": True, "mdes_defined": True}
