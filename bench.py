@@ -14,6 +14,12 @@ a SIDECAR json file (default BENCH_DETAIL.json next to this script,
 override with $SPARK_GRAFT_BENCH_DETAIL). tools/bench_trend.py reads
 the sidecar shape (it carries every key the old fat stdout line did).
 
+Each query runs through run_query under the job group `bench:<query>`;
+the sidecar's per-query stage rollups (`queries_stage_weather`) bill
+every stage to the group of the job that submitted it, so warm-up
+stages belong to no query. tools/bench_isolated.py times its single
+query through the same run_query.
+
 Query set = the operator classes that dominate real workloads: scan+filter,
 shuffled join/agg, top-k, set-agg, status (catalog analytics end-to-end),
 dedup (minhash LSH), ANN top-k, text analysis, event windowing.
@@ -22,6 +28,7 @@ dedup (minhash LSH), ANN top-k, text analysis, event windowing.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -117,266 +124,116 @@ def _weather_verdict(host: dict | None) -> tuple[bool, list[str]]:
         return False, [f"weather judge unavailable: {e!r}"]
 
 
-def _stage_metrics(spark) -> list | None:
-    """All COMPLETE + FAILED stages of this app from the local Spark UI
-    REST API. Fetched ONCE, after the last query and before
-    spark.stop() (review r17 pass 5): an in-loop per-query fetch was
-    O(total-stages) of driver-JVM JSON serialization BETWEEN timed
-    queries — this way the channel adds zero in-run load of ANY kind,
-    executor or driver. FAILED attempts are included because a retried
-    stage's first attempt burned real descheduled wall time — the
-    strongest signal of the very regimes the channel measures; billing
-    only the clean retry would bias cpu_over_run back toward healthy.
-    Best-effort by the same contract as host_condition: None on any
-    failure (UI disabled, port moved, API shape change)."""
+def run_query(spark, name: str, fn, sf_dir: str, reps: int = 3) -> dict:
+    """Time one query: 1 cold + `reps` warm noop writes, every job under
+    the job group `bench:<name>` so query_stage_weather can bill its
+    stages by label. The cold run pays one-time codegen/JIT compilation;
+    the warm MEDIAN reflects steady-state throughput (round 3: best-of-2
+    is noisy at the ~1 s scale, one GC hiccup moved text_profile 1.5x
+    with no code change; median-of-3 is robust to one outlier). The noop
+    writer forces FULL computation of every column; a count() would let
+    Catalyst prune projections (and sometimes whole joins). Returns
+    {cold, warm, warm_median}; the group is cleared afterwards so later
+    actions stay unlabelled."""
+    sc = spark.sparkContext
+    sc.setJobGroup(f"bench:{name}", f"bench:{name}")
+    runs = []
     try:
-        import urllib.request
+        for _ in range(1 + reps):
+            t0 = time.monotonic()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            runs.append(round(time.monotonic() - t0, 3))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    warm = runs[1:]
+    return {"cold": runs[0], "warm": warm,
+            "warm_median": sorted(warm)[len(warm) // 2]}
 
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        url = (
-            f"{base}/api/v1/applications/{app}/stages"
-            f"?status=complete&status=failed&status=active"
-        )
-        with urllib.request.urlopen(url, timeout=5) as r:
-            out = json.loads(r.read().decode())
-        return out if isinstance(out, list) else None
+
+def query_stage_weather(spark, names) -> dict[str, dict | None]:
+    """Per-query executor CPU-vs-wall rollups — the IN-RUN weather
+    channel the bracketing host probes cannot provide (they sample
+    seconds at the run's edges). `executorRunTime` is task wall ms and
+    `executorCpuTime` CPU ns; their ratio collapses under the steal and
+    page-fault regimes while the task clock runs, and is
+    width-independent. bench_trend --weather --gate fails an artifact
+    whose floor sits below STAGE_FLOOR.
+
+    Attribution is by label, not clock: the REST `/jobs` rows of group
+    `bench:<name>` (run_query sets it; broadcast and subquery jobs
+    inherit it) own their stageIds, a stage shared by several jobs
+    belongs to the first, and every attempt of an owned stage is billed
+    (a retry is new work). Unlabelled warm-up stages belong to no query.
+    One fetch after the last query, once the listener bus has drained,
+    so the channel adds no load between timed queries. Best-effort like
+    host_condition: None per query on any REST failure; None also for a
+    query with no stages or zero run time."""
+    try:
+        from perfbench.spans import SparkRest, stage_totals
+
+        rest = SparkRest(spark.sparkContext)
+        rest.settle()
+        jobs = rest.get("jobs")
+        rows = rest.get("stages")
+        owner: dict[int, object] = {}
+        for j in sorted(jobs, key=lambda j: j["jobId"]):
+            for i in j["stageIds"]:
+                owner.setdefault(i, j.get("jobGroup"))
+        billed: dict[object, list[dict]] = {}
+        for st in rows:
+            billed.setdefault(owner.get(st["stageId"]), []).append(st)
     except Exception as e:  # noqa: BLE001 — diagnostics never kill the bench
         print(f"# stage metrics unavailable: {e!r}", file=sys.stderr)
-        return None
-
-
-def _parse_rest_ts(s: object) -> float | None:
-    """Spark REST timestamp ('2026-08-16T17:58:03.123GMT') → epoch
-    seconds, or None for anything unparseable. The suffix after the
-    23-char datetime must actually be 'GMT' (or absent): a row
-    formatted in another zone would otherwise parse cleanly and
-    silently misbucket its stage by hours — this function's contract
-    is drop rather than misattribute (ADVICE r17)."""
-    if not isinstance(s, str) or s[23:] not in ("", "GMT"):
-        return None
-    from datetime import datetime, timezone
-
-    try:
-        return (
-            datetime.strptime(s[:23], "%Y-%m-%dT%H:%M:%S.%f")
-            .replace(tzinfo=timezone.utc)
-            .timestamp()
-        )
-    except ValueError:
-        return None
-
-
-def _stage_key(s: dict) -> tuple | None:
-    """(stageId, attemptId) when it is a usable identity: hashable and
-    not entirely id-less. None otherwise — an id-less or
-    unhashable-id row (a list/dict where an int belongs) is treated as
-    anonymous, counted individually, instead of crashing the channel
-    at artifact-build time after every query already ran (review r18
-    pass 4: ids.add() on an unhashable key raised TypeError)."""
-    key = (s.get("stageId"), s.get("attemptId"))
-    try:
-        hash(key)
-    except TypeError:
-        return None
-    return None if key == (None, None) else key
-
-
-def stage_bucket(
-    stages: list | None, windows: dict[str, tuple[float, float]]
-) -> dict[str, dict | None]:
-    """Bill each stage to the query whose wall-clock window
-    [t0, t1] contains its submissionTime, then roll each bucket up
-    (review r17 pass 5 — the earlier seen-set threading misattributed
-    stages TWICE: a transient fetch failure rolled query N's stages
-    into N+1, and the AppStatusStore's async listener bus could land a
-    query's final stage after its fetch; submission-time bucketing
-    cannot MISATTRIBUTE, and warm-up/out-of-window stages simply drop
-    out instead of being billed to q01). The bus CAN still OMIT: a
-    stage whose completion event lags the fetch shows as status ACTIVE
-    with partial metrics — those are excluded from the sums and
-    COUNTED per bucket as `"incomplete": n` so a rollup computed over
-    a subset of its query's stages says so instead of passing as full
-    coverage (review r17 pass 6). Windows and submissionTime are
-    same-host clocks (driver JVM vs Python, ms-scale skew) —
-    gap-straddling stages drop rather than misattribute. A stage row
-    whose submissionTime is missing or unparseable (incl. the non-GMT
-    zones _parse_rest_ts now drops) cannot be attributed to ANY
-    query — and therefore cannot be EXCLUDED from any query either,
-    so it counts as lost coverage in EVERY window: with the floor now
-    gating (r18), a silently vanished row could be the very stage
-    that absorbed the mid-run collapse, and its bucket would present
-    a subset ratio as full coverage (review r18 pass 2; the r17
-    pass-8 invariant — a subset ratio must declare itself whatever
-    made it a subset — applied to the attribution step)."""
+        return {name: None for name in names}
     out: dict[str, dict | None] = {}
-    buckets: dict[str, list] = {name: [] for name in windows}
-    active: dict[str, set] = {name: set() for name in windows}
-    anon_active: dict[str, int] = {name: 0 for name in windows}
-    # unattributable rows carry the same attempt-dedup trust as the
-    # ACTIVE path (r17 pass 7: a duplicated REST row must not read as
-    # two lost stages) — id-less / unhashable-id ones count
-    # individually like anon_active; non-dict rows have no identity at
-    # all and count per row (review r18 pass 3 ×2: non-dicts
-    # previously vanished silently, and duplicates double-counted).
-    # Resolution happens AFTER the pass: a garbled row whose attempt
-    # was also seen attributed (billed in a bucket, or ACTIVE) is a
-    # duplicate of accounted work, not lost coverage — counting it
-    # would mark an otherwise fully-covered query incomplete, which
-    # under the gating floor EXCLUDES it from the very check it should
-    # feed (review r18 pass 4)
-    unattr_keys: set = set()
-    placed_keys: set = set()
-    unattributable = 0
-    for s in stages if isinstance(stages, list) else ():
-        if not isinstance(s, dict):
-            unattributable += 1
-            continue
-        ts = _parse_rest_ts(s.get("submissionTime"))
-        key = _stage_key(s)
-        if ts is None:
-            if key is None:
-                unattributable += 1
-            else:
-                unattr_keys.add(key)
-            continue
-        for name, (t0, t1) in windows.items():
-            if t0 <= ts <= t1:
-                if s.get("status") == "ACTIVE":
-                    # dedup by attempt, same trust as the completed
-                    # path (review r17 pass 7: a duplicated REST row
-                    # must not read as two lagging stages) — except
-                    # id-less/unhashable rows, which would collapse
-                    # into one entry and UNDERCOUNT; those count
-                    # individually instead (review r17 pass 8)
-                    if key is None:
-                        anon_active[name] += 1
-                    else:
-                        active[name].add(key)
-                else:
-                    buckets[name].append(s)
-                break
-        # EVERY row with a parseable ts has a known location — billed
-        # in a bucket, counted ACTIVE, or deliberately dropped as
-        # warm-up/gap (no window matched). All three are accounted
-        # work, so a later garbled duplicate of the same attempt is
-        # not lost coverage (review r18 pass 5: the first fix only
-        # recorded billed rows, so a garbled duplicate of an
-        # out-of-window warm-up stage still tainted every query)
-        if key is not None:
-            placed_keys.add(key)
-    lost_everywhere = unattributable + len(unattr_keys - placed_keys)
-    for name in windows:
-        roll = stage_rollup(buckets[name])
-        lagging = len(active[name]) + anon_active[name] + lost_everywhere
-        if lagging:
-            # an ALL-active bucket still declares its lost coverage
-            # (review r17 pass 7): {"incomplete": n} with no ratio is
-            # the zero-coverage case, distinguishable from "no stages
-            # landed in this window" (None). Merged with any coverage
-            # stage_rollup itself reported lost to malformed rows.
-            roll = roll or {}
-            roll["incomplete"] = roll.get("incomplete", 0) + lagging
-        out[name] = roll
+    for name in names:
+        t = stage_totals(billed.get(f"bench:{name}", []))
+        run_ms, cpu_ms = t["task_run_ms"], t["cpu_ms"]
+        out[name] = {
+            "stages": t["stages"],
+            "run_ms": int(run_ms),
+            "cpu_ms": int(cpu_ms),
+            "cpu_over_run": round(cpu_ms / run_ms, 3),
+        } if t["stages"] and run_ms > 0 else None
     return out
 
 
-def stage_rollup(stages: list | None) -> dict | None:
-    """Aggregate executor CPU-vs-wall over `stages` — the IN-RUN
-    weather channel the bracketing host probes cannot provide (they
-    sample seconds at the run's edges; SCALE.md r17: within-envelope
-    windows still spread totals 12.3-19.6 s). `executorRunTime` is
-    task wall-milliseconds; `executorCpuTime` is actual CPU
-    nanoseconds — their ratio collapses exactly under the steal/fault
-    regimes (threads descheduled or stalled while the task clock runs)
-    and is width-independent. Per-query attribution happens in
-    stage_bucket (submission-time windows); this is the aggregation
-    core, deduping stage ATTEMPTS defensively (a retry is new work,
-    billed separately; a duplicate REST row is not). Since r18 the
-    channel GATES: bench_trend --weather --gate fails an artifact
-    whose full-coverage floor sits below STAGE_FLOOR (0.3 — the
-    healthy baseline is not 1.0: shuffle IO, GC and scheduler gaps
-    all lower it legitimately, per-query differently; the floor was
-    calibrated from the r17 gated-green anchors, clean >= 0.5 vs
-    collapsed ~0.15). A stage attempt whose every row carries unusable
-    metrics is LOST COVERAGE, reported as `"incomplete"` exactly like
-    an ACTIVE-at-fetch stage (review r17 pass 8: a subset ratio must
-    declare itself whatever made it a subset); no billable stages at
-    all yields None (or {"incomplete": n} when coverage was lost), and
-    a zero run time never mints a fake ratio."""
-    if not isinstance(stages, list):
-        return None
-    ids: set = set()
-    bad_keys: set = set()
-    run_ms = 0.0
-    cpu_ms = 0.0
-    n = 0
-    anon_lost = 0
-    for s in stages:
-        if not isinstance(s, dict):
-            continue
-        key = _stage_key(s)
-        # id-less (or unhashable-id) rows have no identity to dedup
-        # BY — all of them would collapse into one entry and the
-        # second valid one would silently vanish from the sums; mirror
-        # stage_bucket's anon handling (review r17 pass 8 gave the
-        # ACTIVE path exactly this treatment): each anon row stands
-        # alone — valid = billed individually, malformed = lost
-        # coverage individually (ADVICE r17; unhashable ids review r18
-        # pass 4)
-        anon = key is None
-        if not anon and key in ids:
-            continue
-        r = s.get("executorRunTime")
-        c = s.get("executorCpuTime")
-        if isinstance(r, (int, float)) and isinstance(c, (int, float)) \
-                and not isinstance(r, bool) and not isinstance(c, bool):
-            # mark seen only AFTER validation (review r17 pass 7): a
-            # malformed row must not shadow a later valid duplicate of
-            # the same attempt — order-independence for the dedup
-            if not anon:
-                ids.add(key)
-            run_ms += r
-            cpu_ms += c / 1e6  # ns -> ms
-            n += 1
-        elif anon:
-            anon_lost += 1
-        else:
-            bad_keys.add(key)
-    # attempts that NEVER produced a usable row are lost coverage
-    lost = len(bad_keys - ids) + anon_lost
-    if n == 0 or run_ms <= 0:
-        return {"incomplete": lost} if lost else None
-    out = {
-        "stages": n,
-        "run_ms": int(run_ms),
-        "cpu_ms": int(cpu_ms),
-        "cpu_over_run": round(cpu_ms / run_ms, 3),
-    }
-    if lost:
-        out["incomplete"] = lost
-    return out
+def _env_number(var: str, default, parse):
+    """$var parsed by `parse`, or `default` with a stderr note naming the
+    variable when it is malformed, non-finite or negative — the weather
+    wait is best-effort and must never kill the run (time.sleep raises
+    on NaN and on negative seconds)."""
+    raw = os.environ.get(var)
+    if raw is None:
+        return default
+    try:
+        v = parse(raw)
+        if math.isfinite(v) and v >= 0:
+            return v
+    except ValueError:
+        pass
+    print(f"# {var}={raw!r} is not a finite number >= 0; using {default}",
+          file=sys.stderr)
+    return default
 
 
-def wait_for_healthy_window() -> tuple[dict | None, list[dict]]:
+def wait_for_healthy_window(
+    default_tries: int = 10, default_wait_s: float = 75.0
+) -> tuple[dict | None, list[dict]]:
     """Poll the host probe until a HEALTHY window opens, bounded
     (VERDICT r16 #3): three of the driver's last four bench artifacts
     were weather-degraded because the bench ran whenever it was invoked,
     not when the host was in the envelope. Up to
-    $SPARK_GRAFT_WEATHER_TRIES probes (default 10) spaced
-    $SPARK_GRAFT_WEATHER_WAIT_S seconds (default 75) — ~12 min worst
-    case, then the bench proceeds anyway with the degraded probe
-    embedded (the artifact then PROVES no healthy window opened rather
-    than silently measuring weather). Returns (last probe, attempt log);
-    the log rides in the sidecar. Set TRIES=1 to skip waiting."""
-    try:
-        tries = max(1, int(os.environ.get("SPARK_GRAFT_WEATHER_TRIES", "10")))
-    except ValueError:
-        tries = 10
-    try:
-        wait_s = float(os.environ.get("SPARK_GRAFT_WEATHER_WAIT_S", "75"))
-    except ValueError:
-        wait_s = 75.0
+    $SPARK_GRAFT_WEATHER_TRIES probes spaced $SPARK_GRAFT_WEATHER_WAIT_S
+    seconds; each caller passes its own defaults (bench.py 10 x 75 s,
+    ~12 min worst case; the gated series 60 x 20 s). Then the caller
+    proceeds anyway with the degraded probe embedded (the artifact then
+    PROVES no healthy window opened rather than silently measuring
+    weather). Returns (last probe, attempt log with each try's reasons).
+    Set TRIES=1 to skip waiting."""
+    tries = max(1, _env_number("SPARK_GRAFT_WEATHER_TRIES", default_tries, int))
+    wait_s = _env_number("SPARK_GRAFT_WEATHER_WAIT_S", default_wait_s, float)
     attempts: list[dict] = []
     host = None
     absent_streak = 0
@@ -523,57 +380,26 @@ def main() -> None:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     warm_runs: dict[str, list[float]] = {}
-    # per-query wall-clock windows for the post-run stage bucketing
-    # (see stage_bucket) — warm-up stages fall outside every window
-    windows: dict[str, tuple[float, float]] = {}
     for name in HEADLINE:
-        fn = SPARK_QUERIES[name]
-        # label the query's jobs in the UI (guide §1.5) — makes the SQL/
-        # stage tabs attributable when debugging a bench run; the stage
-        # channel itself buckets by submission-time windows, not labels
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        w0 = time.time()
-        runs = []
-        # 1 cold + 3 warm runs: the cold run pays one-time codegen/JIT
-        # compilation; the warm MEDIAN reflects steady-state throughput.
-        # (Round 3 showed best-of-2 is noisy at the ~1s scale: a single
-        # GC/session hiccup in the one warm run moved text_profile 1.5×
-        # with no code change. Median-of-3 warm is robust to one outlier.)
-        for _ in range(4):
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            # noop writer forces FULL computation of every column; a count()
-            # materialization would let Catalyst prune projections (and
-            # sometimes whole joins), understating per-query work
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.monotonic() - t0, 3))
-        windows[name] = (w0, time.time())
-        spark.sparkContext.setJobDescription(None)
-        cold[name] = runs[0]
-        warm_runs[name] = runs[1:]
-        timings[name] = sorted(runs[1:])[1]
+        r = run_query(spark, name, SPARK_QUERIES[name], sf_dir)
+        cold[name] = r["cold"]
+        warm_runs[name] = r["warm"]
+        timings[name] = r["warm_median"]
         print(
             f"# {name}: cold={cold[name]}s warm_median={timings[name]}s "
-            f"warm={runs[1:]}",
+            f"warm={r['warm']}",
             file=sys.stderr,
         )
 
-    # ONE stage fetch for the whole run, after a short settle so the
-    # async AppStatusStore has applied the last completion events, then
-    # bucket by submissionTime — see _stage_metrics/stage_bucket
-    time.sleep(0.5)
-    stage_weather = stage_bucket(_stage_metrics(spark), windows)
+    stage_weather = query_stage_weather(spark, HEADLINE)
     for name in HEADLINE:
-        sw = stage_weather.get(name)
+        sw = stage_weather[name]
         # a None rollup is the channel-failure signal — print it, don't
         # skip it (review r17 pass 6: a missing line hides WHICH query
         # lost coverage)
         print(
-            f"# {name}: cpu_over_run="
-            f"{sw.get('cpu_over_run') if sw else None}"
-            + (f" ({sw['stages']} stages)" if sw and "stages" in sw else "")
-            + (f" incomplete={sw['incomplete']}"
-               if sw and "incomplete" in sw else ""),
+            f"# {name}: cpu_over_run={sw and sw['cpu_over_run']}"
+            + (f" ({sw['stages']} stages)" if sw else ""),
             file=sys.stderr,
         )
 
@@ -617,11 +443,10 @@ def main() -> None:
         # r13-r16 isolated artifacts). tools/bench_trend.py --weather
         # reads these for its dispersion verdict.
         "queries_warm": warm_runs,
-        # IN-RUN weather (r17, record-only): per-query executor
-        # CPU-vs-wall rollups from the UI REST API — the channel that
-        # certifies window quality ACROSS the run, not just at its
-        # bracketed edges. Gating floor to be calibrated from
-        # gated-green artifacts (see stage_rollup).
+        # IN-RUN weather: per-query executor CPU-vs-wall rollups, billed
+        # by job group — the channel that certifies window quality
+        # ACROSS the run, not just at its bracketed edges (see
+        # query_stage_weather)
         "queries_stage_weather": stage_weather,
         "value_cold": round(sum(cold.values()), 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

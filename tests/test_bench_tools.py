@@ -1,11 +1,13 @@
-"""The bench tooling's pure-Python contracts — no Spark session.
+"""The bench tooling's contracts.
 
 tools/bench_isolated.py is the drift arbiter and tools/bench_trend.py the
 round-over-round diff; both feed the judge's artifact trail, so their
 classification/parsing edges get real pins (ADVICE r13: a trailing
 non-JSON stdout line must not demote a completed multi-minute run to the
 error map; a non-numeric reps operand must refuse with the usage string,
-not a raw traceback).
+not a raw traceback). Everything here is pure Python except one test,
+which runs bench.run_query on the shared Spark session to pin the
+job-group stage attribution.
 """
 
 from __future__ import annotations
@@ -512,23 +514,23 @@ def _ab_tree(tmp_path, name):
 
 def _ab_run(bench_ab, monkeypatch, tmp_path, side_results, queries="q"):
     """Drive bench_ab.main() with doubles for every subprocess seam:
-    _run_side pops canned results per (side) call order, _probe returns
-    a healthy envelope dict, _registry_names knows only 'q'. Returns
-    the artifact doc."""
+    the shared run_child pops canned results per (side) call order,
+    bench.host_condition returns a healthy envelope dict,
+    _registry_names knows only 'q'. Returns the artifact doc."""
     healthy = {
         "first_touch_gb_s": 5.0, "steal_pct": 0.2,
         "cpu_parallel_scale": 20.0,
     }
     calls = {"old": 0, "new": 0}
 
-    def fake_run_side(root, query, reps, sf_dir, tmo):
+    def fake_run_child(root, query, reps, sf_dir, tmo):
         side = "old" if root.endswith("old") else "new"
         res = side_results[side][calls[side]]
         calls[side] += 1
         return dict(res)
 
-    monkeypatch.setattr(bench_ab, "_run_side", fake_run_side)
-    monkeypatch.setattr(bench_ab, "_probe", lambda: dict(healthy))
+    monkeypatch.setattr(bench_ab._bi, "run_child", fake_run_child)
+    monkeypatch.setattr(bench_ab.bench, "host_condition", lambda: dict(healthy))
     monkeypatch.setattr(bench_ab, "_registry_names", lambda root: {"q"})
     monkeypatch.setattr(bench_ab, "_git_sha", lambda root: "stub-sha")
     out = str(tmp_path / "ab.json")
@@ -661,7 +663,7 @@ def test_ab_unknown_query_refuses_before_any_run(
     registry probe BEFORE any multi-minute ladder, naming the side."""
     ran = []
     monkeypatch.setattr(
-        bench_ab, "_run_side",
+        bench_ab._bi, "run_child",
         lambda *a, **k: ran.append(a) or dict(OK_RUN),
     )
     monkeypatch.setattr(bench_ab, "_registry_names", lambda root: {"q"})
@@ -673,6 +675,23 @@ def test_ab_unknown_query_refuses_before_any_run(
         bench_ab.main()
     assert "unknown queries" in str(e.value) and "typo_q" in str(e.value)
     assert ran == []  # refused before any ladder run
+
+
+def test_ab_duplicate_query_refuses(bench_ab, monkeypatch, tmp_path):
+    """A repeated --queries name would merge two ladders into one row;
+    the shared query_list helper refuses it before any run."""
+    ran = []
+    monkeypatch.setattr(
+        bench_ab._bi, "run_child", lambda *a, **k: ran.append(a) or dict(OK_RUN)
+    )
+    monkeypatch.setattr(bench_ab.sys, "argv", [
+        "bench_ab.py", _ab_tree(tmp_path, "old"), _ab_tree(tmp_path, "new"),
+        "--queries", "q,q", "--out", str(tmp_path / "ab.json"),
+    ])
+    with pytest.raises(SystemExit) as e:
+        bench_ab.main()
+    assert "more than once" in str(e.value) and "'q'" in str(e.value)
+    assert ran == []
 
 
 def test_ab_pooled_median(bench_ab):
@@ -702,6 +721,31 @@ def test_query_timeout_contract(bench_isolated, monkeypatch):
         monkeypatch.setenv("BENCH_ISOLATED_TIMEOUT", bad)
         with pytest.raises(SystemExit):
             bench_isolated.query_timeout(3)
+
+
+def test_run_child_timeout_keeps_output_tail(bench_isolated, monkeypatch):
+    """The one fresh-process runner: a child that outlives its allowance
+    has its whole process GROUP killed, and the error carries the
+    child's stderr tail so the hang is diagnosable."""
+    import subprocess
+
+    class _HungProc(_FakeProc):
+        def communicate(self, timeout=None):
+            if timeout is not None:
+                raise subprocess.TimeoutExpired("child", timeout)
+            self.returncode = -9
+            return "", "still in stage 3 of 7"
+
+    proc = _HungProc("", returncode=None)
+    monkeypatch.setattr(bench_isolated.subprocess, "Popen", lambda *a, **k: proc)
+    killed = []
+    monkeypatch.setattr(
+        bench_isolated.os, "killpg", lambda pid, sig: killed.append(pid)
+    )
+    res = bench_isolated.run_child("/tree", "q", 1, "/sf", 5.0)
+    assert res["error"].startswith("timeout after 5s")
+    assert res["error"].endswith("still in stage 3 of 7")
+    assert killed == [4242]
 
 
 def test_parse_result_line_contract(bench_isolated):
@@ -1055,6 +1099,30 @@ def test_wait_for_healthy_window_bounded(monkeypatch):
     assert len(slept) == 2  # no sleep after the final try
 
 
+def test_weather_wait_env_falls_back_to_caller_default(monkeypatch, capsys):
+    """A malformed, non-finite or negative $SPARK_GRAFT_WEATHER_TRIES or
+    $SPARK_GRAFT_WEATHER_WAIT_S falls back to the CALLER's default with a
+    stderr note naming the variable — time.sleep raises on NaN and on
+    negative seconds, which used to kill bench.py before its one stdout
+    line printed."""
+    import bench
+
+    monkeypatch.setattr(bench, "host_condition", lambda: {"h": 1})
+    monkeypatch.setattr(bench, "_weather_verdict", lambda h: (False, ["steal"]))
+    slept = []
+    monkeypatch.setattr(bench.time, "sleep", lambda s: slept.append(s))
+    for bad in ("abc", "nan", "-5"):
+        monkeypatch.setenv("SPARK_GRAFT_WEATHER_TRIES", bad)
+        monkeypatch.setenv("SPARK_GRAFT_WEATHER_WAIT_S", bad)
+        for tries, wait_s in ((10, 75.0), (60, 20.0)):  # bench.py, gated
+            slept.clear()
+            _, log = bench.wait_for_healthy_window(tries, wait_s)
+            assert len(log) == tries and slept == [wait_s] * (tries - 1)
+            err = capsys.readouterr().err
+            assert "SPARK_GRAFT_WEATHER_TRIES" in err
+            assert "SPARK_GRAFT_WEATHER_WAIT_S" in err
+
+
 def test_out_probe_unlink_failure_names_stranded_file(
     bench_isolated, monkeypatch, tmp_path
 ):
@@ -1225,110 +1293,6 @@ def test_wait_for_healthy_window_bails_on_absent_probe(monkeypatch):
     assert host is None and len(log) == 1 and slept == []
 
 
-def test_stage_rollup_aggregates_and_dedups():
-    """The in-run weather channel's aggregation core (r17):
-    executorCpuTime(ns) vs executorRunTime(ms) summed over a bucket of
-    stages; duplicate (stageId, attemptId) REST rows are deduped while
-    a stage RETRY (new attempt) is billed separately; malformed entries
-    are skipped; no stages or zero run time yields None, never a fake
-    ratio. (Per-query attribution is stage_bucket's job - the old
-    seen-set threading left with the polling design, review r17
-    pass 6.) An attempt whose every row is malformed is LOST COVERAGE,
-    counted into `incomplete` just like an ACTIVE-at-fetch stage
-    (pass 8) — a subset ratio declares itself whatever made it a
-    subset."""
-    import bench
-
-    stages = [
-        {"stageId": 1, "attemptId": 0,
-         "executorRunTime": 1000, "executorCpuTime": 900e6},
-        {"stageId": 2, "attemptId": 0,
-         "executorRunTime": 1000, "executorCpuTime": 500e6},
-        # duplicate REST row: deduped, not double-billed
-        {"stageId": 2, "attemptId": 0,
-         "executorRunTime": 1000, "executorCpuTime": 500e6},
-        # a stage RETRY is a distinct attempt, billed separately
-        {"stageId": 2, "attemptId": 1,
-         "executorRunTime": 1000, "executorCpuTime": 100e6},
-        # malformed rows: never crash, never pollute the sums — but
-        # their attempts are lost coverage and must be DECLARED
-        {"stageId": 4, "attemptId": 0,
-         "executorRunTime": "n/a", "executorCpuTime": 1e6},
-        {"stageId": 5, "attemptId": 0,
-         "executorRunTime": True, "executorCpuTime": 1e6},
-        "not-a-dict",
-    ]
-    assert bench.stage_rollup(stages) == {
-        "stages": 3, "run_ms": 3000, "cpu_ms": 1500, "cpu_over_run": 0.5,
-        "incomplete": 2,
-    }
-    # fully-billable bucket: no incomplete key at all
-    assert bench.stage_rollup(stages[:2]) == {
-        "stages": 2, "run_ms": 2000, "cpu_ms": 1400, "cpu_over_run": 0.7,
-    }
-    # API failure / empty bucket -> None
-    assert bench.stage_rollup(None) is None
-    assert bench.stage_rollup([]) is None
-    # zero run time cannot mint a ratio
-    assert bench.stage_rollup(
-        [{"stageId": 9, "attemptId": 0,
-          "executorRunTime": 0, "executorCpuTime": 0}]
-    ) is None
-    # all-malformed bucket: zero coverage, declared (not None)
-    assert bench.stage_rollup(
-        [{"stageId": 9, "attemptId": 0,
-          "executorRunTime": None, "executorCpuTime": None}]
-    ) == {"incomplete": 1}
-
-
-def test_stage_rollup_idless_rows_bill_individually():
-    """ADVICE r17: two id-less rows both key to (None, None) — the
-    dedup set must not swallow the second valid one (each anon row is
-    billed individually, mirroring stage_bucket's anon_active
-    treatment), and each malformed anon row counts as lost coverage
-    individually (no identity means no later valid duplicate can
-    redeem it)."""
-    import bench
-
-    anon = {"executorRunTime": 1000, "executorCpuTime": 500e6}
-    # two valid id-less rows: BOTH billed (the old dedup kept one)
-    assert bench.stage_rollup([dict(anon), dict(anon)]) == {
-        "stages": 2, "run_ms": 2000, "cpu_ms": 1000, "cpu_over_run": 0.5,
-    }
-    # a valid anon row does NOT shadow identified dedup: the identified
-    # duplicate still dedups while anon rows bill individually
-    assert bench.stage_rollup([
-        dict(anon),
-        {"stageId": 1, "attemptId": 0,
-         "executorRunTime": 1000, "executorCpuTime": 900e6},
-        {"stageId": 1, "attemptId": 0,
-         "executorRunTime": 1000, "executorCpuTime": 900e6},
-        dict(anon),
-    ]) == {
-        "stages": 3, "run_ms": 3000, "cpu_ms": 1900,
-        "cpu_over_run": round(1900 / 3000, 3),
-    }
-    # malformed anon rows: lost coverage EACH (not collapsed to one),
-    # and a valid anon row beside them still bills
-    assert bench.stage_rollup([
-        {"executorRunTime": "n/a", "executorCpuTime": 1e6},
-        {"executorRunTime": None, "executorCpuTime": None},
-        dict(anon),
-    ]) == {
-        "stages": 1, "run_ms": 1000, "cpu_ms": 500, "cpu_over_run": 0.5,
-        "incomplete": 2,
-    }
-    # an UNHASHABLE stageId is an identity-less row too: billed
-    # individually, never a TypeError at artifact-build time (review
-    # r18 pass 4)
-    assert bench.stage_rollup([
-        {"stageId": [1], "attemptId": 0, **anon},
-        {"stageId": [1], "attemptId": 0, **anon},
-    ]) == {
-        "stages": 2, "run_ms": 2000, "cpu_ms": 1000, "cpu_over_run": 0.5,
-    }
-
-
 def test_stage_weather_advisory_extraction(bench_trend):
     """_stage_weather_of: sorted (ratio, query) pairs from the r17
     in-run channel. None ONLY when the channel KEY is absent (pre-r17
@@ -1376,246 +1340,62 @@ def test_stage_weather_advisory_extraction(bench_trend):
     assert got == {"range": [], "partial": ["z"]}
 
 
-def _rest_iso(epoch):
-    """Epoch seconds -> the Spark REST submissionTime format — ONE
-    helper for every stage-bucket test (review r17 pass 8: two verbatim
-    nested copies would let a format tweak silently diverge)."""
-    from datetime import datetime, timezone
-
-    return (
-        datetime.fromtimestamp(epoch, tz=timezone.utc)
-        .strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "GMT"
-    )
-
-
-def test_stage_bucket_bills_by_submission_window():
-    """Review r17 pass 5: per-query attribution by submissionTime
-    windows — a stage submitted inside query N's wall-clock window is
-    billed to N even if its completion event lands late (the async
-    AppStatusStore lag that seen-set threading misattributed); warm-up
-    and gap stages drop out instead of polluting a neighbor; an
-    unparseable timestamp cannot be attributed to OR excluded from any
-    query, so it counts as lost coverage in every window (review r18
-    pass 2 — under the gating floor it previously vanished silently)
-    and never crashes."""
+def test_run_query_bills_stages_by_job_group(spark, monkeypatch):
+    """bench.run_query labels a query's jobs `bench:<name>`, and
+    query_stage_weather bills each query exactly the stages of its own
+    group's jobs (the broadcast job included) and nothing to the
+    unlabelled warm-up that ran right before. A REST failure yields None
+    for each query, never an exception."""
     import bench
+    from conftest import SF01 as sf
+    from perfbench import spans
+    from pyspark.sql import functions as F
 
-    # epoch 1000-1010 = qA, 1010.5-1020 = qB; warm-up before both
-    stages = [
-        {"stageId": 1, "attemptId": 0, "submissionTime": _rest_iso(995),
-         "executorRunTime": 9999, "executorCpuTime": 1e6},  # warm-up: dropped
-        {"stageId": 2, "attemptId": 0, "submissionTime": _rest_iso(1001),
-         "executorRunTime": 1000, "executorCpuTime": 900e6},
-        {"stageId": 3, "attemptId": 0, "submissionTime": _rest_iso(1009.9),
-         "executorRunTime": 1000, "executorCpuTime": 100e6},  # late-completing qA stage
-        {"stageId": 4, "attemptId": 0, "submissionTime": _rest_iso(1011),
-         "executorRunTime": 2000, "executorCpuTime": 1000e6},
-        # a FAILED attempt is real descheduled work, billed like any other
-        {"stageId": 4, "attemptId": 1, "submissionTime": _rest_iso(1012),
-         "executorRunTime": 2000, "executorCpuTime": 200e6},
-        {"stageId": 5, "attemptId": 0, "submissionTime": "garbage",
-         "executorRunTime": 5000, "executorCpuTime": 1e6},  # unattributable
-        {"stageId": 6, "attemptId": 0, "submissionTime": _rest_iso(1010.2),
-         "executorRunTime": 7777, "executorCpuTime": 1e6},  # gap: dropped
-        # a still-ACTIVE stage at fetch time (listener bus lagging the
-        # fetch past the settle) carries only PARTIAL metrics: excluded
-        # from the sums, COUNTED as incomplete coverage (review r17
-        # pass 6 — the channel is misattribution-immune, not
-        # omission-immune, and must say so per query). A duplicated
-        # ACTIVE row counts ONCE (pass 7: same attempt-dedup trust as
-        # the completed path)
-        {"stageId": 7, "attemptId": 0, "submissionTime": _rest_iso(1013),
-         "status": "ACTIVE",
-         "executorRunTime": 123, "executorCpuTime": 1e6},
-        {"stageId": 7, "attemptId": 0, "submissionTime": _rest_iso(1013),
-         "status": "ACTIVE",
-         "executorRunTime": 123, "executorCpuTime": 1e6},
-    ]
-    windows = {"qA": (1000.0, 1010.0), "qB": (1010.5, 1020.0)}
-    out = bench.stage_bucket(stages, windows)
-    # the one unattributable row (stage 5) taints BOTH buckets
-    assert out["qA"] == {
-        "stages": 2, "run_ms": 2000, "cpu_ms": 1000, "cpu_over_run": 0.5,
-        "incomplete": 1,
+
+    def scan(s, d):
+        return s.read.parquet(os.path.join(d, "nation.parquet"))
+
+    def bcast_join(s, d):
+        n, r = scan(s, d), s.read.parquet(os.path.join(d, "region.parquet"))
+        return n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+
+    rest = spans.SparkRest(spark.sparkContext)
+    first_job = rest.next_job_id()
+    scan(spark, sf).count()  # the unlabelled warm-up
+    names = ["t_scan", "t_bcast_join"]
+    for name, fn in zip(names, (scan, bcast_join)):
+        res = bench.run_query(spark, name, fn, sf, 1)
+        assert set(res) == {"cold", "warm", "warm_median"}
+        assert len(res["warm"]) == 1 and res["warm_median"] == res["warm"][0]
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+    out = bench.query_stage_weather(spark, names)
+    jobs, stages = rest.phase(first_job)
+    jobs.sort(key=lambda j: j["jobId"])
+    groups = [j.get("jobGroup") for j in jobs]
+    # the warm-up's jobs come first and carry no bench group; every later
+    # job (footer reads, the broadcast, the noop writes) carries one
+    n_warm = groups.index("bench:t_scan")
+    assert n_warm >= 1
+    assert set(groups[n_warm:]) == {"bench:t_scan", "bench:t_bcast_join"}
+    # per run the join adds a second footer read and the broadcast job
+    assert groups.count("bench:t_bcast_join") == groups.count("bench:t_scan") + 4
+    for name in names:
+        mine = [
+            i for j in jobs if j.get("jobGroup") == f"bench:{name}"
+            for i in j["stageIds"] if stages[i]["status"] != "SKIPPED"
+        ]
+        assert out[name]["stages"] == len(mine) > 0
+        assert set(out[name]) == {"stages", "run_ms", "cpu_ms", "cpu_over_run"}
+        assert out[name]["run_ms"] > 0 and out[name]["cpu_over_run"] > 0
+
+    def boom(self, path):
+        raise OSError("UI down")
+
+    monkeypatch.setattr(spans.SparkRest, "get", boom)
+    assert bench.query_stage_weather(spark, names) == {
+        "t_scan": None, "t_bcast_join": None,
     }
-    assert out["qB"] == {
-        "stages": 2, "run_ms": 4000, "cpu_ms": 1200, "cpu_over_run": 0.3,
-        "incomplete": 2,
-    }
-    # an empty window still declares the unattributable row; with a
-    # fully-attributable stage list it reads None; fetch failure ->
-    # None per query, never crash
-    assert bench.stage_bucket(stages, {"qC": (2000.0, 2010.0)}) == {
-        "qC": {"incomplete": 1}
-    }
-    clean = [s for s in stages if s["stageId"] != 5]
-    assert bench.stage_bucket(clean, {"qC": (2000.0, 2010.0)}) == {"qC": None}
-    assert bench.stage_bucket(None, windows) == {"qA": None, "qB": None}
-
-
-def test_parse_rest_ts():
-    import bench
-
-    assert bench._parse_rest_ts("2026-08-16T17:58:03.123GMT") == 1786903083.123
-    assert bench._parse_rest_ts("2026-08-16T17:58:03.123") == 1786903083.123
-    assert bench._parse_rest_ts("garbage") is None
-    assert bench._parse_rest_ts(None) is None
-    assert bench._parse_rest_ts(1786903083) is None
-    # ADVICE r17: a non-GMT suffix must DROP, not silently parse the
-    # sliced prefix as UTC and misbucket every stage by hours — the
-    # function's contract is drop rather than misattribute
-    assert bench._parse_rest_ts("2026-08-16T17:58:03.123PST") is None
-    assert bench._parse_rest_ts("2026-08-16T17:58:03.123+0500") is None
-    assert bench._parse_rest_ts("2026-08-16T17:58:03.123GMT0") is None
-
-
-def test_stage_bucket_unattributable_rows_taint_every_window():
-    """Review r18 pass 2: a stage row whose submissionTime is missing
-    or unparseable (incl. the non-GMT zones _parse_rest_ts drops)
-    cannot be attributed to any query — and with the floor gating, a
-    silently vanished row could be the one that absorbed the mid-run
-    collapse. It counts as lost coverage in EVERY window, so each
-    bucket's ratio declares itself a subset instead of presenting as
-    full coverage."""
-    import bench
-
-    stages = [
-        {"stageId": 1, "attemptId": 0, "submissionTime": _rest_iso(1001),
-         "executorRunTime": 1000, "executorCpuTime": 900e6},
-        # three unattributable shapes: missing / garbled / foreign zone
-        {"stageId": 2, "attemptId": 0,
-         "executorRunTime": 1000, "executorCpuTime": 100e6},
-        {"stageId": 3, "attemptId": 0, "submissionTime": "garbled",
-         "executorRunTime": 1000, "executorCpuTime": 100e6},
-        {"stageId": 4, "attemptId": 0,
-         "submissionTime": "2026-08-16T17:58:03.123PST",
-         "executorRunTime": 1000, "executorCpuTime": 100e6},
-        # a DUPLICATED garbled REST row counts once (same attempt-dedup
-        # trust as the ACTIVE path, r17 pass 7 / review r18 pass 3)
-        {"stageId": 3, "attemptId": 0, "submissionTime": "garbled",
-         "executorRunTime": 1000, "executorCpuTime": 100e6},
-        # a non-dict row is as unattributable as a garbled timestamp —
-        # it must not vanish silently (review r18 pass 3); id-less
-        # garbled rows have no identity and count individually
-        "corrupt",
-        {"submissionTime": "garbled",
-         "executorRunTime": 1, "executorCpuTime": 1e6},
-        {"submissionTime": "garbled",
-         "executorRunTime": 1, "executorCpuTime": 1e6},
-    ]
-    out = bench.stage_bucket(stages, {"qA": (1000.0, 1010.0),
-                                      "qB": (2000.0, 2010.0)})
-    # qA keeps its billable rollup but declares the 6 lost rows (3
-    # identified + 1 non-dict + 2 id-less); qB — with nothing
-    # billable — still declares them (never None)
-    assert out["qA"] == {
-        "stages": 1, "run_ms": 1000, "cpu_ms": 900, "cpu_over_run": 0.9,
-        "incomplete": 6,
-    }
-    assert out["qB"] == {"incomplete": 6}
-    # a stage with a VALID ts outside every window is the warm-up /
-    # gap case and still drops silently — only unattributable rows
-    # taint
-    out = bench.stage_bucket(
-        [{"stageId": 9, "attemptId": 0, "submissionTime": _rest_iso(500),
-          "executorRunTime": 10, "executorCpuTime": 1e6}],
-        {"qA": (1000.0, 1010.0)},
-    )
-    assert out == {"qA": None}
-    # review r18 pass 4 ×2: (a) a garbled DUPLICATE of an attempt that
-    # was also billed (or ACTIVE) is accounted work, not lost coverage
-    # — counting it would mark a fully-covered query incomplete and
-    # EXCLUDE it from the gating floor it should feed; (b) an
-    # unhashable stageId must not crash the channel — it counts
-    # individually like an id-less row
-    out = bench.stage_bucket([
-        {"stageId": 3, "attemptId": 0, "submissionTime": _rest_iso(1001),
-         "executorRunTime": 1000, "executorCpuTime": 150e6},
-        {"stageId": 3, "attemptId": 0, "submissionTime": "garbled",
-         "executorRunTime": 1000, "executorCpuTime": 150e6},
-        {"stageId": 7, "attemptId": 0, "submissionTime": _rest_iso(1002),
-         "status": "ACTIVE", "executorRunTime": 1, "executorCpuTime": 1e6},
-        {"stageId": 7, "attemptId": 0, "submissionTime": "garbled",
-         "executorRunTime": 1, "executorCpuTime": 1e6},
-        {"stageId": [13], "attemptId": 0, "submissionTime": "garbled",
-         "executorRunTime": 1, "executorCpuTime": 1e6},
-    ], {"qA": (1000.0, 1010.0)})
-    # billed stage 3 + ACTIVE stage 7 (1 incomplete) + 1 unhashable
-    # unattributable; the two garbled duplicates resolve as accounted
-    assert out["qA"] == {
-        "stages": 1, "run_ms": 1000, "cpu_ms": 150, "cpu_over_run": 0.15,
-        "incomplete": 2,
-    }
-
-
-def test_stage_bucket_accounted_duplicates_do_not_taint():
-    """Review r18 pass 5: a garbled duplicate of a row whose valid twin
-    fell OUTSIDE every window (warm-up/gap — deliberately dropped) is a
-    duplicate of ACCOUNTED work, not lost coverage — only genuinely
-    unlocatable attempts taint (named separately from the tainting test
-    so a regression here reports the right invariant; review r18
-    pass 6)."""
-    import bench
-
-    out = bench.stage_bucket([
-        {"stageId": 1, "attemptId": 0, "submissionTime": _rest_iso(1001),
-         "executorRunTime": 1000, "executorCpuTime": 900e6},
-        {"stageId": 5, "attemptId": 0, "submissionTime": _rest_iso(500),
-         "executorRunTime": 10, "executorCpuTime": 1e6},  # warm-up
-        {"stageId": 5, "attemptId": 0, "submissionTime": "garbled",
-         "executorRunTime": 10, "executorCpuTime": 1e6},
-    ], {"qA": (1000.0, 1010.0)})
-    assert out["qA"] == {
-        "stages": 1, "run_ms": 1000, "cpu_ms": 900, "cpu_over_run": 0.9,
-    }
-
-
-def test_stage_bucket_all_active_window_declares_zero_coverage():
-    """Review r17 pass 7: a query whose EVERY stage is still ACTIVE at
-    fetch (the worst omission case — the last query under a lagging
-    listener bus) must record {"incomplete": n}, distinguishable from
-    None ('no stages landed in this window at all'). And a malformed
-    duplicate row must not shadow a later valid one in the rollup."""
-    import bench
-
-    stages = [
-        {"stageId": 1, "attemptId": 0, "submissionTime": _rest_iso(1001),
-         "status": "ACTIVE", "executorRunTime": 5, "executorCpuTime": 1e6},
-        {"stageId": 2, "attemptId": 0, "submissionTime": _rest_iso(1002),
-         "status": "ACTIVE", "executorRunTime": 5, "executorCpuTime": 1e6},
-    ]
-    out = bench.stage_bucket(stages, {"qZ": (1000.0, 1010.0),
-                                      "qEmpty": (2000.0, 2010.0)})
-    assert out["qZ"] == {"incomplete": 2}  # zero coverage, declared
-    assert out["qEmpty"] is None  # genuinely nothing in the window
-
-    # malformed-then-valid duplicate: the valid row must still bill
-    assert bench.stage_rollup([
-        {"stageId": 3, "attemptId": 0,
-         "executorRunTime": "n/a", "executorCpuTime": 1e6},
-        {"stageId": 3, "attemptId": 0,
-         "executorRunTime": 1000, "executorCpuTime": 800e6},
-    ]) == {"stages": 1, "run_ms": 1000, "cpu_ms": 800, "cpu_over_run": 0.8}
-
-
-def test_stage_bucket_idless_active_rows_count_individually():
-    """Review r17 pass 8: ACTIVE rows missing BOTH identity fields
-    would all collapse into one (None, None) dedup entry and UNDERCOUNT
-    lost coverage — id-less rows count individually instead (the
-    conservative direction for a coverage declaration)."""
-    import bench
-
-    stages = [
-        {"submissionTime": _rest_iso(1001), "status": "ACTIVE"},
-        {"submissionTime": _rest_iso(1002), "status": "ACTIVE"},
-        # a NORMAL duplicate-active pair still dedups to one
-        {"stageId": 8, "attemptId": 0, "submissionTime": _rest_iso(1003),
-         "status": "ACTIVE"},
-        {"stageId": 8, "attemptId": 0, "submissionTime": _rest_iso(1003),
-         "status": "ACTIVE"},
-    ]
-    out = bench.stage_bucket(stages, {"q": (1000.0, 1010.0)})
-    assert out["q"] == {"incomplete": 3}
 
 
 # --- bench_gated_series: the healthy-window acceptance predicate ----------
@@ -1628,17 +1408,23 @@ def bench_gated():
 
 def _gated_doc(bench_gated, monkeypatch, probes, child_results):
     """Drive run_series over one query with scripted probe verdicts and
-    child results. `probes` feeds (_wait_for_window, _probe-after,
-    _weather_ok-after) triples per attempt; `child_results` one dict per
-    attempt."""
+    child results. `probes` feeds (window-opened, closing-probe-ok)
+    pairs per attempt to the shared bench.wait_for_healthy_window and
+    bench._weather_verdict seams; `child_results` one dict per attempt
+    to the shared run_child."""
     seq = {"i": -1}
 
     def fake_wait(tries, wait_s):
+        assert (tries, wait_s) == (60, 20.0)  # the gated series' defaults
         seq["i"] += 1
         before_ok = probes[seq["i"]][0]
-        return ({"fake": "probe"} if before_ok else None, before_ok)
+        reasons = [] if before_ok else ["steal_pct 30 > 5.0"]
+        return (
+            {"fake": "probe"} if before_ok else None,
+            [{"try": 1, "ok": before_ok, "reasons": reasons}],
+        )
 
-    def fake_child(q, reps, sf_dir, tmo):
+    def fake_child(root, q, reps, sf_dir, tmo):
         return child_results[seq["i"]]
 
     def fake_probe():
@@ -1648,13 +1434,11 @@ def _gated_doc(bench_gated, monkeypatch, probes, child_results):
         after_ok = probes[seq["i"]][1]
         return (after_ok, [] if after_ok else ["steal_pct 20 > 5.0"])
 
-    monkeypatch.setattr(bench_gated, "_wait_for_window", fake_wait)
-    monkeypatch.setattr(bench_gated, "_run_child", fake_child)
-    monkeypatch.setattr(bench_gated, "_probe", fake_probe)
-    monkeypatch.setattr(bench_gated, "_weather_ok", fake_weather)
-    return bench_gated.run_series(
-        ["fake_q"], 3, "/nonexistent", len(probes), 1, 0.0
-    )
+    monkeypatch.setattr(bench_gated.bench, "wait_for_healthy_window", fake_wait)
+    monkeypatch.setattr(bench_gated._bi, "run_child", fake_child)
+    monkeypatch.setattr(bench_gated.bench, "host_condition", fake_probe)
+    monkeypatch.setattr(bench_gated.bench, "_weather_verdict", fake_weather)
+    return bench_gated.run_series(["fake_q"], 3, "/nonexistent", len(probes))
 
 
 _CLEAN_CHILD = {
@@ -1725,6 +1509,51 @@ def test_gated_no_window_exhausts_tries(bench_gated, monkeypatch):
     row = doc["queries"]["fake_q"]
     assert row["accepted"] is None
     assert [a["verdict"] for a in row["rejected_attempts"]] == [
-        "no window opened in poll budget",
-        "no window opened in poll budget",
+        "no window opened in poll budget: steal_pct 30 > 5.0",
+        "no window opened in poll budget: steal_pct 30 > 5.0",
     ]
+
+
+def test_gated_absent_probe_says_why(bench_gated, monkeypatch):
+    """An attempt with no healthy window carries the last poll's reasons,
+    so a probe that is absent on this box reads differently from weather
+    that never cleared."""
+    monkeypatch.setattr(bench_gated.bench, "host_condition", lambda: None)
+    monkeypatch.setattr(bench_gated.bench.time, "sleep", lambda s: None)
+    monkeypatch.delenv("SPARK_GRAFT_WEATHER_TRIES", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_WEATHER_WAIT_S", raising=False)
+    ran = []
+    monkeypatch.setattr(
+        bench_gated._bi, "run_child", lambda *a: ran.append(a) or {}
+    )
+    doc = bench_gated.run_series(["fake_q"], 3, "/nonexistent", 1)
+    (attempt,) = doc["queries"]["fake_q"]["rejected_attempts"]
+    assert attempt["verdict"].startswith("no window opened in poll budget: ")
+    assert "no host probe" in attempt["verdict"]
+    assert ran == [] and doc["all_accepted"] is False
+
+
+def test_gated_duplicate_query_refuses(bench_gated, monkeypatch, tmp_path):
+    """A repeated --queries name would merge two query rows into one;
+    distinct names reach run_series once each."""
+    calls = []
+
+    def fake_series(queries, reps, sf_dir, max_tries):
+        calls.append(queries)
+        return {"all_accepted": True, "accepted_total": None, "queries": {}}
+
+    monkeypatch.setattr(bench_gated, "run_series", fake_series)
+    out = str(tmp_path / "g.json")
+    monkeypatch.setattr(bench_gated.sys, "argv", [
+        "bench_gated_series.py", "--queries", "q01_scan,q01_scan", "--out", out,
+    ])
+    with pytest.raises(SystemExit) as e:
+        bench_gated.main()
+    assert "more than once" in str(e.value) and "q01_scan" in str(e.value)
+    assert calls == []
+    monkeypatch.setattr(bench_gated.sys, "argv", [
+        "bench_gated_series.py", "--queries", "q01_scan,q03_join_agg",
+        "--out", out,
+    ])
+    bench_gated.main()
+    assert calls == [["q01_scan", "q03_join_agg"]]

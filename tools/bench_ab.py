@@ -35,42 +35,23 @@ import sys
 import time
 
 _TOOLS = os.path.dirname(os.path.abspath(__file__))
-if _TOOLS not in sys.path:
-    sys.path.insert(0, _TOOLS)
+for p in (_TOOLS, os.path.dirname(_TOOLS)):
+    if p not in sys.path:
+        sys.path.insert(0, p)
 
 # the shared child-process contracts live beside this file in
-# bench_isolated: _killpg (process-GROUP kill), parse_result_line (the
-# acceptance predicate), query_timeout (reps-scaled allowance +
+# bench_isolated: run_child (fresh-process runner, process-GROUP kill,
+# output tail on timeout), query_timeout (reps-scaled allowance +
 # BENCH_ISOLATED_TIMEOUT override — the children ARE bench_isolated
 # runs, so its env knob governs them here too), probe_out_writable
-# (validate-then-measure for --out). One copy each (review r18 pass 2).
+# (validate-then-measure for --out) and the CLI helpers. One copy each.
+import bench  # noqa: E402 — host probe and weather verdict
 import bench_isolated as _bi  # noqa: E402
 
 # the calibrated in-run collapse threshold and the one rollup-usability
 # predicate — single sources of truth in bench_trend (see its
 # STAGE_FLOOR note for the anchors)
 from bench_trend import STAGE_FLOOR, full_coverage_ratio  # noqa: E402
-
-
-def _probe() -> dict | None:
-    """Bracketing host probe — best-effort, same contract as bench.py's
-    host_condition: a probe failure yields None, never a dead A/B."""
-    try:
-        import host_probe
-
-        return host_probe.probe()
-    except Exception as e:  # noqa: BLE001 — diagnostics never kill the run
-        print(f"# host probe unavailable: {e!r}", file=sys.stderr)
-        return None
-
-
-def _weather_ok(p: dict | None) -> tuple[bool, list[str]]:
-    try:
-        import host_probe
-
-        return host_probe.weather_ok(p)
-    except Exception as e:  # noqa: BLE001
-        return False, [f"weather unmeasurable: {e!r}"]
 
 
 def _git_sha(root: str) -> str | None:
@@ -85,55 +66,6 @@ def _git_sha(root: str) -> str | None:
         return out.stdout.strip() or None if out.returncode == 0 else None
     except (OSError, subprocess.TimeoutExpired):
         return None
-
-
-def _run_side(
-    root: str, query: str, reps: int, sf_dir: str, tmo: float | None
-) -> dict:
-    """One fresh-process single-query run under `root`'s own tree.
-    Returns the parsed result dict or {"error": ...}. A timed-out or
-    interrupted run kills the child's whole process GROUP — a detached
-    JVM grandchild would otherwise keep loading the host this tool is
-    measuring (review r18 pass 1) — and a timeout error carries the
-    child's output tail so the hang is diagnosable (review r18
-    pass 2)."""
-    cmd = [
-        sys.executable,
-        os.path.join(root, "tools", "bench_isolated.py"),
-        query,
-        str(reps),
-        sf_dir,
-    ]
-    proc = subprocess.Popen(
-        cmd,
-        cwd=root,
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-        start_new_session=True,
-    )
-    try:
-        out_s, err_s = proc.communicate(timeout=tmo)
-    except subprocess.TimeoutExpired:
-        _bi._killpg(proc)
-        out_s, err_s = proc.communicate()
-        return {
-            "error": f"timeout after {tmo:.0f}s; output tail: "
-            + ((err_s or out_s or "")[-1500:]),
-        }
-    except BaseException:
-        # an interrupt mid-run must not strand the JVM either
-        _bi._killpg(proc)
-        raise
-    finally:
-        if proc.returncode is None:
-            _bi._killpg(proc)
-    if proc.returncode != 0:
-        return {"error": (err_s or out_s or "no output")[-2000:]}
-    parsed, _ = _bi.parse_result_line(out_s or "")
-    if parsed is not None:
-        return parsed
-    return {"error": "no result line in stdout: " + (out_s or "")[-500:]}
 
 
 def _registry_names(root: str) -> set[str] | None:
@@ -192,26 +124,15 @@ def _pooled_median(runs: list[dict]) -> float | None:
 
 def main() -> None:
     args = list(sys.argv[1:])
-
-    def _opt(flag: str, default: str | None) -> str | None:
-        if flag in args:
-            i = args.index(flag)
-            if i + 1 >= len(args):
-                sys.exit(f"{flag} requires a value")
-            v = args[i + 1]
-            del args[i : i + 2]
-            return v
-        return default
-
-    queries_s = _opt("--queries", None)
-    reps_s = _opt("--reps", "3")
+    queries_s = _bi.take_opt(args, "--queries", None)
+    reps_s = _bi.take_opt(args, "--reps", "3")
     # abspath: the children run with cwd=<side root>, so a relative
     # sf_dir would resolve against EACH side's own tree — the two
     # sides timing different datasets (review r18 pass 1)
-    sf_dir = os.path.abspath(_opt("--sf-dir", os.environ.get(
+    sf_dir = os.path.abspath(_bi.take_opt(args, "--sf-dir", os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")))
-    out = _opt("--out", "BENCH_AB.json")
-    if len(args) != 2 or not queries_s:
+    out = _bi.take_opt(args, "--out", "BENCH_AB.json")
+    if len(args) != 2 or queries_s is None:
         sys.exit(__doc__ or "usage: bench_ab.py OLD NEW --queries a,b")
     old_root, new_root = (os.path.abspath(a) for a in args)
     for r in (old_root, new_root):
@@ -223,11 +144,7 @@ def main() -> None:
         sys.exit(f"non-integer reps: {reps_s!r}")
     if reps < 1:
         sys.exit(f"reps must be >= 1, got {reps}")
-    queries = [q.strip() for q in queries_s.split(",") if q.strip()]
-    if not queries:
-        # an empty ladder would write a row-less artifact that reads
-        # as a completed experiment (review r18 pass 1)
-        sys.exit(f"--queries parsed to an empty list: {queries_s!r}")
+    queries = _bi.query_list(queries_s)
     tmo = _bi.query_timeout(reps)
     _bi.probe_out_writable(out)
     # refuse typo'd names BEFORE any multi-minute ladder runs — a
@@ -245,7 +162,7 @@ def main() -> None:
         if unknown:
             sys.exit(f"unknown queries in {label} tree {root}: {unknown}")
 
-    probes: list[dict | None] = [_probe()]
+    probes: list[dict | None] = [bench.host_condition()]
     t_start = time.monotonic()
     results: dict[str, dict] = {}
     for q in queries:
@@ -255,7 +172,7 @@ def main() -> None:
         for side in ("old", "new", "new", "old"):
             root = old_root if side == "old" else new_root
             print(f"# {q} [{side}] ...", file=sys.stderr, flush=True)
-            res = _run_side(root, q, reps, sf_dir, tmo)
+            res = _bi.run_child(root, q, reps, sf_dir, tmo)
             runs[side].append(res)
             tag = res.get("warm_median", res.get("error", "?"))
             print(f"# {q} [{side}] -> {tag}", file=sys.stderr, flush=True)
@@ -326,12 +243,12 @@ def main() -> None:
         if partial:
             row["stage_partial"] = partial
         results[q] = row
-        probes.append(_probe())
+        probes.append(bench.host_condition())
 
     ok_all = True
     verdicts = []
     for i, p in enumerate(probes):
-        ok, why = _weather_ok(p)
+        ok, why = bench._weather_verdict(p)
         ok_all = ok_all and ok
         verdicts.append({"probe": i, "ok": ok, "reasons": why})
     doc = {

@@ -27,9 +27,9 @@ only scheduling and gating, never timing.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -39,99 +39,12 @@ for p in (_TOOLS, _REPO):
     if p not in sys.path:
         sys.path.insert(0, p)
 
-import bench_isolated as _bi  # noqa: E402 — child contract helpers
+import bench  # noqa: E402 — host probe, weather verdict and window wait
+import bench_isolated as _bi  # noqa: E402 — child runner and CLI helpers
 from bench_trend import STAGE_FLOOR, full_coverage_ratio  # noqa: E402
 
 
-def _probe() -> dict | None:
-    try:
-        import host_probe
-
-        return host_probe.probe()
-    except Exception as e:  # noqa: BLE001 — diagnostics never kill the run
-        print(f"# host probe unavailable: {e!r}", file=sys.stderr)
-        return None
-
-
-def _weather_ok(p: dict | None) -> tuple[bool, list[str]]:
-    try:
-        import host_probe
-
-        return host_probe.weather_ok(p)
-    except Exception as e:  # noqa: BLE001
-        return False, [f"weather unmeasurable: {e!r}"]
-
-
-def _wait_for_window(tries: int, wait_s: float) -> tuple[dict | None, bool]:
-    """Poll until the envelope opens; returns (last probe, opened). A
-    probe/judge failure twice in a row bails (host_probe absent on this
-    box — polling cannot fix that; bench.py's wait loop contract)."""
-    absent = 0
-    for i in range(tries):
-        p = _probe()
-        ok, why = _weather_ok(p)
-        if ok:
-            return p, True
-        if p is None:
-            absent += 1
-            if absent >= 2:
-                return p, False
-        else:
-            absent = 0
-        print(
-            f"# window wait {i + 1}/{tries}: {why}",
-            file=sys.stderr,
-            flush=True,
-        )
-        if i < tries - 1:
-            time.sleep(wait_s)
-    return None, False
-
-
-def _run_child(query: str, reps: int, sf_dir: str, tmo: float | None) -> dict:
-    cmd = [
-        sys.executable,
-        os.path.join(_TOOLS, "bench_isolated.py"),
-        query,
-        str(reps),
-        sf_dir,
-    ]
-    proc = subprocess.Popen(
-        cmd,
-        cwd=_REPO,
-        stdout=subprocess.PIPE,
-        stderr=subprocess.PIPE,
-        text=True,
-        start_new_session=True,
-    )
-    try:
-        out_s, err_s = proc.communicate(timeout=tmo)
-    except subprocess.TimeoutExpired:
-        _bi._killpg(proc)
-        out_s, err_s = proc.communicate()
-        return {"error": f"timeout after {tmo:.0f}s"}
-    except BaseException:
-        _bi._killpg(proc)
-        raise
-    finally:
-        if proc.returncode is None:
-            _bi._killpg(proc)
-    if proc.returncode != 0:
-        return {"error": (err_s or out_s or "no output")[-2000:]}
-    parsed, _ = _bi.parse_result_line(out_s or "")
-    return parsed if parsed is not None else {
-        "error": "no result line: " + (out_s or "")[-500:]
-    }
-
-
-def run_series(
-    queries: list[str],
-    reps: int,
-    sf_dir: str,
-    max_tries: int,
-    poll_tries: int,
-    poll_wait: float,
-) -> dict:
+def run_series(queries: list[str], reps: int, sf_dir: str, max_tries: int) -> dict:
     """The gating loop, separated from the CLI so the acceptance
     predicate (both bracketing probes clean AND in-run stage floor
     above STAGE_FLOOR, rejected attempts logged not dropped) is
@@ -143,16 +56,23 @@ def run_series(
         attempts: list[dict] = []
         accepted: dict | None = None
         for t in range(max_tries):
-            p_before, opened = _wait_for_window(poll_tries, poll_wait)
-            if not opened:
-                attempts.append(
-                    {"try": t + 1, "verdict": "no window opened in poll budget"}
-                )
+            # healthy windows on this host are minute-scale: poll
+            # briskly (60 x 20 s unless $SPARK_GRAFT_WEATHER_* say
+            # otherwise) so an open window is caught near its start
+            p_before, wait_log = bench.wait_for_healthy_window(60, 20.0)
+            if not wait_log[-1]["ok"]:
+                # the last poll's reasons say WHY: weather that never
+                # cleared vs a probe that is absent on this box
+                attempts.append({
+                    "try": t + 1,
+                    "verdict": "no window opened in poll budget: "
+                    + "; ".join(wait_log[-1]["reasons"]),
+                })
                 continue
             print(f"# {q} try {t + 1} ...", file=sys.stderr, flush=True)
-            res = _run_child(q, reps, sf_dir, tmo)
-            p_after = _probe()
-            ok_after, why_after = _weather_ok(p_after)
+            res = _bi.run_child(_REPO, q, reps, sf_dir, tmo)
+            p_after = bench.host_condition()
+            ok_after, why_after = bench._weather_verdict(p_after)
             if "error" in res:
                 attempts.append(
                     {"try": t + 1, "verdict": f"child failed: {res['error'][:300]}"}
@@ -230,17 +150,7 @@ def run_series(
 
 def main() -> None:
     args = list(sys.argv[1:])
-
-    def _opt(flag: str, default: str | None) -> str | None:
-        if flag in args:
-            i = args.index(flag)
-            if i + 1 >= len(args):
-                sys.exit(f"{flag} requires a value")
-            v = args[i + 1]
-            del args[i : i + 2]
-            return v
-        return default
-
+    _opt = functools.partial(_bi.take_opt, args)
     try:
         reps = int(_opt("--reps", "3"))
         max_tries = int(_opt("--max-tries", "6"))
@@ -257,21 +167,12 @@ def main() -> None:
         sys.exit(f"reps must be >= 1, got {reps}")
     if max_tries < 1:
         sys.exit(f"max-tries must be >= 1, got {max_tries}")
+    queries = (
+        list(bench.HEADLINE) if queries_s is None else _bi.query_list(queries_s)
+    )
     _bi.probe_out_writable(out)
-    if queries_s:
-        queries = [q.strip() for q in queries_s.split(",") if q.strip()]
-    else:
-        import bench
 
-        queries = list(bench.HEADLINE)
-    if not queries:
-        sys.exit("empty query list")
-    # healthy windows on this host are minute-scale: poll briskly so an
-    # open window is caught near its start, not its end
-    poll_tries = int(os.environ.get("SPARK_GRAFT_WEATHER_TRIES", "60"))
-    poll_wait = float(os.environ.get("SPARK_GRAFT_WEATHER_WAIT_S", "20"))
-
-    doc = run_series(queries, reps, sf_dir, max_tries, poll_tries, poll_wait)
+    doc = run_series(queries, reps, sf_dir, max_tries)
     with open(out, "w") as f:
         json.dump(doc, f, indent=1)
         f.write("\n")

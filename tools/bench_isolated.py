@@ -27,7 +27,6 @@ import os
 import signal
 import subprocess
 import sys
-import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
@@ -51,31 +50,14 @@ def _run_one(name: str, reps: int, sf_dir: str) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).count()
 
-    runs = []
-    w0 = time.time()
-    for _ in range(1 + reps):
-        t0 = time.monotonic()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(round(time.monotonic() - t0, 3))
-    w1 = time.time()
-    warm = runs[1:]
-    # in-run stage channel for THIS query's own app (r18): the
-    # isolated series was the one bench family with no stage-level
-    # weather — the gate's documented blind spot. Same recipe as
-    # bench.py: one post-run REST fetch after a short settle, bucketed
-    # to the timed window so the warm-up scan falls outside it. Zero
-    # in-run load (the fetch happens after the last timed rep).
-    time.sleep(0.5)
-    stage_weather = bench.stage_bucket(
-        bench._stage_metrics(spark), {name: (w0, w1)}
-    )[name]
+    # the same timing loop and job-group stage channel as bench.py: the
+    # warm-up scan above is unlabelled, so it is billed to no query
+    res = bench.run_query(spark, name, fn, sf_dir, reps)
     return {
         "query": name,
         "sf_dir": sf_dir,
-        "cold": runs[0],
-        "warm": warm,
-        "warm_median": sorted(warm)[len(warm) // 2],
-        "stage_weather": stage_weather,
+        **res,
+        "stage_weather": bench.query_stage_weather(spark, [name])[name],
     }
 
 
@@ -200,6 +182,78 @@ def probe_out_writable(out: str) -> None:
         raise SystemExit(f"--out path {out!r} is not writable: {e}")
 
 
+def run_child(
+    root: str, query: str, reps: int, sf_dir: str, tmo: float | None
+) -> dict:
+    """One fresh-process single-query run of `root`'s own
+    tools/bench_isolated.py CLI — the one child runner behind --suite,
+    tools/bench_ab.py (which ladders each side's own tree) and
+    tools/bench_gated_series.py. A fresh PROCESS is a new JVM, codegen
+    cache and GC state: the strongest isolation this host offers.
+    Returns the parsed result (parse_result_line) or {"error": ...}.
+
+    On timeout the whole process GROUP is killed — proc.kill() reaches
+    only the Python child, and a JVM wedged in a GC death spiral may
+    never notice its stdin watchdog, contaminating every later timing —
+    and the error carries the child's output tail so the hang is
+    diagnosable. start_new_session detaches the child from the
+    terminal's SIGINT, so any other abnormal exit (Ctrl-C, MemoryError)
+    kills the group too."""
+    proc = subprocess.Popen(
+        [sys.executable, os.path.join(root, "tools", "bench_isolated.py"),
+         query, str(reps), sf_dir],
+        cwd=root,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.PIPE,
+        text=True,
+        start_new_session=True,
+    )
+    try:
+        out_s, err_s = proc.communicate(timeout=tmo)
+    except subprocess.TimeoutExpired:
+        _killpg(proc)
+        out_s, err_s = proc.communicate()
+        return {
+            "error": f"timeout after {tmo:.0f}s; output tail: "
+            + ((err_s or out_s or "")[-1500:]),
+        }
+    finally:
+        if proc.returncode is None:
+            _killpg(proc)
+    if proc.returncode != 0:
+        return {"error": (err_s or out_s or "no output")[-2000:]}
+    parsed, _ = parse_result_line(out_s or "")
+    if parsed is not None:
+        return parsed
+    return {"error": "no result line in stdout: " + (out_s or "")[-500:]}
+
+
+def take_opt(args: list[str], flag: str, default: str | None) -> str | None:
+    """Remove `flag VALUE` from `args` and return VALUE, or `default`
+    when the flag is absent; exits when the value is missing."""
+    if flag not in args:
+        return default
+    i = args.index(flag)
+    if i + 1 >= len(args):
+        sys.exit(f"{flag} requires a value")
+    v = args[i + 1]
+    del args[i : i + 2]
+    return v
+
+
+def query_list(spec: str) -> list[str]:
+    """The --queries value split on commas. Exits on an empty list (an
+    artifact with no rows reads as a completed experiment) and on a
+    repeated name (its runs would silently merge into one row)."""
+    queries = [q.strip() for q in spec.split(",") if q.strip()]
+    if not queries:
+        sys.exit(f"--queries parsed to an empty list: {spec!r}")
+    dups = sorted({q for q in queries if queries.count(q) > 1})
+    if dups:
+        sys.exit(f"--queries names a query more than once: {dups}")
+    return queries
+
+
 def _run_suite(reps: int, sf_dir: str, out: str) -> None:
     # the headline list lives in bench.py — one source of truth, so the
     # isolated artifact stays 1:1 comparable with the driver's BENCH_rNN
@@ -208,81 +262,22 @@ def _run_suite(reps: int, sf_dir: str, out: str) -> None:
     results: dict[str, dict] = {}
     tmo = query_timeout(reps)
 
-    # weather bracketing the suite (r15): this series exists to arbitrate
-    # shared-session drift, but the host itself oscillates between
-    # healthy, page-fault-stalled, and steal-capped regimes on minute
-    # timescales (17 s <-> 30 s identical-code totals), and the isolated
-    # series — a fresh fault-heavy JVM per query — is MORE weather-
-    # sensitive than one warm shared session. Carrying the probe in the
-    # artifact is what lets a later reader split code from climate.
-    # AFTER the timeout validation: refusals stay validate-then-measure
-    # (review r15) — a malformed env var must not cost a saturation burst.
+    # weather bracketing the suite (r15): the host oscillates between
+    # healthy, page-fault-stalled and steal-capped regimes on minute
+    # timescales, and a fresh fault-heavy JVM per query is MORE weather-
+    # sensitive than one warm shared session; the probe in the artifact
+    # lets a later reader split code from climate. AFTER the timeout
+    # validation, so a malformed env var costs no saturation burst.
     host_before = bench.host_condition()
 
     for name in bench.HEADLINE:
-        # one fresh PROCESS per query: a new JVM, new codegen cache, new
-        # GC state — the strongest isolation this host offers. The
-        # per-query timeout keeps one hung/GC-thrashing child (the very
-        # pathology this arbiter diagnoses) from losing the other
-        # queries' results (review r13): a timeout lands in the error
-        # map WITH the child's output tail, and the whole process GROUP
-        # is killed — proc.kill() alone reaches only the Python child,
-        # and a JVM wedged in a GC death spiral may never notice its
-        # stdin watchdog, contaminating every later "isolated" timing
-        proc = subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), name, str(reps), sf_dir],
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-            cwd=_REPO,
-            start_new_session=True,
-        )
-        timed_out = False
-        try:
-            try:
-                out_s, err_s = proc.communicate(timeout=tmo)
-            except subprocess.TimeoutExpired:
-                timed_out = True
-                _killpg(proc)
-                out_s, err_s = proc.communicate()
-        finally:
-            # start_new_session detaches the child from the terminal's
-            # SIGINT, and a bare Popen has no run()-style cleanup — on
-            # ANY abnormal exit from communicate (Ctrl-C, MemoryError)
-            # the whole tree must die with us, or the orphaned JVM
-            # contaminates the next run's "isolated" timings
-            # (review r13 pass 5)
-            if proc.returncode is None:
-                _killpg(proc)
-        if timed_out:
-            results[name] = {
-                "query": name,
-                "error": f"timeout after {tmo:.0f}s; output tail: "
-                + ((err_s or out_s or "")[-1500:]),
-            }
-            print(f"# {name}: FAILED (timeout {tmo:.0f}s)", file=sys.stderr)
-            continue
-        # a result is ONLY a zero-exit dict passing parse_result_line
-        # (the shared acceptance predicate — see its docstring for the
-        # reverse-scan and numeric-projection rationale)
-        parsed = None
-        line = ""
-        if proc.returncode == 0:
-            parsed, line = parse_result_line(out_s)
-        if parsed is not None:
-            results[name] = parsed
-            print(line, file=sys.stderr)
+        # a timeout or failure lands in the error map, so one hung child
+        # cannot lose the other queries' results (review r13)
+        results[name] = res = run_child(_REPO, name, reps, sf_dir, tmo)
+        if "error" in res:
+            print(f"# {name}: FAILED: {res['error'][:200]}", file=sys.stderr)
         else:
-            lines = out_s.strip().splitlines() if out_s.strip() else []
-            tail = lines[-1] if lines else ""
-            results[name] = {
-                "query": name,
-                "error": (err_s or tail or "no output")[-2000:],
-            }
-            # the progress stream must agree with the classification: a
-            # nonzero-exit query can still have printed a plausible JSON
-            # line (review r13)
-            print(f"# {name}: FAILED (exit {proc.returncode})", file=sys.stderr)
+            print(json.dumps(res), file=sys.stderr)
     ok = {n: r for n, r in results.items() if "warm_median" in r}
     errors = sorted(set(results) - set(ok))
     doc = {
