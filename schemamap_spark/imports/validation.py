@@ -48,7 +48,7 @@ def _rule_violation_flags(df: DataFrame, rule: ColumnRule) -> list[tuple[str, F.
     return out
 
 
-def validate(df: DataFrame, rules: list[ColumnRule], key_cols: list[str] | None = None) -> DataFrame:
+def validate(df: DataFrame, rules: list[ColumnRule]) -> DataFrame:
     """Returns df + `violations array<string>` (empty array = clean row)."""
     flags: list[F.Column] = []
     for rule in rules:

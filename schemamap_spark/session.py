@@ -2,8 +2,17 @@
 
 Everything in the engine goes through `get_spark()` / `load_table()` so that
 session-level settings that affect correctness (UTC session timezone for
-naive-parquet timestamps) and scale (AQE, shuffle partitions) are applied
+naive-parquet timestamps) and scale (AQE, shuffle widths) are applied
 uniformly.
+
+Two shuffle widths, set apart because they cost differently:
+- batch exchanges start at `spark.sql.adaptive.coalescePartitions.
+  initialPartitionNum` (`batch_shuffle_partitions()`), and AQE coalesces
+  them down at runtime;
+- stateful streaming operators run without AQE, one state-store task per
+  `spark.sql.shuffle.partitions` partition. That width is the core count,
+  so a micro-batch is one wave of tasks. Spark records it in each new
+  checkpoint and restores it from there on resume.
 """
 
 from __future__ import annotations
@@ -34,8 +43,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_configs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build the engine's SparkSession. `extra_configs` lets deployments
-    inject site config — e.g. `{"spark.jars.packages":
+    """Build the engine's SparkSession on `local[$SPARK_GRAFT_CPUS]`.
+
+    `shuffle_partitions` (default 32) is the batch shuffle width: AQE starts
+    every batch exchange there. Streaming state width is the core count
+    (module docstring). `extra_configs` lets deployments inject site
+    config — e.g. `{"spark.jars.packages":
     "org.postgresql:postgresql:42.7.4"}` to enable the JDBC catalog adapter's
     wire transport (no driver jar or network in this container; see
     COVERAGE.md 'Declared out of scope')."""
@@ -47,7 +60,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
+        # batch exchanges start at this width; AQE coalesces them down
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions or 32),
+        )
+        # streaming runs without AQE: one state-store task per core
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for any pandas_udf / mapInPandas path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -56,6 +75,14 @@ def get_spark(
     for k, v in (extra_configs or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def batch_shuffle_partitions(spark: SparkSession) -> int:
+    """The width batch exchanges start at: AQE's initial partition number,
+    or `spark.sql.shuffle.partitions` on a session that does not set it."""
+    conf = spark.conf
+    width = conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+    return int(width or conf.get("spark.sql.shuffle.partitions"))
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
@@ -81,7 +108,9 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     Width is judged from the scan's file list (metadata only) — not
     df.rdd.getNumPartitions(), which forces an RDD conversion/analysis on
     every call. Plans with no identifiable input files (already shuffled /
-    in-memory) are left alone: they carry spark.sql.shuffle.partitions."""
+    in-memory) are left alone: a shuffled plan starts at the batch shuffle
+    width (`batch_shuffle_partitions`), and an in-memory one keeps its own
+    partitioning."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     files = df.inputFiles()
     if files and len(files) < parallelism:

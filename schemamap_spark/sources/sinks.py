@@ -21,6 +21,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from schemamap_spark.session import batch_shuffle_partitions
 from schemamap_spark.sources import fscommit
 
 _IDENT_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_.]*$")
@@ -83,11 +84,12 @@ def write_range_sorted(
     pushed filter, and the footer test asserts the disjointness.
 
     repartitionByRange samples keys to pick balanced boundaries (no hot
-    file); num_files defaults to spark.sql.shuffle.partitions."""
+    file); num_files defaults to the batch shuffle width
+    (`session.batch_shuffle_partitions`)."""
     if not sort_cols:
         raise ValueError("sort_cols must be non-empty")
     spark = df.sparkSession
-    n = num_files or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = num_files or batch_shuffle_partitions(spark)
     out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
     # same atomic temp-dir swap as write_parquet_atomic: readers never see a
     # half-written layout
@@ -210,7 +212,7 @@ def write_zordered(
     files in both dimensions instead of only the leading sort key's
     (asserted against the real footers in test_scale_ops)."""
     spark = df.sparkSession
-    n = num_files or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = num_files or batch_shuffle_partitions(spark)
     keyed, key = zorder_column(df, zorder_cols, bits, binning)
     out = keyed.repartitionByRange(n, key).sortWithinPartitions(key).drop(key)
     fs, tmp = _stage(target_dir, spark)
@@ -290,7 +292,7 @@ def write_point_lookup_optimized(
     out = df
     if sort_cols:
         spark = df.sparkSession
-        n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        n = batch_shuffle_partitions(spark)
         out = df.repartitionByRange(n, *sort_cols).sortWithinPartitions(*sort_cols)
     writer = out.write.mode("overwrite")
     for c in bloom_cols:

@@ -9,7 +9,13 @@ streaming unchanged.
 
 Scale notes: file-source streams scale by directory listing + maxFilesPerTrigger;
 state-store size is bounded by the watermark horizon; output modes chosen so
-late data within the watermark corrects previously-emitted windows.
+late data within the watermark corrects previously-emitted windows. State
+width (one state-store task per partition) is `spark.sql.shuffle.partitions`,
+which `get_spark` sets to the core count, so a stateful micro-batch runs as
+one wave. Streaming runs without AQE, so nothing coalesces that width at
+runtime. It is fixed per checkpoint: Spark records it in the offset log when
+a query first starts and restores it on every resume, so a checkpoint written
+under another width keeps that width.
 """
 
 from __future__ import annotations

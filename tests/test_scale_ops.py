@@ -166,6 +166,18 @@ def test_range_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
     assert got == want
 
 
+def test_range_sorted_write_defaults_to_batch_shuffle_width(spark, tmp_path):
+    """Without num_files, write_range_sorted writes one range partition per
+    batch shuffle partition (8 on the test session), not one per core."""
+    import os
+
+    from schemamap_spark.sources.sinks import write_range_sorted
+
+    target = str(tmp_path / "ids_sorted")
+    write_range_sorted(spark.range(10_000), target, ["id"])
+    assert len([f for f in os.listdir(target) if f.endswith(".parquet")]) == 8
+
+
 def test_zorder_column_is_morton_interleaving(spark):
     """bits=2 over two 0..3 columns: min/max scaling is the identity, so the
     key must equal the hand-computed Morton code (x bits at even positions,

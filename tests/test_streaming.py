@@ -3,11 +3,13 @@
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from schemamap_spark.plans.dryrun import explain_str
 from schemamap_spark.session import load_table
 from schemamap_spark.streaming import (
     sessionized,
@@ -29,6 +31,9 @@ def stream_dir(spark, tmp_path_factory):
 
 
 def test_windowed_counts_matches_batch(spark, stream_dir):
+    """The stream equals its batch twin, and runs one state-store partition
+    per core, while a batch aggregate on the same session keeps the batch
+    shuffle width (8 on the test session)."""
     stream = stream_events_from_directory(spark, stream_dir)
     assert stream.isStreaming
     # complete mode: append would hold back trailing windows still inside the
@@ -36,21 +41,70 @@ def test_windowed_counts_matches_batch(spark, stream_dir):
     q = start_memory_sink(windowed_counts(stream), "win_counts", output_mode="complete")
     q.processAllAvailable()
     q.stop()
+    assert _state_widths(q.recentProgress) == {int(os.environ.get("SPARK_GRAFT_CPUS", "32"))}
 
-    got = {
-        (r.window_start, r.event_type): (r.n, r.total_cents)
-        for r in spark.table("win_counts").collect()
-    }
     ev = spark.read.parquet(stream_dir)
-    want = {
-        (r.ws, r.event_type): (r.n, r.total_cents)
-        for r in ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+    assert _by_window(spark.table("win_counts")) == _by_window(_batch_window_counts(ev))
+    plan = explain_str(ev.groupBy("event_type").count(), mode="simple")
+    assert re.search(r"Exchange hashpartitioning\(event_type#\d+, 8\)", plan), plan
+
+
+def _batch_window_counts(ev):
+    """The batch twin of windowed_counts, written independently of it."""
+    return (
+        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"),
              F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("total_cents"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "total_cents")
-        .collect()
-    }
-    assert got == want
+        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_cents")
+    )
+
+
+def _by_window(df):
+    return {(r.window_start, r.event_type): (r.n, r.total_cents) for r in df.collect()}
+
+
+def _state_widths(progress):
+    return {p["stateOperators"][0]["numShufflePartitions"] for p in progress if p["stateOperators"]}
+
+
+def test_checkpoint_keeps_its_state_width_on_resume(spark, stream_dir, tmp_path):
+    """A checkpoint started under the old 32-wide default resumes with 32
+    state partitions on the current session, because Spark restores the
+    width from the offset log, and its output still equals the batch twin."""
+    ev = spark.read.parquet(stream_dir)
+    cut = F.lit("2024-01-15").cast("timestamp")
+    src, sink, ckpt = (str(tmp_path / d) for d in ("in", "sink", "ckpt"))
+    ev.filter(F.col("ts") < cut).write.parquet(src)
+
+    def run():
+        q = (
+            windowed_counts(stream_events_from_directory(spark, src))
+            .writeStream.format("parquet")
+            .option("checkpointLocation", ckpt)
+            .option("path", sink)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q.recentProgress
+
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        first = run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    # later events only: nothing in the new file is behind the watermark
+    ev.filter(F.col("ts") >= cut).write.mode("append").parquet(src)
+    resumed = run()
+    assert _state_widths(first) == _state_widths(resumed) == {32}
+
+    emitted = (F.col("window_start") + F.expr("interval 1 hour")) <= F.to_timestamp(
+        F.lit(resumed[-1]["eventTime"]["watermark"])
+    )
+    got = _by_window(spark.read.parquet(sink))
+    assert got == _by_window(_batch_window_counts(ev).filter(emitted)) and got
 
 
 def test_sessionized_stream_runs(spark, stream_dir):
