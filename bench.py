@@ -4,21 +4,27 @@ on local[$SPARK_GRAFT_CPUS]. Prints exactly ONE compact JSON line on stdout:
  "value_cold": ..., "weather_ok": bool, "detail": sidecar_path}
 
 THE STDOUT CONTRACT (VERDICT r16 #1): the driver keeps only the last
-~2000 bytes of stdout and parses the JSON it finds there. r16's fat
-record (per-query warm run lists + two host probes) grew past that
-window and the round's official artifact came back `parsed: null`. So
-the final line is now a COMPACT record pinned under FINAL_LINE_BUDGET
-bytes by tests/test_bench_tools.py, and everything bulky — warm run
-lists, cold timings, host probes, the healthy-window wait log — goes to
-a SIDECAR json file (default BENCH_DETAIL.json next to this script,
-override with $SPARK_GRAFT_BENCH_DETAIL). tools/bench_trend.py reads
-the sidecar shape (it carries every key the old fat stdout line did).
+~2000 bytes of stdout and parses the JSON it finds there, so the final
+line is a COMPACT record pinned under FINAL_LINE_BUDGET bytes by
+tests/test_bench_tools.py, and everything bulky — warm run lists, cold
+timings, per-query stage rollups — goes to a SIDECAR json file (default
+BENCH_DETAIL.json next to this script, override with
+$SPARK_GRAFT_BENCH_DETAIL).
 
 Each query runs through run_query under the job group `bench:<query>`;
 the sidecar's per-query stage rollups (`queries_stage_weather`) bill
 every stage to the group of the job that submitted it, so warm-up
 stages belong to no query. tools/bench_isolated.py times its single
 query through the same run_query.
+
+`weather_ok` comes from that in-run stage channel: it is true only when
+every headline query has a rollup whose executor CPU-over-run ratio is
+at least STAGE_FLOOR, and the sidecar's `weather` key names each query
+that is below the floor or has no rollup. The run measures whenever it
+is started, with no pre-run wait:
+$SPARK_GRAFT_WEATHER_TRIES / $SPARK_GRAFT_WEATHER_WAIT_S are ignored.
+Comparisons between two code trees go through tools/ab.py (alternating
+pairs), not through one run's absolute timings.
 
 Query set = the operator classes that dominate real workloads: scan+filter,
 shuffled join/agg, top-k, set-agg, status (catalog analytics end-to-end),
@@ -28,7 +34,6 @@ dedup (minhash LSH), ANN top-k, text analysis, event windowing.
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -62,6 +67,13 @@ HEADLINE = [
 # for the trailing newline and any stdout the JVM sneaks in after us
 FINAL_LINE_BUDGET = 1500
 
+# executor cpu_over_run below this marks a query that ran in a collapsed
+# window (threads descheduled or page-fault-stalled while the task clock
+# runs). Calibrated on shared-session runs: clean windows floored at
+# 0.50-0.63 on 32 cores, a mid-run collapse read 0.15, and a healthy
+# sf0.1 run on 4 cores read 0.54-0.99 across the headline queries.
+STAGE_FLOOR = 0.3
+
 
 def headline_registry() -> dict:
     """Name → query callable for every HEADLINE entry — the ONE merge
@@ -87,41 +99,6 @@ def headline_registry() -> dict:
         "bm25": EXTRA_SPARK_QUERIES["bm25"],
         "hybrid_rerank": EXTRA_SPARK_QUERIES["hybrid_rerank"],
     }
-
-
-def _host_probe_mod():
-    tools = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-    if tools not in sys.path:
-        sys.path.insert(0, tools)
-    import host_probe
-
-    return host_probe
-
-
-def host_condition() -> dict | None:
-    """tools/host_probe.py output, or None — best-effort by contract: a
-    probe failure must never fail (or delay past ~10 s) a bench run. The
-    r15 finding that motivates carrying it in every artifact: the host
-    oscillates between healthy, ~40x page-fault-stalled, and
-    steal-capped regimes on MINUTE timescales with all container-side
-    load signals green, moving identical-code suite totals 17 s <-> 30 s;
-    timings without the weather beside them cannot be arbitrated later."""
-    try:
-        return _host_probe_mod().probe(size_mb=64)  # ~1 s healthy, bounded
-    except Exception as e:  # noqa: BLE001 — diagnostics must not kill the bench
-        print(f"# host probe failed: {e!r}", file=sys.stderr)
-        return None
-
-
-def _weather_verdict(host: dict | None) -> tuple[bool, list[str]]:
-    """host_probe.weather_ok with the same best-effort contract as the
-    probe itself: if the envelope judge can't load, the verdict is
-    (False, [reason]) — an artifact that can't prove its weather doesn't
-    get the benefit of the doubt, but the bench still runs."""
-    try:
-        return _host_probe_mod().weather_ok(host)
-    except Exception as e:  # noqa: BLE001
-        return False, [f"weather judge unavailable: {e!r}"]
 
 
 def run_query(spark, name: str, fn, sf_dir: str, reps: int = 3) -> dict:
@@ -152,13 +129,12 @@ def run_query(spark, name: str, fn, sf_dir: str, reps: int = 3) -> dict:
 
 
 def query_stage_weather(spark, names) -> dict[str, dict | None]:
-    """Per-query executor CPU-vs-wall rollups — the IN-RUN weather
-    channel the bracketing host probes cannot provide (they sample
-    seconds at the run's edges). `executorRunTime` is task wall ms and
-    `executorCpuTime` CPU ns; their ratio collapses under the steal and
-    page-fault regimes while the task clock runs, and is
-    width-independent. bench_trend --weather --gate fails an artifact
-    whose floor sits below STAGE_FLOOR.
+    """Per-query executor CPU-vs-wall rollups — the in-run weather
+    channel behind `weather_ok` (stage_weather_verdict). `executorRunTime`
+    is task wall ms and `executorCpuTime` CPU ns; their ratio collapses
+    under the steal and page-fault regimes while the task clock runs,
+    and is width-independent, so a query whose ratio sits below
+    STAGE_FLOOR ran in a collapsed window.
 
     Attribution is by label, not clock: the REST `/jobs` rows of group
     `bench:<name>` (run_query sets it; broadcast and subquery jobs
@@ -167,8 +143,8 @@ def query_stage_weather(spark, names) -> dict[str, dict | None]:
     (a retry is new work). Unlabelled warm-up stages belong to no query.
     One fetch after the last query, once the listener bus has drained,
     so the channel adds no load between timed queries. Best-effort like
-    host_condition: None per query on any REST failure; None also for a
-    query with no stages or zero run time."""
+    the rest of the bench's diagnostics: None per query on any REST
+    failure; None also for a query with no stages or zero run time."""
     try:
         from perfbench.spans import SparkRest, stage_totals
 
@@ -199,94 +175,20 @@ def query_stage_weather(spark, names) -> dict[str, dict | None]:
     return out
 
 
-def _env_number(var: str, default, parse):
-    """$var parsed by `parse`, or `default` with a stderr note naming the
-    variable when it is malformed, non-finite or negative — the weather
-    wait is best-effort and must never kill the run (time.sleep raises
-    on NaN and on negative seconds)."""
-    raw = os.environ.get(var)
-    if raw is None:
-        return default
-    try:
-        v = parse(raw)
-        if math.isfinite(v) and v >= 0:
-            return v
-    except ValueError:
-        pass
-    print(f"# {var}={raw!r} is not a finite number >= 0; using {default}",
-          file=sys.stderr)
-    return default
-
-
-def wait_for_healthy_window(
-    default_tries: int = 10, default_wait_s: float = 75.0
-) -> tuple[dict | None, list[dict]]:
-    """Poll the host probe until a HEALTHY window opens, bounded
-    (VERDICT r16 #3): three of the driver's last four bench artifacts
-    were weather-degraded because the bench ran whenever it was invoked,
-    not when the host was in the envelope. Up to
-    $SPARK_GRAFT_WEATHER_TRIES probes spaced $SPARK_GRAFT_WEATHER_WAIT_S
-    seconds; each caller passes its own defaults (bench.py 10 x 75 s,
-    ~12 min worst case; the gated series 60 x 20 s). Then the caller
-    proceeds anyway with the degraded probe embedded (the artifact then
-    PROVES no healthy window opened rather than silently measuring
-    weather). Returns (last probe, attempt log with each try's reasons).
-    Set TRIES=1 to skip waiting."""
-    tries = max(1, _env_number("SPARK_GRAFT_WEATHER_TRIES", default_tries, int))
-    wait_s = _env_number("SPARK_GRAFT_WEATHER_WAIT_S", default_wait_s, float)
-    attempts: list[dict] = []
-    host = None
-    absent_streak = 0
-    for i in range(tries):
-        host = host_condition()
-        ok, reasons = _weather_verdict(host)
-        attempts.append({"try": i + 1, "ok": ok, "reasons": reasons})
-        if ok:
-            return host, attempts
-        if host is None or (
-            reasons and reasons[0].startswith("weather judge unavailable")
-        ):
-            # the PROBE or the JUDGE failed, not the weather bad.
-            # TWO consecutive failures read as 'absent on this box'
-            # (import failure, no /proc) — polling cannot change that,
-            # and host_condition's contract is 'a probe failure must
-            # never delay a bench run past ~10 s'. ONE failure may be
-            # a transient hiccup (the stall regime can glitch a fork),
-            # so it gets one quick retry, not a full wait slot
-            # (review r17 x2).
-            absent_streak += 1
-            if absent_streak >= 2:
-                print(
-                    f"# weather wait skipped (probe unavailable): "
-                    f"{reasons}",
-                    file=sys.stderr,
-                )
-                return host, attempts
-            if i < tries - 1:  # no retry follows the final try —
-                time.sleep(min(wait_s, 5.0))  # don't sleep for nothing
-            continue
-        absent_streak = 0
-        if reasons and all("unmeasured" in r for r in reasons):
-            # every failing key is UNMEASURABLE (e.g. steal_pct None on
-            # a platform without /proc/stat accounting) — no amount of
-            # polling makes an absent counter appear; bail with the
-            # degraded verdict embedded (review r17: this burned the
-            # full wait budget too). A MIX of unmeasured and measured-
-            # bad keys keeps polling: the measured ones can recover,
-            # and the wait stays bounded regardless.
-            print(
-                f"# weather wait skipped (envelope unmeasurable): "
-                f"{reasons}",
-                file=sys.stderr,
-            )
-            return host, attempts
-        print(
-            f"# weather try {i + 1}/{tries}: outside envelope — {reasons}",
-            file=sys.stderr,
-        )
-        if i < tries - 1:
-            time.sleep(wait_s)
-    return host, attempts
+def stage_weather_verdict(
+    stage_weather: dict[str, dict | None],
+) -> tuple[bool, dict[str, float | None]]:
+    """(weather_ok, below) from query_stage_weather's rollups: ok only
+    when every query has a rollup with cpu_over_run >= STAGE_FLOOR;
+    `below` maps each query that fails that to its ratio, or to None
+    when it has no rollup (a channel that proves nothing is not a
+    healthy window)."""
+    below = {
+        name: sw and sw["cpu_over_run"]
+        for name, sw in stage_weather.items()
+        if sw is None or sw["cpu_over_run"] < STAGE_FLOOR
+    }
+    return not below, below
 
 
 def compact_record(
@@ -365,8 +267,6 @@ def main() -> None:
                      "BENCH_DETAIL.json"),
     )
 
-    host_before, wait_log = wait_for_healthy_window()
-
     from schemamap_spark.session import get_spark
 
     SPARK_QUERIES = headline_registry()
@@ -402,13 +302,10 @@ def main() -> None:
             + (f" ({sw['stages']} stages)" if sw else ""),
             file=sys.stderr,
         )
+    weather_ok, below_floor = stage_weather_verdict(stage_weather)
 
     total = round(sum(timings.values()), 3)
-    # stop the session BEFORE the closing weather probe (ADVICE r15):
-    # host_probe's guidance is "run BESIDE benches, never DURING one" —
-    # an idle local JVM's GC/daemon threads would otherwise share cores
-    # with the saturation burst and skew cpu_parallel_scale/steal.
-    # Best-effort like everything non-measurement here (review r16): a
+    # best-effort like everything non-measurement here (review r16): a
     # py4j socket fault in stop() after a completed multi-minute run
     # must not abort main() before the one JSON line prints
     try:
@@ -416,17 +313,7 @@ def main() -> None:
     except Exception as e:  # noqa: BLE001 — shutdown must not kill results
         print(f"# spark.stop failed (results unaffected): {e!r}",
               file=sys.stderr)
-    host_after = host_condition()
-    # the wait loop's LAST attempt judged exactly the probe it returned —
-    # reuse that verdict instead of re-judging the same dict (review r17)
-    ok_before = bool(wait_log) and wait_log[-1]["ok"]
-    why_before = wait_log[-1]["reasons"] if wait_log else ["no wait log"]
-    ok_after, why_after = _weather_verdict(host_after)
 
-    # the FAT record — everything tools/bench_trend.py's --gate /
-    # --weather / dispersion verdicts consume — goes to the sidecar;
-    # it carries the same keys the pre-r17 stdout line did, plus the
-    # healthy-window wait log and both weather verdicts
     fat = {
         "metric": (
             "headline suite wall time (noop-materialized, median of 3 warm)"
@@ -435,31 +322,17 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "queries_cold": cold,
-        # per-query warm RUN LISTS (not just the median): intra-run
-        # dispersion is the weather signal the bracketing host probes
-        # cannot see — a mid-run stall shows as a 2x spread between warm
-        # runs of the same query seconds apart on identical code, while
-        # healthy-window runs stay under ~1.5x (measured across the
-        # r13-r16 isolated artifacts). tools/bench_trend.py --weather
-        # reads these for its dispersion verdict.
+        # per-query warm RUN LISTS (not just the median): a mid-run stall
+        # shows as a 2x spread between warm runs of the same query
+        # seconds apart on identical code
         "queries_warm": warm_runs,
-        # IN-RUN weather: per-query executor CPU-vs-wall rollups, billed
-        # by job group — the channel that certifies window quality
-        # ACROSS the run, not just at its bracketed edges (see
-        # query_stage_weather)
+        # per-query executor CPU-vs-wall rollups, billed by job group
+        # (see query_stage_weather); `weather` names the queries that
+        # keep weather_ok false
         "queries_stage_weather": stage_weather,
         "value_cold": round(sum(cold.values()), 3),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # weather bracketing the run (see host_condition): the probe runs
-        # before Spark starts and after the last query, so a mid-run
-        # regime flip shows as before/after disagreement
-        "host": host_before,
-        "host_after": host_after,
-        "weather": {
-            "before": {"ok": ok_before, "reasons": why_before},
-            "after": {"ok": ok_after, "reasons": why_after},
-            "wait_log": wait_log,
-        },
+        "weather": {"stage_floor": STAGE_FLOOR, "below_floor": below_floor},
     }
     sidecar_written = True
     try:
@@ -472,7 +345,7 @@ def main() -> None:
         sidecar_written = False
     print(compact_record(
         total, timings, fat["value_cold"], fat["sf"],
-        ok_before and ok_after, detail_path, sidecar_written,
+        weather_ok, detail_path, sidecar_written,
     ))
 
 

@@ -36,7 +36,7 @@ IGNORED_SCHEMAS = (
 
 class CatalogAdapter(abc.ABC):
     # True when relations()/columns() introspect the live catalog EAGERLY
-    # and embed the rows in the returned plan (createDataFrame of listed
+    # and embed the rows in the returned plan (a local relation of listed
     # tables): a memoized plan over such frames snapshots the table set at
     # build time, so plan caches must be skipped (engine.
     # master_data_entity_candidates). Lazy adapters (parquet/JDBC scans)

@@ -28,6 +28,26 @@ CONSTRAINTS_SCHEMA = T.StructType([
     T.StructField("ref_table", T.StringType()),
 ])
 
+RELATIONS_SCHEMA = T.StructType([
+    T.StructField("schema_name", T.StringType()),
+    T.StructField("table_name", T.StringType()),
+    T.StructField("object_type", T.StringType()),
+    T.StructField("description", T.StringType()),
+    T.StructField("has_usage", T.BooleanType()),
+    T.StructField("approx_rows", T.LongType()),
+])
+
+COLUMNS_SCHEMA = T.StructType([
+    T.StructField("schema_name", T.StringType()),
+    T.StructField("table_name", T.StringType()),
+    T.StructField("column_name", T.StringType()),
+    T.StructField("data_type", T.StringType()),
+    T.StructField("not_null", T.BooleanType()),
+    T.StructField("default_value", T.StringType()),
+    T.StructField("column_description", T.StringType()),
+    T.StructField("attnum", T.IntegerType()),
+])
+
 INDEXES_SCHEMA = T.StructType([
     T.StructField("schema_name", T.StringType()),
     T.StructField("table_name", T.StringType()),
@@ -40,9 +60,10 @@ INDEXES_SCHEMA = T.StructType([
 
 
 class SparkNativeCatalog(CatalogAdapter):
-    # relations()/columns() enumerate spark.catalog eagerly into
-    # createDataFrame rows — the returned plan is a snapshot, so engine
-    # plan memos must not cache it (see CatalogAdapter.materializes_snapshots)
+    # relations()/columns() enumerate spark.catalog eagerly into local
+    # rows — the returned plan is a snapshot of the catalog at call time, so
+    # engine plan memos must not cache it (see
+    # CatalogAdapter.materializes_snapshots)
     materializes_snapshots = True
 
     def __init__(self, spark: SparkSession):
@@ -54,24 +75,23 @@ class SparkNativeCatalog(CatalogAdapter):
             for t in self.spark.catalog.listTables(db.name):
                 rows.append((db.name, t.name, "v" if t.tableType == "VIEW" else "r",
                              t.description, True, None))
-        schema = ("schema_name string, table_name string, object_type string, "
-                  "description string, has_usage boolean, approx_rows bigint")
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, RELATIONS_SCHEMA)
 
     def columns(self) -> DataFrame:
         rows = []
         for db in self.spark.catalog.listDatabases():
             for t in self.spark.catalog.listTables(db.name):
-                for i, c in enumerate(self.spark.catalog.listColumns(t.name, db.name), start=1):
+                # a temporary view lives in no database: qualifying its
+                # name with db.name fails the lookup
+                cols = (self.spark.catalog.listColumns(t.name) if t.isTemporary
+                        else self.spark.catalog.listColumns(t.name, db.name))
+                for i, c in enumerate(cols, start=1):
                     rows.append((db.name, t.name, c.name, c.dataType, not c.nullable,
                                  None, c.description, i))
-        schema = ("schema_name string, table_name string, column_name string, "
-                  "data_type string, not_null boolean, default_value string, "
-                  "column_description string, attnum int")
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, COLUMNS_SCHEMA)
 
-    # the two always-empty frames are JVM local relations, so the SMO joins
-    # over them start no Python workers (entities/registry.local_frame)
+    # every frame is a JVM local relation, so the SMO joins over them start
+    # no Python workers (entities/registry.local_frame)
     def constraints(self) -> DataFrame:
         return local_frame(self.spark, [], CONSTRAINTS_SCHEMA)
 

@@ -141,8 +141,8 @@ class SchemamapEngine:
         # expression trees per call only costs driver wall. The memo is
         # only sound for LAZY adapters (parquet/JDBC scans re-read their
         # source on every action); an adapter that materializes catalog
-        # snapshots at plan-build time (SparkNativeCatalog's
-        # createDataFrame of the listed tables) would freeze the table
+        # snapshots at plan-build time (SparkNativeCatalog's local
+        # relation of the listed tables) would freeze the table
         # set forever, so those skip the memo entirely (ADVICE r18).
         # refresh() also clears the memo — it is the user's explicit
         # "re-read the catalog" signal.
