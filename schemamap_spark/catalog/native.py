@@ -59,6 +59,11 @@ INDEXES_SCHEMA = T.StructType([
 ])
 
 
+def _quoted(*parts: str) -> str:
+    """A multipart identifier with each part backquoted."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
+
+
 class SparkNativeCatalog(CatalogAdapter):
     # relations()/columns() enumerate spark.catalog eagerly into local
     # rows — the returned plan is a snapshot of the catalog at call time, so
@@ -69,25 +74,38 @@ class SparkNativeCatalog(CatalogAdapter):
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
+    def _tables(self):
+        """(schema, Table) for each catalog object, temporary views once.
+
+        `listTables(db)` returns the session's temporary views with every
+        database's tables; a temporary view belongs to no database, so it
+        is listed once, under the current one."""
+        catalog = self.spark.catalog
+        current = catalog.currentDatabase()
+        for db in catalog.listDatabases():
+            for t in catalog.listTables(db.name):
+                if not t.isTemporary or db.name == current:
+                    yield db.name, t
+
     def relations(self) -> DataFrame:
-        rows = []
-        for db in self.spark.catalog.listDatabases():
-            for t in self.spark.catalog.listTables(db.name):
-                rows.append((db.name, t.name, "v" if t.tableType == "VIEW" else "r",
-                             t.description, True, None))
+        rows = [
+            (db, t.name, "v" if t.tableType in ("VIEW", "TEMPORARY") else "r",
+             t.description, True, None)
+            for db, t in self._tables()
+        ]
         return local_frame(self.spark, rows, RELATIONS_SCHEMA)
 
     def columns(self) -> DataFrame:
         rows = []
-        for db in self.spark.catalog.listDatabases():
-            for t in self.spark.catalog.listTables(db.name):
-                # a temporary view lives in no database: qualifying its
-                # name with db.name fails the lookup
-                cols = (self.spark.catalog.listColumns(t.name) if t.isTemporary
-                        else self.spark.catalog.listColumns(t.name, db.name))
-                for i, c in enumerate(cols, start=1):
-                    rows.append((db.name, t.name, c.name, c.dataType, not c.nullable,
-                                 None, c.description, i))
+        for db, t in self._tables():
+            # qualifying a temporary view's name with a database fails the
+            # lookup; a table is named `db`.`table` (the dbName argument is
+            # deprecated)
+            name = t.name if t.isTemporary else _quoted(db, t.name)
+            cols = self.spark.catalog.listColumns(name)
+            for i, c in enumerate(cols, start=1):
+                rows.append((db, t.name, c.name, c.dataType, not c.nullable,
+                             None, c.description, i))
         return local_frame(self.spark, rows, COLUMNS_SCHEMA)
 
     # every frame is a JVM local relation, so the SMO joins over them start

@@ -13,6 +13,19 @@ Two shuffle widths, set apart because they cost differently:
   `spark.sql.shuffle.partitions` partition. That width is the core count,
   so a micro-batch is one wave of tasks. Spark records it in each new
   checkpoint and restores it from there on resume.
+
+Streaming checkpoint files (offset, commit and source logs, state deltas,
+the file sink's log) are each published by writing a temp file and renaming
+it into place. When the session's default filesystem is `file:`, `get_spark`
+has Spark publish them through `FileSystemBasedCheckpointFileManager`: an
+`exists` check plus one POSIX rename. Spark's default manager renames through
+Hadoop's FileContext, which on `file:` is also a check-then-rename, but
+without Hadoop's native library each of its link-status checks forks a
+`readlink` process (400 forks per 3-batch stream round). Create-if-absent holds
+as before: both check that the target is absent, then rename (neither is
+atomic on `file:`). A non-local default filesystem, a manager class the
+caller set, and sessions adopted through `configure_session` keep Spark's
+default.
 """
 
 from __future__ import annotations
@@ -37,6 +50,12 @@ TESTDATA_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(
     app_name: str = "schemamap-spark",
@@ -51,7 +70,14 @@ def get_spark(
     config — e.g. `{"spark.jars.packages":
     "org.postgresql:postgresql:42.7.4"}` to enable the JDBC catalog adapter's
     wire transport (no driver jar or network in this container; see
-    COVERAGE.md 'Declared out of scope')."""
+    COVERAGE.md 'Declared out of scope').
+
+    On a `file:` default filesystem, streaming checkpoints are published
+    through Spark's FileSystem checkpoint manager, because Hadoop's local
+    FileContext rename forks `readlink` for every link-status check without
+    Hadoop's native library (`use_local_checkpoint_manager`). A non-local
+    default filesystem or a manager class in `extra_configs` keeps Spark's
+    default, as does a host session adopted with `configure_session`."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -74,7 +100,22 @@ def get_spark(
     )
     for k, v in (extra_configs or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    use_local_checkpoint_manager(spark)
+    return spark
+
+
+def use_local_checkpoint_manager(spark: SparkSession) -> None:
+    """Select Spark's FileSystem checkpoint manager when the default
+    filesystem is `file:` and no manager class is set (module docstring).
+    A non-local default keeps Spark's FileContext manager, whose rename is
+    atomic on HDFS. The key is a runtime SQL conf read when a query starts,
+    so setting it on a running session works."""
+    if spark.conf.get(CHECKPOINT_MANAGER_KEY, None):
+        return
+    hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
+    if hadoop_conf.get("fs.defaultFS", "file:///").startswith("file:"):
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
 
 
 def batch_shuffle_partitions(spark: SparkSession) -> int:

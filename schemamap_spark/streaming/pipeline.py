@@ -16,6 +16,16 @@ one wave. Streaming runs without AQE, so nothing coalesces that width at
 runtime. It is fixed per checkpoint: Spark records it in the offset log when
 a query first starts and restores it on every resume, so a checkpoint written
 under another width keeps that width.
+
+Checkpoint files (offset and commit logs, source and sink logs, state
+deltas) are each written to a temp file and renamed into place. On a `file:`
+default filesystem `get_spark` has Spark do that rename through its
+FileSystem checkpoint manager, an `exists` check plus one rename: Hadoop's
+local FileContext rename, Spark's default, is also check-then-rename but
+forks `readlink` for every link-status check without Hadoop's native
+library. A non-local default filesystem, a caller-set
+`spark.sql.streaming.checkpointFileManagerClass` and sessions adopted
+through `configure_session` keep Spark's default (session.py).
 """
 
 from __future__ import annotations

@@ -158,6 +158,37 @@ def test_candidates_see_native_catalog_changes(spark):
         spark.catalog.dropTempView("_tmp_native_probe")
 
 
+def test_native_catalog_lists_a_temp_view_once_as_a_view(spark):
+    """`listTables(db)` returns the session's temporary views for every
+    database. With two databases, a managed table and a temp view, the temp
+    view is one "v" relation under the current database, and its column is
+    listed once."""
+    from schemamap_spark.catalog import SparkNativeCatalog
+
+    current = spark.catalog.currentDatabase()
+    spark.sql("create database if not exists native_otherdb")
+    spark.sql("create table if not exists native_otherdb.native_tbl as select 1 as id")
+    spark.range(2).toDF("tv_id").createOrReplaceTempView("native_tv")
+    try:
+        native = SparkNativeCatalog(spark)
+        names = ("native_tbl", "native_tv")
+        rels = sorted(
+            (r.schema_name, r.table_name, r.object_type)
+            for r in native.relations().collect() if r.table_name in names
+        )
+        assert rels == sorted([("native_otherdb", "native_tbl", "r"), (current, "native_tv", "v")])
+        cols = sorted(
+            (r.schema_name, r.table_name, r.column_name)
+            for r in native.columns().collect() if r.table_name in names
+        )
+        assert cols == sorted(
+            [("native_otherdb", "native_tbl", "id"), (current, "native_tv", "tv_id")]
+        )
+    finally:
+        spark.catalog.dropTempView("native_tv")
+        spark.sql("drop database if exists native_otherdb cascade")
+
+
 def test_candidates_memo_cleared_by_refresh(engine):
     """For lazy adapters the candidates plan memo is valid across calls
     (same prepared frame) but refresh() — the explicit re-read-the-catalog

@@ -7,10 +7,17 @@ import re
 import shutil
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from schemamap_spark.plans.dryrun import explain_str
-from schemamap_spark.session import load_table
+from schemamap_spark.session import (
+    CHECKPOINT_MANAGER_KEY,
+    FS_CHECKPOINT_MANAGER,
+    configure_session,
+    load_table,
+    use_local_checkpoint_manager,
+)
 from schemamap_spark.streaming import (
     sessionized,
     start_memory_sink,
@@ -105,6 +112,64 @@ def test_checkpoint_keeps_its_state_width_on_resume(spark, stream_dir, tmp_path)
     )
     got = _by_window(spark.read.parquet(sink))
     assert got == _by_window(_batch_window_counts(ev).filter(emitted)) and got
+
+
+def _checkpoint_manager(spark, path: str):
+    """The manager Spark resolves for a checkpoint at `path`, as a query
+    started now on this session would."""
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return managers.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), hadoop_conf)
+
+
+def test_local_checkpoints_commit_by_one_rename_and_stay_create_if_absent(spark, tmp_path):
+    """On the `file:` default filesystem a checkpoint's files go through
+    Spark's FileSystem manager (exists check plus one rename, no `readlink`
+    forks), and a log entry is still created only if absent: a second
+    createAtomic of the same file fails on close and leaves the first
+    file's bytes."""
+    manager = _checkpoint_manager(spark, tmp_path.as_uri())
+    assert manager.getClass().getName() == FS_CHECKPOINT_MANAGER
+
+    entry = spark._jvm.org.apache.hadoop.fs.Path((tmp_path / "0").as_uri())
+    first = manager.createAtomic(entry, False)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = manager.createAtomic(entry, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        second.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+
+def test_checkpoint_manager_rule_keeps_sparks_choice_elsewhere(spark):
+    """A non-local default filesystem, a caller-set manager class and a
+    session adopted through configure_session keep Spark's choice."""
+    hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
+    default_fs = hadoop_conf.get("fs.defaultFS")
+    chosen = spark.conf.get(CHECKPOINT_MANAGER_KEY)
+    caller_set = FS_CHECKPOINT_MANAGER.replace("FileSystemBased", "FileContextBased")
+    try:
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
+        configure_session(spark)
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+
+        hadoop_conf.set("fs.defaultFS", "hdfs://namenode:8020")
+        use_local_checkpoint_manager(spark)
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
+        hadoop_conf.set("fs.defaultFS", default_fs)
+
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, caller_set)
+        use_local_checkpoint_manager(spark)
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == caller_set
+
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
+        use_local_checkpoint_manager(spark)
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == FS_CHECKPOINT_MANAGER
+    finally:
+        hadoop_conf.set("fs.defaultFS", default_fs)
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, chosen)
 
 
 def test_sessionized_stream_runs(spark, stream_dir):

@@ -10,6 +10,11 @@ growing store -> two appends per micro-batch, maxFilesPerTrigger bounding
 batch size so several micro-batches actually execute (state carried via
 the parquet store, not the checkpoint).
 
+It also prints the per-batch medians of the query's triggerExecution,
+walCommit and commitOffsets durations (the latter two are the offset- and
+commit-log writes) and the checkpoint manager class Spark resolves for the
+checkpoint directory (session.use_local_checkpoint_manager).
+
 Run:  python tools/streaming_scale_probe.py [N]
 """
 
@@ -19,6 +24,7 @@ import os
 import shutil
 import sys
 import time
+from statistics import median
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,15 +66,22 @@ def main() -> None:
         .option("maxFilesPerTrigger", 4)
         .parquet(src)
     )
+    ckpt = os.path.join(base_dir, "ckpt")
     t0 = time.monotonic()
     q = incremental_dedup_stream(
         stream,
         fresh_dir=os.path.join(base_dir, "fresh"),
         store_dir=os.path.join(base_dir, "store"),
-        checkpoint_dir=os.path.join(base_dir, "ckpt"),
+        checkpoint_dir=ckpt,
     )
     q.awaitTermination()
     wall = time.monotonic() - t0
+
+    data = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(ckpt), spark._jsparkSession.sessionState().newHadoopConf()
+    )
 
     fresh = spark.read.parquet(os.path.join(base_dir, "fresh")).count()
     store = spark.read.parquet(os.path.join(base_dir, "store")).count()
@@ -79,6 +92,11 @@ def main() -> None:
           f"({N / wall / 1000:.0f}k docs/s through the gate)")
     print(f"fresh rows {fresh:,} (expected {N * 9 // 10:,})   "
           f"store digests {store:,}")
+    print(f"per-batch medians over {len(data)} data batches: " + "  ".join(
+        f"{k} {median(p['durationMs'].get(k, 0) for p in data):.0f} ms"
+        for k in ("triggerExecution", "walCommit", "commitOffsets")
+    ))
+    print(f"checkpoint manager: {manager.getClass().getName()}")
 
 
 if __name__ == "__main__":
