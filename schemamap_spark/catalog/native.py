@@ -59,11 +59,6 @@ INDEXES_SCHEMA = T.StructType([
 ])
 
 
-def _quoted(*parts: str) -> str:
-    """A multipart identifier with each part backquoted."""
-    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
-
-
 class SparkNativeCatalog(CatalogAdapter):
     # relations()/columns() enumerate spark.catalog eagerly into local
     # rows — the returned plan is a snapshot of the catalog at call time, so
@@ -98,11 +93,10 @@ class SparkNativeCatalog(CatalogAdapter):
     def columns(self) -> DataFrame:
         rows = []
         for db, t in self._tables():
-            # qualifying a temporary view's name with a database fails the
-            # lookup; a table is named `db`.`table` (the dbName argument is
-            # deprecated)
-            name = t.name if t.isTemporary else _quoted(db, t.name)
-            cols = self.spark.catalog.listColumns(name)
+            # a temporary view lives in no database: qualifying its name
+            # with db fails the lookup
+            cols = (self.spark.catalog.listColumns(t.name) if t.isTemporary
+                    else self.spark.catalog.listColumns(t.name, db))
             for i, c in enumerate(cols, start=1):
                 rows.append((db, t.name, c.name, c.dataType, not c.nullable,
                              None, c.description, i))

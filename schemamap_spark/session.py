@@ -16,16 +16,19 @@ Two shuffle widths, set apart because they cost differently:
 
 Streaming checkpoint files (offset, commit and source logs, state deltas,
 the file sink's log) are each published by writing a temp file and renaming
-it into place. When the session's default filesystem is `file:`, `get_spark`
-has Spark publish them through `FileSystemBasedCheckpointFileManager`: an
-`exists` check plus one POSIX rename. Spark's default manager renames through
+it into place. `get_spark` has Spark publish them through
+`FileSystemBasedCheckpointFileManager`, for every checkpoint path whatever
+its scheme (the manager class is one session-wide conf): an `exists` check
+plus one `FileSystem.rename`. Spark's default manager renames through
 Hadoop's FileContext, which on `file:` is also a check-then-rename, but
 without Hadoop's native library each of its link-status checks forks a
-`readlink` process (400 forks per 3-batch stream round). Create-if-absent holds
-as before: both check that the target is absent, then rename (neither is
-atomic on `file:`). A non-local default filesystem, a manager class the
-caller set, and sessions adopted through `configure_session` keep Spark's
-default.
+`readlink` process (400 forks per 3-batch stream round). A log entry is
+still created only if absent: the manager refuses a target that exists,
+and when `FileSystem.rename` returns false because the target appeared in
+between (HDFS refuses to rename onto an existing file) it raises "already
+exists". On `file:` the check and the rename are two steps, as they were
+under FileContext. A manager class in `get_spark`'s `extra_configs` wins,
+and sessions adopted through `configure_session` keep Spark's default.
 """
 
 from __future__ import annotations
@@ -72,12 +75,11 @@ def get_spark(
     wire transport (no driver jar or network in this container; see
     COVERAGE.md 'Declared out of scope').
 
-    On a `file:` default filesystem, streaming checkpoints are published
-    through Spark's FileSystem checkpoint manager, because Hadoop's local
-    FileContext rename forks `readlink` for every link-status check without
-    Hadoop's native library (`use_local_checkpoint_manager`). A non-local
-    default filesystem or a manager class in `extra_configs` keeps Spark's
-    default, as does a host session adopted with `configure_session`."""
+    Streaming checkpoints are published through Spark's FileSystem
+    checkpoint manager, because Hadoop's local FileContext rename forks
+    `readlink` for every link-status check without Hadoop's native library
+    (module docstring). A manager class in `extra_configs` wins; a host
+    session adopted with `configure_session` keeps Spark's default."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -97,25 +99,12 @@ def get_spark(
         # Arrow for any pandas_udf / mapInPandas path.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # checkpoint files published by one rename each (module docstring)
+        .config(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
     )
     for k, v in (extra_configs or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    use_local_checkpoint_manager(spark)
-    return spark
-
-
-def use_local_checkpoint_manager(spark: SparkSession) -> None:
-    """Select Spark's FileSystem checkpoint manager when the default
-    filesystem is `file:` and no manager class is set (module docstring).
-    A non-local default keeps Spark's FileContext manager, whose rename is
-    atomic on HDFS. The key is a runtime SQL conf read when a query starts,
-    so setting it on a running session works."""
-    if spark.conf.get(CHECKPOINT_MANAGER_KEY, None):
-        return
-    hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
-    if hadoop_conf.get("fs.defaultFS", "file:///").startswith("file:"):
-        spark.conf.set(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
+    return builder.getOrCreate()
 
 
 def batch_shuffle_partitions(spark: SparkSession) -> int:

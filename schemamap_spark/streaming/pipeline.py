@@ -18,14 +18,14 @@ a query first starts and restores it on every resume, so a checkpoint written
 under another width keeps that width.
 
 Checkpoint files (offset and commit logs, source and sink logs, state
-deltas) are each written to a temp file and renamed into place. On a `file:`
-default filesystem `get_spark` has Spark do that rename through its
-FileSystem checkpoint manager, an `exists` check plus one rename: Hadoop's
-local FileContext rename, Spark's default, is also check-then-rename but
-forks `readlink` for every link-status check without Hadoop's native
-library. A non-local default filesystem, a caller-set
-`spark.sql.streaming.checkpointFileManagerClass` and sessions adopted
-through `configure_session` keep Spark's default (session.py).
+deltas) are each written to a temp file and renamed into place. `get_spark`
+has Spark do that rename through its FileSystem checkpoint manager, an
+`exists` check plus one rename, for every checkpoint path: Hadoop's local
+FileContext rename, Spark's default, is also check-then-rename but forks
+`readlink` for every link-status check without Hadoop's native library. A
+`spark.sql.streaming.checkpointFileManagerClass` in `extra_configs` wins,
+and sessions adopted through `configure_session` keep Spark's default
+(session.py).
 """
 
 from __future__ import annotations

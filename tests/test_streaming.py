@@ -14,9 +14,8 @@ from schemamap_spark.plans.dryrun import explain_str
 from schemamap_spark.session import (
     CHECKPOINT_MANAGER_KEY,
     FS_CHECKPOINT_MANAGER,
-    configure_session,
+    get_spark,
     load_table,
-    use_local_checkpoint_manager,
 )
 from schemamap_spark.streaming import (
     sessionized,
@@ -143,33 +142,20 @@ def test_local_checkpoints_commit_by_one_rename_and_stay_create_if_absent(spark,
     assert (tmp_path / "0").read_bytes() == b"first"
 
 
-def test_checkpoint_manager_rule_keeps_sparks_choice_elsewhere(spark):
-    """A non-local default filesystem, a caller-set manager class and a
-    session adopted through configure_session keep Spark's choice."""
-    hadoop_conf = spark.sparkContext._jsc.hadoopConfiguration()
-    default_fs = hadoop_conf.get("fs.defaultFS")
-    chosen = spark.conf.get(CHECKPOINT_MANAGER_KEY)
+def test_a_checkpoint_manager_in_extra_configs_wins(spark, tmp_path):
+    """get_spark sets the FileSystem manager before the caller's
+    extra_configs, so a class given there is the one Spark resolves."""
     caller_set = FS_CHECKPOINT_MANAGER.replace("FileSystemBased", "FileContextBased")
     try:
-        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
-        configure_session(spark)
-        assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
-
-        hadoop_conf.set("fs.defaultFS", "hdfs://namenode:8020")
-        use_local_checkpoint_manager(spark)
-        assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) is None
-        hadoop_conf.set("fs.defaultFS", default_fs)
-
-        spark.conf.set(CHECKPOINT_MANAGER_KEY, caller_set)
-        use_local_checkpoint_manager(spark)
-        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == caller_set
-
-        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
-        use_local_checkpoint_manager(spark)
-        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == FS_CHECKPOINT_MANAGER
+        same = get_spark(
+            "schemamap-tests", shuffle_partitions=8,
+            extra_configs={CHECKPOINT_MANAGER_KEY: caller_set},
+        )
+        assert same is spark
+        manager = _checkpoint_manager(spark, tmp_path.as_uri())
+        assert manager.getClass().getName() == caller_set
     finally:
-        hadoop_conf.set("fs.defaultFS", default_fs)
-        spark.conf.set(CHECKPOINT_MANAGER_KEY, chosen)
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
 
 
 def test_sessionized_stream_runs(spark, stream_dir):

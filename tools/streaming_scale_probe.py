@@ -13,7 +13,7 @@ the parquet store, not the checkpoint).
 It also prints the per-batch medians of the query's triggerExecution,
 walCommit and commitOffsets durations (the latter two are the offset- and
 commit-log writes) and the checkpoint manager class Spark resolves for the
-checkpoint directory (session.use_local_checkpoint_manager).
+checkpoint directory (set by session.get_spark).
 
 Run:  python tools/streaming_scale_probe.py [N]
 """
