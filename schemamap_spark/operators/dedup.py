@@ -602,17 +602,30 @@ def incremental_exact_dedup(
     seen_fingerprints: a frame with a `fingerprint` column (the union of
     previous batches' returned stores), or None for the first batch.
     Returns (fresh, fingerprints): `fresh` = the batch collapsed to one
-    min-id representative per digest, minus anything already in the store;
+    representative row per digest, minus anything already in the store;
     `fingerprints` = exactly the fresh digests — append them to the store
     (e.g. a parquet dir partitioned by digest prefix) for the next batch.
+    The representative is the least row by (`id_col` with NULL ids last,
+    then the other columns in order), so a batch that repeats an id still
+    yields one row per digest, and the same one whatever the input order.
+    The columns must be orderable (no map columns).
 
     At 100 TB: the anti-join keys are digests on both sides; with the store
     bucketed by fingerprint the join is shuffle-free on the store side."""
     with_fp = new_docs.withColumn(
         "fingerprint", F.md5(F.lower(F.trim(F.col(text_col))))
     )
-    reps = with_fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    batch_unique = with_fp.join(reps, ["fingerprint", id_col], "left_semi")
+    # one aggregation picks the representative: min of a struct compares
+    # field by field, so the id decides and the payload breaks its ties
+    # (a struct orders NULL fields first, hence the leading isNull key)
+    key = [F.col(id_col).isNull().alias("_null_id"), id_col] + [
+        c for c in new_docs.columns if c != id_col
+    ]
+    batch_unique = (
+        with_fp.groupBy("fingerprint")
+        .agg(F.min(F.struct(*key)).alias("_rep"))
+        .select(*[F.col("_rep")[c].alias(c) for c in new_docs.columns], "fingerprint")
+    )
     if seen_fingerprints is not None:
         fresh = batch_unique.join(
             seen_fingerprints.select("fingerprint"), "fingerprint", "left_anti"

@@ -247,8 +247,14 @@ def cosine_topk(
     set-shaped consumer (candidate union, fusion, eval joins), where the
     global sort is a range Exchange the consumer immediately destroys.
 
-    method="expr" (default): per-pair zip_with/aggregate dot products —
-    all-JVM, whole-stage-codegen, ideal up to a few hundred dims.
+    method="expr" (default): one zip_with/aggregate dot product per pair —
+    all-JVM, whole-stage-codegen, ideal up to a few hundred dims. Each
+    side's norm is projected once per ROW before the join: Catalyst does
+    not share lambda-bearing terms between expressions, so `cosine()` in
+    the pair projection would recompute both norms for every pair (three
+    dot products instead of one). The pair score `try_divide(q·c,
+    q_nrm * c_nrm)` is `cosine()`'s arithmetic in the same order, so sims,
+    ranks and ties are bit-identical to it.
 
     method="matmul": Arrow-batched numpy path — each corpus slice is scored
     against the whole query matrix with ONE BLAS matmul per batch, then only
@@ -300,15 +306,7 @@ def cosine_topk(
     if method == "matmul":
         scored = _matmul_candidates(c, q, k)
     elif method == "expr":
-        scored = (
-            c.crossJoin(F.broadcast(q))
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                cosine("q_vec", "c_vec").alias("sim"),
-            )
-        )
+        scored = _expr_candidates(c, q)
     else:
         raise ValueError(f"unknown cosine_topk method: {method!r}")
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
@@ -322,6 +320,23 @@ def cosine_topk(
         F.round("sim", 6).alias("cosine_sim"),
     ).filter(F.col("rank") <= k)
     return out.orderBy("query_id", "rank") if ordered else out
+
+
+def _expr_candidates(c: DataFrame, q: DataFrame) -> DataFrame:
+    """Every non-self (query_id, neighbor_id, sim) pair, scored by one dot
+    product per pair over per-row norms; each sim is bit-identical to
+    `cosine("q_vec", "c_vec")` (cosine_topk docstring)."""
+    q = q.select("*", _norm("q_vec").alias("q_nrm"))
+    c = c.select("*", _norm("c_vec").alias("c_nrm"))
+    return (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.expr(f"try_divide({_dot_sql('q_vec', 'c_vec')}, q_nrm * c_nrm)").alias("sim"),
+        )
+    )
 
 
 def _matmul_candidates(c: DataFrame, q: DataFrame, k: int) -> DataFrame:

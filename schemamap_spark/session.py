@@ -148,6 +148,22 @@ def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     return df
 
 
+def spread_by_range(df: DataFrame, key: str) -> DataFrame:
+    """Range-partition `df` on `key` ascending, for expensive per-row work
+    whose result is then globally sorted on `key`.
+
+    A global sort's range partitioner samples its child by running it, so
+    per-row work under an `orderBy` runs twice: once in the sampler job and
+    once in the map stage. Partitioned here, below that work, the sort's
+    distribution is already satisfied: the only Exchange sits under the
+    work, and its sampler reads just the input. Unlike `ensure_parallelism`
+    this always fires: a wide input needs the range Exchange as much as a
+    narrow one. Width: the input's file count, at least
+    `defaultParallelism`."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartitionByRange(max(parallelism, len(df.inputFiles())), key)
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, fresh: bool = False
 ) -> DataFrame:

@@ -415,8 +415,11 @@ def normalize_text_q(spark, sf):
     pytest-only: its script/style pattern needs a backreference, which
     RE2 cannot express."""
     from schemamap_spark.functions.text import normalize_text
+    from schemamap_spark.session import spread_by_range
 
-    docs = load_table(spark, sf, "documents")
+    # range-partitioned below the regex chain, so the orderBy's sampler
+    # does not run the chain a second time (session.spread_by_range)
+    docs = spread_by_range(load_table(spark, sf, "documents"), "doc_id")
     injected = docs.select(
         "doc_id",
         F.concat(
@@ -460,8 +463,10 @@ def pii_redact_q(spark, sf):
     the two sides cannot drift; patterns are lookaround-free by contract
     (functions/text.py) precisely so Java regex and RE2 agree."""
     from schemamap_spark.functions.text import pii_hit_count, redact_pii
+    from schemamap_spark.session import spread_by_range
 
-    docs = load_table(spark, sf, "documents")
+    # range-partitioned below the regex chain (see normalize_text_q)
+    docs = spread_by_range(load_table(spark, sf, "documents"), "doc_id")
     injected = docs.select(
         "doc_id",
         F.concat(

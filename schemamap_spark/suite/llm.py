@@ -127,11 +127,13 @@ def text_profile(spark, sf):
     text_quality, text_fingerprint so the suite fits the driver's 50-query
     correctness window — and one-pass profiling is the shape a real curation
     pipeline runs anyway)."""
-    from schemamap_spark.session import ensure_parallelism
+    from schemamap_spark.session import spread_by_range
 
-    # documents is a single parquet file at test scale — without a spread the
-    # whole per-doc battery runs on one core
-    docs = ensure_parallelism(load_table(spark, sf, "documents"), "doc_id")
+    # range-partitioned on doc_id BELOW the battery, so the final orderBy
+    # adds no Exchange whose sampler would run the battery a second time
+    # (session.spread_by_range); the spread also keeps a single-file
+    # documents table off one core
+    docs = spread_by_range(load_table(spark, sf, "documents"), "doc_id")
     # tokenize ONCE per row: every battery member re-split the full text
     # internally (doc_fingerprint's shingle walk re-split it per ELEMENT),
     # ~10 split() evaluations per row for one tokenization's worth of

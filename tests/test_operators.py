@@ -1157,6 +1157,46 @@ def test_incremental_exact_dedup_across_batches(spark):
     assert fresh3.count() == 0
 
 
+def test_incremental_exact_dedup_one_row_per_digest_on_a_repeated_id(spark):
+    """A batch that repeats a doc_id with the same normalized text must still
+    give one fresh row and one store entry per digest. With a groupBy-min id
+    plus a semi-join on (digest, id), both rows of the repeated id matched
+    and survived. The representative is the least row by (doc_id, payload)."""
+    from schemamap_spark.operators.dedup import incremental_exact_dedup
+
+    batch = spark.createDataFrame(
+        [(1, "Hello world"), (1, "hello world "), (2, "HELLO WORLD"), (3, "other")],
+        "doc_id long, text string",
+    )
+    fresh, store = incremental_exact_dedup(batch)
+    rows = sorted((r.doc_id, r.text) for r in fresh.collect())
+    assert rows == [(1, "Hello world"), (3, "other")]
+    assert fresh.columns == ["doc_id", "text", "fingerprint"]
+    assert store.count() == store.distinct().count() == 2
+
+
+def test_incremental_exact_dedup_picks_the_same_row_under_permutation(spark):
+    """Equal ids with different payloads: whatever the input order and
+    partitioning, the same representative (least doc_id, then least
+    payload in column order) is kept."""
+    import random
+
+    from schemamap_spark.operators.dedup import incremental_exact_dedup
+
+    rows = [
+        (5, "b", "Same Text"), (5, "a", "same text"), (7, "a", " SAME TEXT"),
+        (2, "z", "other text"), (2, "y", "Other Text "), (9, "x", "lonely"),
+    ]
+    picked = set()
+    for seed in range(4):
+        perm = rows[:]
+        random.Random(seed).shuffle(perm)
+        batch = spark.createDataFrame(perm, "doc_id long, src string, text string")
+        fresh, _ = incremental_exact_dedup(batch.repartition(3))
+        picked.add(tuple(sorted(tuple(r) for r in fresh.drop("fingerprint").collect())))
+    assert picked == {((2, "y", "Other Text "), (5, "a", "same text"), (9, "x", "lonely"))}
+
+
 def test_incremental_dedup_bucketed_store_joins_without_store_shuffle(spark):
     """The dedup store's 100 TB claim (dedup.py docstring), plan-proven like
     the bucketed SCD2 merge: with the fingerprint store bucketed on its
@@ -1351,6 +1391,74 @@ def test_cosine_topk_drops_infinite_vectors(spark):
         assert all(r.neighbor_id not in (3, 4, 5, 6) for r in out), (method, out)
         assert all(not math.isnan(r.cosine_sim) for r in out), (method, out)
         assert [r.neighbor_id for r in out] == [1, 2], (method, out)
+
+
+def test_cosine_topk_sims_are_cosine_bit_for_bit(spark):
+    """cosine_topk's expr path projects each side's norm once per row and
+    scores a pair as try_divide(q·c, q_nrm * c_nrm); cosine() computes both
+    norms inside the pair. The arithmetic and its order are the same, so
+    every unrounded sim must carry cosine()'s exact bits, NULL and NaN
+    included, on tied, zero, NaN and ±Inf vectors; and the ranked output,
+    ties broken by neighbor_id, must be the ranking of cosine() itself."""
+    import math
+    import struct
+
+    from pyspark.sql import Window
+
+    rows = [
+        (0, [0.3, 0.1, 0.7]),
+        (1, [0.3, 0.1, 0.7]),             # tie: duplicate of 0
+        (2, [0.6, 0.2, 1.4]),             # tie: 2 × vector 0
+        (3, [0.1, 0.9, 0.2]),
+        (4, [0.1, 0.9, 0.2]),             # tie: duplicate of 3
+        (5, [-0.2, 0.4, 0.1]),
+        (6, [0.0, 0.0, 0.0]),             # zero
+        (7, [math.nan, 0.5, 0.5]),        # NaN
+        (8, [math.inf, 0.5, 0.5]),        # +Inf
+        (9, [0.5, -math.inf, 0.5]),       # -Inf
+        (10, [1e-160, 1e-160, 1e-160]),   # subnormal squared norm
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
+    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
+
+    def bits(x):
+        return None if x is None else struct.pack(">d", x)
+
+    scored = {
+        (r.query_id, r.neighbor_id): bits(r.sim)
+        for r in SIM._expr_candidates(c, q).collect()
+    }
+    ref = {
+        (r.query_id, r.neighbor_id): bits(r.sim)
+        for r in c.crossJoin(q)
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", SIM.cosine("q_vec", "c_vec").alias("sim"))
+        .collect()
+    }
+    assert len(ref) == len(rows) * (len(rows) - 1)
+    assert scored == ref
+    assert scored[(0, 1)] == scored[(0, 2)] and scored[(6, 0)] is None
+
+    k = 4
+    out = [tuple(r) for r in SIM.cosine_topk(emb, emb, k=k).collect()]
+    finite = [0, 1, 2, 3, 4, 5, 10]
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
+    want = [
+        tuple(r)
+        for r in c.crossJoin(q)
+        .filter(F.col("neighbor_id").isin(finite) & F.col("query_id").isin(finite))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", SIM.cosine("q_vec", "c_vec").alias("sim"))
+        .select(
+            "query_id", "neighbor_id", F.row_number().over(w).alias("rank"),
+            F.round("sim", 6).alias("cosine_sim"),
+        )
+        .filter(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+        .collect()
+    ]
+    assert out == want
 
 
 def test_incremental_minhash_reingested_doc(spark):

@@ -369,3 +369,43 @@ def test_compact_parquet_dir(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="no parquet"):
         compact_parquet_dir(spark, str(tmp_path / "empty_nothing"))
+
+
+def _text_profile_plan_and_rows(spark, sf):
+    from schemamap_spark.suite.llm import text_profile
+
+    df = text_profile(spark, sf)
+    return df._jdf.queryExecution().executedPlan().toString(), df.collect()
+
+
+def _assert_one_exchange_below_the_battery(plan):
+    lines = plan.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert "rangepartitioning(doc_id" in lines[exchanges[0]], plan
+    # a tree string prints a child below its parent: the battery's Project
+    # (the line that names its outputs) sits above the one Exchange
+    battery = [i for i, ln in enumerate(lines) if "AS predicted_lang" in ln]
+    assert len(battery) == 1 and battery[0] < exchanges[0], plan
+
+
+def test_text_profile_runs_its_battery_above_one_range_exchange(spark, tmp_path):
+    """The global sort's range sampler runs its child to sample it, so the
+    documents are range-partitioned on doc_id BELOW the battery: the plan has
+    one Exchange, under the battery, and no range Exchange above it. This
+    must hold for the single-file documents table and for a wide copy,
+    where ensure_parallelism would not fire. The oracle's row hash ignores
+    order, so the doc_id order of collect() is checked here."""
+    sf = "/root/testdata/sf0.01"
+    plan, rows = _text_profile_plan_and_rows(spark, sf)
+    _assert_one_exchange_below_the_battery(plan)
+    ids = [r.doc_id for r in rows]
+    assert ids == sorted(ids) and len(ids) == load_table(spark, sf, "documents").count()
+
+    width = spark.sparkContext.defaultParallelism + 2
+    wide = tmp_path / "documents.parquet"
+    load_table(spark, sf, "documents").repartition(width).write.parquet(str(wide))
+    assert len(spark.read.parquet(str(wide)).inputFiles()) >= width
+    wide_plan, wide_rows = _text_profile_plan_and_rows(spark, str(tmp_path))
+    _assert_one_exchange_below_the_battery(wide_plan)
+    assert wide_rows == rows
