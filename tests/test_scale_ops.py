@@ -396,7 +396,8 @@ def test_text_profile_runs_its_battery_above_one_range_exchange(spark, tmp_path)
     must hold for the single-file documents table and for a wide copy,
     where ensure_parallelism would not fire. The oracle's row hash ignores
     order, so the doc_id order of collect() is checked here."""
-    sf = "/root/testdata/sf0.01"
+    from conftest import SF01 as sf
+
     plan, rows = _text_profile_plan_and_rows(spark, sf)
     _assert_one_exchange_below_the_battery(plan)
     ids = [r.doc_id for r in rows]
