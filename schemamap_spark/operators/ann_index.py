@@ -103,39 +103,6 @@ def _cell_occupancy(spark: SparkSession, codes_dir: str) -> dict[str, int]:
     return {str(r["cell"]): r["n"] for r in rows}
 
 
-def _coarse_centroids(
-    emb: DataFrame,
-    num_centroids: int,
-    id_col: str,
-    vec_col: str,
-    method: str,
-) -> list:
-    """Coarse-router training. 'sample': the deterministic hash-ordered
-    sample (cheap, one bounded collect). 'kmeans': Spark ML k-means
-    (clustering.kmeans_fit — the same router ivf_topk(centroids='kmeans')
-    uses), centers L2-normalized because cell assignment is argmax of the
-    dot against UNIT corpus vectors (ivf_pq_encode) — unnormalized centers
-    would bias routing toward long centroids instead of nearest-by-cosine.
-    On clustered corpora sampled centroids are what make routing miss
-    cells (the 220k probe: routing, not PQ resolution, binds recall);
-    k-means costs one extra training pass at build time only — appends and
-    searches just read the recorded centers."""
-    if method == "kmeans":
-        import numpy as np
-
-        from schemamap_spark.operators.clustering import kmeans_fit
-
-        model = kmeans_fit(emb, k=num_centroids, vec_col=vec_col)
-        C = np.array(
-            [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
-        )
-        C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-        return [[float(x) for x in c] for c in C]
-    if method == "sample":
-        return ivf_centroids(emb, num_centroids, id_col, vec_col)
-    raise ValueError(f"unknown centroids method {method!r} (use 'sample' or 'kmeans')")
-
-
 def ann_index_build(
     emb: DataFrame,
     index_dir: str,
@@ -174,7 +141,7 @@ def ann_index_build(
     spark = emb.sparkSession
     fs = fscommit.fs_for(index_dir, spark)
     books = pq_train(emb, vec_col, id_col, m, k_per_sub, sample)
-    cents = _coarse_centroids(emb, num_centroids, id_col, vec_col, centroids)
+    cents = ivf_centroids(emb, num_centroids, id_col, vec_col, centroids)
     encoded = ivf_pq_encode(emb, books, cents, id_col, vec_col)
     tmp_dir = fs.mktempdir(fscommit.dirname(index_dir), ".index_new_")
     codes_tmp = join(tmp_dir, _CODES)

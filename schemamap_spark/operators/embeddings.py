@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 # (queries × batch_rows) sims matrix stays ~32 MB of float64 per worker —
 # vectorized across queries without unbounded memory at the query cap.
 _SCORE_BLOCK_CELLS = 4_000_000
+_TOPK_SCHEMA = "query_id long, neighbor_id long, rank int, cosine_sim double"
 
 
 def quantize_embeddings(
@@ -79,36 +80,29 @@ def pq_train(
 ) -> list:
     """Trains product-quantization codebooks: the vector is split into `m`
     subspaces and each gets `k_per_sub` k-means centroids (Lloyd, seeded and
-    deterministic: init = first k distinct sample vectors in xxhash64(id)
-    order — hash order, NOT first-N by id, for the same reason as IVF
-    centroid sampling). Vectors are L2-normalized BEFORE training/encoding so
-    ADC inner products approximate cosine directly.
+    deterministic: init = first k distinct vectors of the `sample`-row
+    similarity.hash_sample). Vectors are L2-normalized BEFORE
+    training/encoding so ADC inner products approximate cosine directly.
 
     Returns codebooks as a nested list [m][k_per_sub][dims/m] — plain data,
     broadcast via task closures like the matmul path's query matrix. The
     driver-side collect is the bounded `sample`, never the corpus."""
     import numpy as np
 
-    rows = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.xxhash64("_id"))
-        .limit(sample)
-        .collect()
-    )
+    from schemamap_spark.operators.similarity import hash_sample
+
+    rows = hash_sample(df, sample, id_col, vec_col)
     if not rows:
-        raise ValueError("pq_train: empty input")
-    X = np.array([r._v for r in rows], dtype=np.float64)
+        # fail the contract loudly, not with an opaque numpy argmin error
+        raise ValueError(
+            "pq_train: no finite nonzero-norm vectors in input — zero vectors "
+            "have no direction to encode (same contract as cosine_topk)"
+        )
+    X = np.array(rows, dtype=np.float64)
     dims = X.shape[1]
     if dims % m:
         raise ValueError(f"dims {dims} not divisible by m={m}")
-    nrm = np.linalg.norm(X, axis=1, keepdims=True)
-    X = X[nrm[:, 0] > 0] / nrm[nrm[:, 0] > 0]
-    if X.shape[0] == 0:
-        # fail the contract loudly, not with an opaque numpy argmin error
-        raise ValueError(
-            "pq_train: no nonzero-norm vectors in sample — zero vectors have "
-            "no direction to encode (same contract as cosine_topk)"
-        )
+    X = X / np.linalg.norm(X, axis=1, keepdims=True)
     dsub = dims // m
     books = []
     for s in range(m):
@@ -191,10 +185,10 @@ def pq_topk(
     approximation when rerank=0."""
     import numpy as np
 
-    from pyspark.sql import Window
+    from schemamap_spark.operators.similarity import collect_bounded_queries
 
-    from schemamap_spark.operators.similarity import collect_bounded_queries, cosine
-
+    if rerank and corpus is None:
+        raise ValueError("rerank > 0 requires the original corpus frame")
     books = [np.array(b, dtype=np.float64) for b in codebooks]
     dsub = books[0].shape[1]
     m = len(books)
@@ -204,9 +198,7 @@ def pq_topk(
     )
     spark = codes.sparkSession
     if not q_rows:
-        return spark.createDataFrame(
-            [], f"query_id long, neighbor_id long, rank int, cosine_sim double"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     q_ids, luts = [], []
     for r in q_rows:
         qv = np.asarray(r.q_vec, dtype=np.float64)
@@ -221,9 +213,7 @@ def pq_topk(
     nq = len(q_ids)
     if nq == 0:
         # every query was zero-norm/non-finite — np.stack below would raise
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine_sim double"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     take = (rerank * k if rerank else k) + 1
     # The LUTs are batch-INVARIANT: stack them per subspace once on the
     # driver — (nq, k_s) each — so every batch scores ALL queries with one
@@ -266,36 +256,30 @@ def pq_topk(
     scored = codes.mapInPandas(
         gen, schema=f"query_id long, neighbor_id long, sim double"
     ).filter(F.col("neighbor_id") != F.col("query_id"))
+    return _adc_rank(scored, k, rerank, queries, corpus, id_col, vec_col)
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
+
+def _adc_rank(
+    scored: DataFrame,
+    k: int,
+    rerank: int,
+    queries: DataFrame,
+    vectors: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The tail pq_topk and ivf_pq_search_encoded share: rank the ADC
+    scores; with rerank=R, re-score each query's top R·k ADC candidates with
+    the exact pair score (similarity.rerank_sim) and rank those."""
+    from schemamap_spark.operators.similarity import _side, rank_topk, rerank_sim
+
     if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("cosine_sim"))
-            .orderBy("query_id", "rank")
-        )
-    if corpus is None:
-        raise ValueError("rerank > 0 requires the original corpus frame")
-    cands = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank * k)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    cdf = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    exact = (
-        cands.join(F.broadcast(qdf), "query_id")
-        .join(cdf, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("sim"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("cosine_sim"))
-        .orderBy("query_id", "rank")
-    )
+        return rank_topk(scored, k)
+    cands = rank_topk(scored, rerank * k, ordered=False).select("query_id", "neighbor_id")
+    q = _side(queries, id_col, vec_col, "query_id", "q_vec", "q_nrm")
+    c = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    pairs = cands.join(F.broadcast(q), "query_id").join(c, "neighbor_id")
+    return rank_topk(rerank_sim(pairs), k)
 
 
 def ivf_centroids(
@@ -303,19 +287,41 @@ def ivf_centroids(
     num_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    centroids: str = "sample",
 ) -> list:
-    """Coarse IVF centroids: the deterministic hash-ordered sample rule
-    pq_train/ivf_topk use, L2-normalized, returned as plain nested lists so
-    they persist next to the codebooks (ann_index meta)."""
+    """The one coarse-centroid trainer (ivf_topk, ivf_pq_topk,
+    ann_index_build), returned L2-normalized as plain nested lists so they
+    persist next to the codebooks (ann_index meta).
+
+    'sample': the first `num_centroids` finite nonzero vectors in
+    (xxhash64(id), id) order (similarity.hash_sample — the rule
+    cosine_near_pairs and pq_train sample by too); cheap, one bounded
+    collect. 'kmeans': Spark ML k-means (clustering.kmeans_fit). On
+    clustered corpora sampled centroids are what make routing miss cells
+    (the 220k probe: routing, not PQ resolution, binds recall); k-means
+    costs one extra training pass at build time only — ann_index appends
+    and searches just read the recorded centers.
+
+    Centres are normalized because ivf_pq_encode assigns a cell by argmax of
+    the dot against UNIT corpus vectors — unnormalized centres would bias
+    routing toward long centroids; ivf_topk's cosine argmax ignores scale."""
     import numpy as np
 
-    cent_rows = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy(F.xxhash64("_id"))
-        .limit(num_centroids)
-        .collect()
-    )
-    C = np.array([r._v for r in cent_rows], dtype=np.float64)
+    if centroids == "kmeans":
+        from schemamap_spark.operators.clustering import kmeans_fit
+
+        cents = kmeans_fit(corpus, k=num_centroids, vec_col=vec_col).clusterCenters()
+    elif centroids == "sample":
+        from schemamap_spark.operators.similarity import hash_sample
+
+        cents = hash_sample(corpus, num_centroids, id_col, vec_col)
+    else:
+        raise ValueError(
+            f"unknown centroids method {centroids!r} (use 'sample' or 'kmeans')"
+        )
+    if not len(cents):
+        return []
+    C = np.array(cents, dtype=np.float64)
     C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     return [[float(x) for x in c] for c in C]
 
@@ -389,9 +395,7 @@ def ivf_pq_search_encoded(
     R·k survivors exactly; passing rerank without vectors raises."""
     import numpy as np
 
-    from pyspark.sql import Window
-
-    from schemamap_spark.operators.similarity import collect_bounded_queries, cosine
+    from schemamap_spark.operators.similarity import collect_bounded_queries
 
     if rerank and vectors is None:
         raise ValueError("rerank requires the raw `vectors` frame (id, embedding)")
@@ -408,9 +412,7 @@ def ivf_pq_search_encoded(
     )
     spark = encoded.sparkSession
     if not q_rows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine_sim double"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     q_ids, luts, probes = [], [], []
     for r in q_rows:
         qv = np.asarray(r.q_vec, dtype=np.float64)
@@ -424,9 +426,7 @@ def ivf_pq_search_encoded(
     nq = len(q_ids)
     if nq == 0:
         # every query was zero-norm/non-finite — np.stack below would raise
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine_sim double"
-        )
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     take = (rerank * k if rerank else k) + 1
     # Batch-invariant driver-side precompute (same shape as pq_topk): stacked
     # per-subspace LUTs, plus the cell→probing-queries inversion so each
@@ -485,34 +485,7 @@ def ivf_pq_search_encoded(
     scored = encoded.mapInPandas(
         gen, schema="query_id long, neighbor_id long, sim double"
     ).filter(F.col("neighbor_id") != F.col("query_id"))
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("cosine_sim"))
-            .orderBy("query_id", "rank")
-        )
-    cands = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank * k)
-        .select("query_id", "neighbor_id")
-    )
-    qdf = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    cdf = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    exact = (
-        cands.join(F.broadcast(qdf), "query_id")
-        .join(cdf, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("sim"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("cosine_sim"))
-        .orderBy("query_id", "rank")
-    )
+    return _adc_rank(scored, k, rerank, queries, vectors, id_col, vec_col)
 
 
 def ivf_pq_topk(
@@ -542,9 +515,7 @@ def ivf_pq_topk(
     ivf_pq_encode (one-pass cell+codes) → ivf_pq_search_encoded (stacked
     ADC). Callers that want a PERSISTED index use operators/ann_index.py,
     which composes the same three pieces around a parquet store."""
-    from schemamap_spark.operators.ann_index import _coarse_centroids
-
-    cents = _coarse_centroids(corpus, num_centroids, id_col, vec_col, centroids)
+    cents = ivf_centroids(corpus, num_centroids, id_col, vec_col, centroids)
     encoded = ivf_pq_encode(corpus, codebooks, cents, id_col, vec_col)
     return ivf_pq_search_encoded(
         encoded, queries, codebooks, cents, k, nprobe, rerank,

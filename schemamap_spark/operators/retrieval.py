@@ -354,7 +354,8 @@ def hybrid_rerank_topk(
     queries are drawn from the corpus (the usual dedup/eval setup). When
     query ids live in a SEPARATE id space, a coincidental id collision
     would silently remove a legitimate document — pass
-    `exclude_self=False` there.
+    `exclude_self=False` there. Zero, NaN and ±Inf vectors, query or
+    document, are never ranked (similarity's `_finite_nonzero` contract).
 
     Candidate-union + exact rerank is monotone where rank fusion is not:
     adding a retriever can only grow the candidate pool, so recall@k never
@@ -387,9 +388,7 @@ def hybrid_rerank_topk(
     View wrapper and is immune; the ~10 eager per-op analyzer passes it
     pays were measured at ~0.05 s on the bench corpus — not worth an
     input-dependent crash."""
-    from pyspark.sql import Window
-
-    from schemamap_spark.operators.similarity import cosine
+    from schemamap_spark.operators.similarity import _side, rank_topk, rerank_sim
 
     if not rankings:
         raise ValueError("rankings must be non-empty")
@@ -413,32 +412,16 @@ def hybrid_rerank_topk(
         # chain was the largest single build term of the hybrid bench
         # query, r19 build profile — guide §1.2 driver work)
         cands = cands.filter(F.col("query_id") != F.col("doc_id"))
-    qv = queries.select(
-        F.col(query_col if query_col in queries.columns else id_col).alias(
-            "query_id"
-        ),
-        F.col(vec_col).alias("q_vec"),
+    qv = _side(
+        queries, query_col if query_col in queries.columns else id_col, vec_col,
+        "query_id", "q_vec", "q_nrm",
     )
     cv = corpus.select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("c_vec")
     )
     cand_q = cands.distinct().join(F.broadcast(qv), "query_id")
-    scored = cv.join(F.broadcast(cand_q), "doc_id").select(
-        "query_id", "doc_id", cosine("q_vec", "c_vec").alias("sim")
-    )
-    # rank + rounded sim in ONE projection (rank filter still pushes
-    # through to WindowGroupLimit): two fewer full-tree analyzer passes
-    # than the former withColumn → filter → select chain, same plan
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "doc_id")
-    return (
-        scored.select(
-            "query_id",
-            "doc_id",
-            F.row_number().over(w).cast("int").alias("rank"),
-            F.round("sim", 6).alias("cosine_sim"),
-        )
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return rank_topk(
+        rerank_sim(cv.join(F.broadcast(cand_q), "doc_id"), "doc_id"), k, "doc_id"
     )
 
 

@@ -9,9 +9,18 @@
   pseudo-random hyperplanes (deterministic, derived from xxhash64 of
   (plane, dim)); only same-bucket (or probing-neighbor) pairs are scored.
   Approximate: recall < 1 by construction; use cosine_topk to evaluate.
-- ivf_topk: IVF-style two-stage search — kmeans-lite centroids picked as a
-  deterministic sample, vectors assigned to nearest centroid (one pass),
-  queries scored only against the `nprobe` nearest centroids' partitions.
+- ivf_topk: IVF-style two-stage search — coarse centroids
+  (embeddings.ivf_centroids), vectors assigned to nearest centroid (one
+  pass), queries scored only against the `nprobe` nearest centroids'
+  partitions.
+
+Every top-k operator here and in embeddings/retrieval shares one scoring
+core: `_finite_nonzero` (the degenerate-vector contract), `pair_sim` (one
+dot product per pair over per-row norms), `rerank_sim` (the same score at
+candidate-rerank sites) and `rank_topk` (the one rank tail). Every
+deterministic vector sample — cosine_near_pairs' cells, pq_train's training
+set, ivf_centroids' 'sample' router — is `hash_sample`: the first n finite
+nonzero vectors in (xxhash64(id), id) order.
 
 At 100 TB: corpus stays partitioned, queries broadcast; no crossJoin of the
 corpus with itself; bucket/centroid keys make the join shuffle-partitionable.
@@ -88,6 +97,115 @@ def cosine(a, b) -> F.Column:
     return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
+# The scoring core. A pair scores `try_divide(q·c, q_nrm * c_nrm)`:
+# cosine()'s arithmetic in the same order, so sims, ranks and ties are
+# bit-identical to it. Catalyst does not share lambda-bearing terms between
+# expressions, so cosine() in a pair projection evaluates three dot products
+# per pair; with the norms projected per row it is one. Where each norm is
+# computed:
+# - the query side (broadcast, small) projects q_nrm once per row (_side);
+# - where each corpus row meets many queries (cosine_topk, lsh_topk,
+#   ivf_topk and its centroid assignment) the corpus side projects c_nrm
+#   per row before the join;
+# - at candidate-rerank sites (the PQ reranks, hybrid_rerank_topk) each
+#   corpus row meets few queries, so c_nrm is computed after the join
+#   (rerank_sim) instead of for every corpus row.
+
+
+def _finite_positive(sql: str) -> F.Column:
+    """`sql` (a double) is finite and > 0, with ONE evaluation of it:
+    finite-positive → 1/x positive (a denormal overflows to +inf, still
+    > 0); 0 → try_divide NULL → false; +inf → 0.0 → false; NaN → nanvl→0 →
+    NULL → false; NULL → NULL → false. The naive `(x > 0) & ~isnan(x) &
+    (x < inf)` embeds x three times and codegen does not CSE a HOF dot
+    product (measured 0.24s vs 0.17s per corpus pass at sf0.1). The nanvl is
+    load-bearing: Spark SQL orders NaN GREATER than every numeric, so a bare
+    `NaN > 0` is TRUE."""
+    return F.expr(
+        f"try_divide(cast(1.0 as double), nanvl({sql}, cast(0.0 as double))) > 0"
+    )
+
+
+def _finite_nonzero(name: str) -> F.Column:
+    """The degenerate-vector contract every scorer applies: the squared norm
+    of column `name` is finite and positive. Cosine is undefined for a zero
+    vector, and a vector with a NaN or ±Inf element yields NaN sims, which
+    Spark's desc sort ranks greatest — unfiltered, either would be every
+    query's top neighbor. Applied per ROW before a join: a post-join filter
+    on the computed sim is per PAIR, and ProjectCollapse inlines the whole
+    score into each predicate reference (measured 2.4× wall on the sf0.1
+    bench)."""
+    return _finite_positive(_dot_sql(name, name))
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, id_name: str, vec_name: str,
+    nrm_name: str | None = None,
+) -> DataFrame:
+    """One side of a scoring join — (id_name, vec_name[, nrm_name]) — with
+    finite nonzero vectors only, and the norm projected once per row when
+    `nrm_name` is given."""
+    side = df.select(
+        F.col(id_col).alias(id_name), F.col(vec_col).alias(vec_name)
+    ).filter(_finite_nonzero(vec_name))
+    return side.select("*", _norm(vec_name).alias(nrm_name)) if nrm_name else side
+
+
+def pair_sim(
+    q_vec: str = "q_vec", c_vec: str = "c_vec",
+    q_nrm: str = "q_nrm", c_nrm: str = "c_nrm",
+) -> F.Column:
+    """The one pair score, `try_divide(q·c, q_nrm * c_nrm)`, over column
+    names (a norm may also be a SQL expression)."""
+    return F.expr(f"try_divide({_dot_sql(q_vec, c_vec)}, {q_nrm} * {c_nrm})")
+
+
+def rerank_sim(pairs: DataFrame, doc: str = "neighbor_id") -> DataFrame:
+    """(query_id, doc, sim) of candidate pairs carrying q_vec, q_nrm (a
+    `_side` query) and c_vec, with the corpus norm computed after the join.
+    The corpus contract is tested on the pair's denominator, which the query
+    side has already passed: a predicate on c_vec alone would be pushed below
+    the join onto the whole corpus scan."""
+    c_nrm = f"sqrt({_dot_sql('c_vec', 'c_vec')})"
+    return pairs.filter(_finite_positive(f"q_nrm * {c_nrm}")).select(
+        "query_id", doc, pair_sim(c_nrm=c_nrm).alias("sim")
+    )
+
+
+def rank_topk(
+    scored: DataFrame, k: int, doc: str = "neighbor_id", ordered: bool = True
+) -> DataFrame:
+    """The one rank tail: (query_id, doc, rank, cosine_sim round6) of each
+    query's k best `sim`, ties broken by `doc`. Rank and rounded sim come
+    from ONE projection (one analyzer pass fewer than withColumn → filter →
+    select); the rank filter still reaches WindowGroupLimit below it.
+    `ordered=False` skips the final (query_id, rank) sort."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), doc)
+    out = scored.select(
+        "query_id",
+        doc,
+        F.row_number().over(w).alias("rank"),
+        F.round("sim", 6).alias("cosine_sim"),
+    ).filter(F.col("rank") <= k)
+    return out.orderBy("query_id", "rank") if ordered else out
+
+
+def hash_sample(df: DataFrame, n: int, id_col: str, vec_col: str) -> list:
+    """The one deterministic vector sample: the first `n` finite nonzero
+    vectors in (xxhash64(id), id) order, as plain float lists. Hash order,
+    NOT first-N by id: on id-clustered data (all of cluster 0 first, …)
+    first-N puts every pick in one cluster; hash order is a uniform draw
+    however ids were assigned. The driver collect is bounded by `n`."""
+    rows = (
+        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .filter(_finite_nonzero("_v"))
+        .orderBy(F.xxhash64("_id"), "_id")
+        .limit(n)
+        .collect()
+    )
+    return [[float(x) for x in r._v] for r in rows]
+
+
 def cosine_near_pairs(
     corpus: DataFrame,
     threshold: float = 0.45,
@@ -100,7 +218,7 @@ def cosine_near_pairs(
     detection), EXACT, via metric-pruned candidate generation — no broadcast
     of the corpus, no BroadcastNestedLoopJoin:
 
-    1. deterministic centroid sample (first `num_cells` vectors by id);
+    1. deterministic centroid sample (`hash_sample`, `num_cells` vectors);
     2. every vector is assigned to its nearest centroid with a pure Column
        expression (centroids inlined as literals — a narrow map, no shuffle)
        recording its angular distance `theta` to the centroid;
@@ -118,38 +236,31 @@ def cosine_near_pairs(
     on clustered near-dup corpora — the real workload — it prunes most cell
     pairs. Skewed cells can additionally be salted before the verify join.
 
-    Angles are clamped before acos and NaN thetas (zero-norm vectors)
-    degrade to pi, which disables pruning for that vector rather than
-    dropping pairs. A 1e-9 slack absorbs float round-off in the bound."""
+    Zero, NaN and ±Inf vectors pair with nothing (the `_finite_nonzero`
+    contract; semantic_dedup keeps them as singletons). Angles are clamped
+    before acos and a NULL/NaN theta (a norm product that under- or
+    overflows) degrades to pi, which disables pruning for that vector
+    rather than dropping pairs. A 1e-9 slack absorbs float round-off in the
+    bound."""
     from schemamap_spark.session import ensure_parallelism
 
     spark = corpus.sparkSession
-    base = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("v")
-    ).withColumn("nrm", _norm(F.col("v")))
+    base = _side(ensure_parallelism(corpus, id_col), id_col, vec_col, "vid", "v", "nrm")
 
-    # deterministic, tiny centroid sample in xxhash64(id) order — NOT first-N
-    # by id: on id-clustered data (all of cluster 0 first, …) first-N puts
-    # every centroid in one cluster, radii of the other cells approach pi, and
-    # the triangle-inequality prune stops firing (correct but near-all-pairs).
-    # Hash order is a uniform draw regardless of how ids were assigned.
-    crows = (
-        corpus.orderBy(F.xxhash64(F.col(id_col)), id_col)
-        .limit(num_cells)
-        .select(F.col(vec_col))
-        .collect()
-    )
-    if not crows:
+    # hash order, not first-N by id: with every centroid in one cluster the
+    # radii of the other cells approach pi and the triangle-inequality prune
+    # stops firing (correct but near-all-pairs)
+    cents = hash_sample(corpus, num_cells, id_col, vec_col)
+    if not cents:
         return base.select(
             F.col("vid").alias("i"), F.col("vid").alias("j"),
             F.lit(0.0).alias("cosine_sim"),
         ).limit(0)
-    cents = [[float(x) for x in r[0]] for r in crows]
-    cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
+    cnorms = [math.sqrt(sum(x * x for x in c)) for c in cents]
 
     def _theta_to(c: list[float], cn: float) -> F.Column:
         dot = _dot(F.col("v"), F.array(*[F.lit(x) for x in c]))
-        cos = dot / (F.col("nrm") * F.lit(cn))
+        cos = F.try_divide(dot, F.col("nrm") * F.lit(cn))
         clamped = F.least(F.greatest(cos, F.lit(-1.0)), F.lit(1.0))
         theta = F.acos(clamped)
         return F.when(F.isnan(theta) | theta.isNull(), F.lit(math.pi)).otherwise(theta)
@@ -220,10 +331,7 @@ def cosine_near_pairs(
     return (
         cand.join(vi, "i")
         .join(vj, "j")
-        .select(
-            "i", "j",
-            (_dot(F.col("v_i"), F.col("v_j")) / (F.col("n_i") * F.col("n_j"))).alias("sim"),
-        )
+        .select("i", "j", pair_sim("v_i", "v_j", "n_i", "n_j").alias("sim"))
         .filter(F.col("sim") >= threshold)
         .select("i", "j", F.round("sim", 6).alias("cosine_sim"))
         .orderBy("i", "j")
@@ -249,12 +357,8 @@ def cosine_topk(
 
     method="expr" (default): one zip_with/aggregate dot product per pair —
     all-JVM, whole-stage-codegen, ideal up to a few hundred dims. Each
-    side's norm is projected once per ROW before the join: Catalyst does
-    not share lambda-bearing terms between expressions, so `cosine()` in
-    the pair projection would recompute both norms for every pair (three
-    dot products instead of one). The pair score `try_divide(q·c,
-    q_nrm * c_nrm)` is `cosine()`'s arithmetic in the same order, so sims,
-    ranks and ties are bit-identical to it.
+    side's norm is projected once per ROW before the join (`pair_sim`), so
+    sims, ranks and ties are bit-identical to `cosine()`.
 
     method="matmul": Arrow-batched numpy path — each corpus slice is scored
     against the whole query matrix with ONE BLAS matmul per batch, then only
@@ -268,37 +372,7 @@ def cosine_topk(
     """
     from schemamap_spark.session import ensure_parallelism
 
-    # Zero-norm (and NaN-element) vectors are dropped per side BEFORE the
-    # join: cosine is undefined for them, and Spark sorts NaN greatest, so an
-    # unfiltered zero vector would rank as everyone's nearest neighbor. The
-    # predicate costs one per-ROW pass over the vector; a post-join filter on
-    # the computed sim is per-PAIR, and worse, ProjectCollapse inlines the
-    # whole zip_with/aggregate cosine into each predicate reference (~3×
-    # evaluation — measured 2.4× wall on the sf0.1 bench).
-    # The squared norm must also be FINITE: a vector containing ±Inf yields
-    # NaN sims (inf/inf) that Spark's desc sort ranks greatest — an
-    # Inf-element vector would become every query's top neighbor.
-    # Single-reference formulation: the naive `(sq > 0) & ~isnan(sq) &
-    # (sq < inf)` embeds the aggregate-HOF dot product THREE times in the
-    # predicate tree and codegen does not CSE it (measured 0.24s vs 0.17s
-    # per corpus pass at sf0.1). `1/nanvl(sq, 0) > 0` tests all conditions
-    # with ONE evaluation of the HOF: sq finite-positive → positive
-    # (denormal sq overflows to +inf, still > 0); sq = 0 → try_divide NULL
-    # → dropped; sq = +inf → 0.0 → dropped; sq = NaN (NaN element) →
-    # nanvl→0 → try_divide NULL → dropped; sq NULL (NULL vector) → NULL →
-    # dropped. The nanvl is load-bearing: Spark SQL orders NaN GREATER
-    # than every numeric, so a bare `NaN > 0` is TRUE and a NaN-element
-    # vector would pass the guard and rank as every query's top neighbor.
-    def _finite_nonzero(name: str):
-        # name-based SQL path: one parse instead of a lambda-pair tree
-        return F.expr(
-            f"try_divide(cast(1.0 as double), "
-            f"nanvl({_dot_sql(name, name)}, cast(0.0 as double))) > 0"
-        )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).filter(_finite_nonzero("q_vec"))
+    q = _side(queries, id_col, vec_col, "query_id", "q_vec")
     c = ensure_parallelism(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
         "neighbor_id",
@@ -309,33 +383,18 @@ def cosine_topk(
         scored = _expr_candidates(c, q)
     else:
         raise ValueError(f"unknown cosine_topk method: {method!r}")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    # rank + rounded sim in ONE projection (one analyzer pass fewer than
-    # withColumn → filter → select; rank filter still reaches
-    # WindowGroupLimit below the projection)
-    out = scored.select(
-        "query_id",
-        "neighbor_id",
-        F.row_number().over(w).alias("rank"),
-        F.round("sim", 6).alias("cosine_sim"),
-    ).filter(F.col("rank") <= k)
-    return out.orderBy("query_id", "rank") if ordered else out
+    return rank_topk(scored, k, ordered=ordered)
 
 
 def _expr_candidates(c: DataFrame, q: DataFrame) -> DataFrame:
     """Every non-self (query_id, neighbor_id, sim) pair, scored by one dot
-    product per pair over per-row norms; each sim is bit-identical to
-    `cosine("q_vec", "c_vec")` (cosine_topk docstring)."""
+    product per pair over per-row norms (`pair_sim`)."""
     q = q.select("*", _norm("q_vec").alias("q_nrm"))
     c = c.select("*", _norm("c_vec").alias("c_nrm"))
     return (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(f"try_divide({_dot_sql('q_vec', 'c_vec')}, q_nrm * c_nrm)").alias("sim"),
-        )
+        .select("query_id", "neighbor_id", pair_sim().alias("sim"))
     )
 
 
@@ -480,22 +539,13 @@ def lsh_topk(
     # not as inline expression nodes
     wdf = F.broadcast(spark.createDataFrame([(weights,)], "W array<array<double>>"))
 
-    c = (
-        ensure_parallelism(corpus, id_col)
-        .select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-        .crossJoin(wdf)
-        .select(
-            "neighbor_id", "c_vec",
-            _bucket_col(F.col("c_vec"), F.col("W")).alias("bucket"),
-        )
+    c = _side(
+        ensure_parallelism(corpus, id_col), id_col, vec_col, "neighbor_id", "c_vec", "c_nrm"
+    ).crossJoin(wdf).select(
+        "neighbor_id", "c_vec", "c_nrm", _bucket_col(F.col("c_vec"), F.col("W")).alias("bucket")
     )
-    q = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .crossJoin(wdf)
-        .select(
-            "query_id", "q_vec",
-            _bucket_col(F.col("q_vec"), F.col("W")).alias("bucket"),
-        )
+    q = _side(queries, id_col, vec_col, "query_id", "q_vec", "q_nrm").crossJoin(wdf).select(
+        "query_id", "q_vec", "q_nrm", _bucket_col(F.col("q_vec"), F.col("W")).alias("bucket")
     )
     if multi_probe:
         probes = F.array(
@@ -505,21 +555,15 @@ def lsh_topk(
             ],
         )
         q = q.select(
-            "query_id", "q_vec", F.explode(probes).alias("bucket")
+            "query_id", "q_vec", "q_nrm", F.explode(probes).alias("bucket")
         )
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("sim"))
+        .select("query_id", "neighbor_id", pair_sim().alias("sim"))
         .distinct()  # a neighbor can surface via several probes
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("cosine_sim"))
-        .orderBy("query_id", "rank")
-    )
+    return rank_topk(scored, k)
 
 
 def ivf_topk(
@@ -532,70 +576,47 @@ def ivf_topk(
     vec_col: str = "embedding",
     centroids: str = "sample",
 ) -> DataFrame:
-    """IVF-style ANN: centroids (deterministic sample, or k-means with
-    centroids='kmeans') → nearest-centroid assignment → queries probe
-    `nprobe` closest centroid partitions."""
-    if centroids == "kmeans":
-        from schemamap_spark.operators.clustering import kmeans_fit
+    """IVF-style ANN: centroids (embeddings.ivf_centroids: the hash-ordered
+    sample, or k-means with centroids='kmeans') → nearest-centroid
+    assignment → queries probe `nprobe` closest centroid partitions."""
+    from schemamap_spark.operators.embeddings import ivf_centroids
 
-        model = kmeans_fit(corpus, k=num_centroids, vec_col=vec_col)
-        spark = corpus.sparkSession
-        cent = spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-            f"centroid_id long, cent_vec array<double>",
-        )
-    else:
-        # collect the tiny centroid sample to the driver and rebuild it as a
-        # literal frame: monotonically_increasing_id over a lazily re-evaluated
-        # plan could assign DIFFERENT ids in the two assign() evaluations.
-        # xxhash64(id) order, not first-N by id — id-clustered corpora would
-        # otherwise concentrate every centroid in one cluster and the probe
-        # join degrades toward brute force with worse recall.
-        rows = (
-            corpus.orderBy(F.xxhash64(F.col(id_col)), id_col)
-            .limit(num_centroids)
-            .select(F.col(vec_col))
-            .collect()
-        )
-        spark = corpus.sparkSession
-        cent = spark.createDataFrame(
-            [(i, [float(x) for x in r[0]]) for i, r in enumerate(rows)],
-            "centroid_id long, cent_vec array<double>",
-        )
-    centb = F.broadcast(cent)
+    cents = ivf_centroids(corpus, num_centroids, id_col, vec_col, centroids)
+    # a literal frame of collected centres: ids from monotonically_increasing_id
+    # over a lazily re-evaluated plan could differ between the two assign()
+    # passes. Their norms ride in it, projected once per centroid.
+    centb = F.broadcast(
+        corpus.sparkSession.createDataFrame(
+            list(enumerate(cents)), "centroid_id long, cent_vec array<double>"
+        ).select("*", _norm("cent_vec").alias("cent_nrm"))
+    )
 
-    def assign(df: DataFrame, idname: str, vecname: str, n: int) -> DataFrame:
+    def assign(df: DataFrame, idname: str, vec: str, nrm: str, n: int) -> DataFrame:
         scored = df.crossJoin(centb).select(
-            "*", cosine(F.col(vecname), F.col("cent_vec")).alias("cent_sim")
+            "*", pair_sim(vec, "cent_vec", nrm, "cent_nrm").alias("cent_sim")
         )
         w = Window.partitionBy(idname).orderBy(F.desc("cent_sim"), "centroid_id")
         return (
             scored.withColumn("crank", F.row_number().over(w))
             .filter(F.col("crank") <= n)
-            .drop("cent_vec", "cent_sim", "crank")
+            .drop("cent_vec", "cent_nrm", "cent_sim", "crank")
         )
 
     c = assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")),
-        "neighbor_id", "c_vec", 1,
+        _side(corpus, id_col, vec_col, "neighbor_id", "c_vec", "c_nrm"),
+        "neighbor_id", "c_vec", "c_nrm", 1,
     )
     q = assign(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        "query_id", "q_vec", nprobe,
+        _side(queries, id_col, vec_col, "query_id", "q_vec", "q_nrm"),
+        "query_id", "q_vec", "q_nrm", nprobe,
     )
     scored = (
         c.join(F.broadcast(q), "centroid_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine("q_vec", "c_vec").alias("sim"))
+        .select("query_id", "neighbor_id", pair_sim().alias("sim"))
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("cosine_sim"))
-        .orderBy("query_id", "rank")
-    )
+    return rank_topk(scored, k)
 
 
 def topk_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:

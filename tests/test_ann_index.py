@@ -76,7 +76,6 @@ def test_kmeans_router_improves_clustered_recall(spark, emb, tmp_path):
     import json
     import os
 
-    from schemamap_spark.operators.ann_index import _coarse_centroids
     from schemamap_spark.operators.similarity import cosine_topk, topk_recall
 
     q = _q(emb)
@@ -110,7 +109,7 @@ def test_kmeans_router_improves_clustered_recall(spark, emb, tmp_path):
     ann_index_append(b2, idx2)
     got = ann_index_search(spark, idx2, q, k=5, nprobe=4).collect()
     books = pq_train(b1, m=8)
-    cents = _coarse_centroids(b1, 16, "vec_id", "embedding", "kmeans")
+    cents = ivf_centroids(b1, 16, "vec_id", "embedding", "kmeans")
     direct = ivf_pq_search_encoded(
         ivf_pq_encode(emb, books, cents), q, books, cents, k=5, nprobe=4
     ).collect()

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from schemamap_spark.operators.clustering import approx_ndv, cluster_summary, kmeans_clusters
 from schemamap_spark.session import load_table
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF001 as SF
 
 
 def test_kmeans_partitions_everything(spark):

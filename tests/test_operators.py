@@ -162,6 +162,51 @@ def test_cosine_topk_matmul_at_production_dims(spark):
     }
 
 
+def _ranked_topk_ops(dims: int) -> dict:
+    """Every ranked top-k operator as op(emb, queries, k) → (query_id,
+    neighbor/doc id, rank, cosine_sim), configured so that on a handful of
+    `dims`-wide vectors each one scores every non-self pair: one LSH plane
+    probed both ways, every IVF cell probed, PQ reranks deeper than the
+    corpus, and a hybrid candidate set of all pairs."""
+    from schemamap_spark.operators.embeddings import (
+        ivf_pq_topk,
+        pq_encode,
+        pq_topk,
+        pq_train,
+    )
+    from schemamap_spark.operators.retrieval import hybrid_rerank_topk
+
+    def pq(emb, q, k):
+        books = pq_train(emb, m=1, k_per_sub=2)
+        return pq_topk(pq_encode(emb, books), q, books, k=k, rerank=4, corpus=emb)
+
+    def ivf_pq(emb, q, k):
+        books = pq_train(emb, m=1, k_per_sub=2)
+        return ivf_pq_topk(emb, q, books, k=k, num_centroids=2, nprobe=2, rerank=4)
+
+    def hybrid(emb, q, k):
+        every = q.select(F.col("vec_id").alias("query_id")).crossJoin(
+            emb.select(F.col("vec_id").alias("doc_id"))
+        )
+        return hybrid_rerank_topk([every], emb, q, k=k)
+
+    return {
+        "cosine_topk": lambda emb, q, k: SIM.cosine_topk(emb, q, k=k),
+        "cosine_topk_matmul": lambda emb, q, k: SIM.cosine_topk(
+            emb, q, k=k, method="matmul"
+        ),
+        "lsh_topk": lambda emb, q, k: SIM.lsh_topk(
+            emb, q, k=k, num_planes=1, dims=dims, multi_probe=1
+        ),
+        "ivf_topk": lambda emb, q, k: SIM.ivf_topk(
+            emb, q, k=k, num_centroids=2, nprobe=2
+        ),
+        "pq_topk_rerank": pq,
+        "ivf_pq_topk_rerank": ivf_pq,
+        "hybrid_rerank_topk": hybrid,
+    }
+
+
 def test_cosine_topk_zero_vector_never_ranks(spark):
     """cosine(0, x) is undefined (NaN); Spark sorts NaN greatest, so without
     the zero-norm drop a zero vector would be everyone's top neighbor. The
@@ -169,14 +214,15 @@ def test_cosine_topk_zero_vector_never_ranks(spark):
     post-join filter on the computed sim would make ProjectCollapse inline
     the cosine aggregate into each predicate (~3× evaluation, the round-3
     2.4× bench regression). Zero-norm QUERY vectors are likewise dropped:
-    they'd produce all-NaN sims, i.e. k arbitrary neighbors."""
+    they'd produce all-NaN sims, i.e. k arbitrary neighbors. The contract
+    holds for every ranked top-k operator, not just cosine_topk."""
     vecs = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]), (99, [0.0, 0.0])]
     emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     q = emb.filter(F.col("vec_id").isin(0, 99))
-    for method in ("expr", "matmul"):
-        rows = SIM.cosine_topk(emb, q, k=3, method=method).collect()
-        assert [r.neighbor_id for r in rows] == [1, 2], method
-        assert all(r.query_id == 0 for r in rows), method
+    for name, op in _ranked_topk_ops(2).items():
+        rows = op(emb, q, 3).collect()
+        assert [r[1] for r in rows] == [1, 2], (name, rows)
+        assert all(r.query_id == 0 for r in rows), (name, rows)
 
 
 def test_cosine_near_pairs_prunes_on_id_clustered_ids(spark):
@@ -1384,22 +1430,25 @@ def test_cosine_topk_drops_infinite_vectors(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = emb.filter(F.col("vec_id").isin(0, 4, 6))
-    for method in ("expr", "matmul"):
-        out = SIM.cosine_topk(emb, queries, k=3, method=method).collect()
+    for name, op in _ranked_topk_ops(4).items():
+        out = op(emb, queries, 3).collect()
         # the Inf/NaN queries are dropped entirely; Inf/NaN corpus rows never rank
-        assert {r.query_id for r in out} == {0}, (method, out)
-        assert all(r.neighbor_id not in (3, 4, 5, 6) for r in out), (method, out)
-        assert all(not math.isnan(r.cosine_sim) for r in out), (method, out)
-        assert [r.neighbor_id for r in out] == [1, 2], (method, out)
+        assert {r.query_id for r in out} == {0}, (name, out)
+        assert all(r[1] not in (3, 4, 5, 6) for r in out), (name, out)
+        assert all(not math.isnan(r.cosine_sim) for r in out), (name, out)
+        assert [r[1] for r in out] == [1, 2], (name, out)
 
 
-def test_cosine_topk_sims_are_cosine_bit_for_bit(spark):
+def test_cosine_topk_sims_are_cosine_bit_for_bit(spark, monkeypatch):
     """cosine_topk's expr path projects each side's norm once per row and
     scores a pair as try_divide(q·c, q_nrm * c_nrm); cosine() computes both
     norms inside the pair. The arithmetic and its order are the same, so
     every unrounded sim must carry cosine()'s exact bits, NULL and NaN
     included, on tied, zero, NaN and ±Inf vectors; and the ranked output,
-    ties broken by neighbor_id, must be the ranking of cosine() itself."""
+    ties broken by neighbor_id, must be the ranking of cosine() itself.
+    Every other scoring site shares the core, so on finite nonzero vectors
+    the unrounded sims each ranked operator hands to `rank_topk` carry the
+    same bits, and cosine_near_pairs' rounded sims equal cosine()'s."""
     import math
     import struct
 
@@ -1459,6 +1508,80 @@ def test_cosine_topk_sims_are_cosine_bit_for_bit(spark):
         .collect()
     ]
     assert out == want
+
+    fin = emb.filter(F.col("vec_id").isin(finite))
+    # the sims each operator ranks, caught at the one rank tail (the PQ
+    # reranks call it twice; the last call ranks the exact rerank)
+    ranked = []
+    real_rank_topk = SIM.rank_topk
+
+    def spy(scored, *a, **kw):
+        ranked.append(scored)
+        return real_rank_topk(scored, *a, **kw)
+
+    monkeypatch.setattr(SIM, "rank_topk", spy)
+    for name, op in _ranked_topk_ops(3).items():
+        if name == "cosine_topk_matmul":
+            continue  # BLAS summation order: ≤1 ulp by contract
+        ranked.clear()
+        op(fin, fin, 3)
+        got = {(r[0], r[1]): bits(r.sim) for r in ranked[-1].collect()}
+        assert got, name
+        assert {p: ref[p] for p in got} == got, name
+    near = {
+        (r.i, r.j): r.cosine_sim
+        for r in SIM.cosine_near_pairs(fin, threshold=-1.0, num_cells=2).collect()
+    }
+    want_near = {
+        (r.neighbor_id, r.query_id): r.s
+        for r in c.crossJoin(q)
+        .filter(F.col("neighbor_id").isin(finite) & F.col("query_id").isin(finite))
+        .filter(F.col("neighbor_id") < F.col("query_id"))
+        .select("query_id", "neighbor_id", F.round(SIM.cosine("q_vec", "c_vec"), 6).alias("s"))
+        .collect()
+    }
+    assert near == want_near
+
+
+def test_cosine_near_pairs_ignores_zero_and_nan_vectors(spark):
+    """A zero or NaN vector has no cosine with anything: under Spark's ANSI
+    default a plain `/` on its norm raised DIVIDE_BY_ZERO, and a NaN sim
+    passes `>= threshold` (NaN orders greatest). Adding such vectors must
+    leave the pairs exactly as they were, and semantic_dedup keeps them as
+    singletons."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    schema = "vec_id long, embedding array<double>"
+    base = spark.createDataFrame(
+        [(i, rng.uniform(-1, 1, 3).tolist()) for i in range(20)], schema
+    )
+    odd = spark.createDataFrame(
+        [(99, [0.0, 0.0, 0.0]), (98, [float("nan"), 1.0, 1.0])], schema
+    )
+    want = SIM.cosine_near_pairs(base, threshold=0.9, num_cells=4).collect()
+    assert want
+    got = SIM.cosine_near_pairs(base.union(odd), threshold=0.9, num_cells=4).collect()
+    assert got == want
+    kept = {r.vec_id for r in SIM.semantic_dedup(base, 0.9, num_cells=4).collect()}
+    kept_odd = {
+        r.vec_id for r in SIM.semantic_dedup(base.union(odd), 0.9, num_cells=4).collect()
+    }
+    assert kept_odd == kept | {98, 99}
+
+
+def test_topk_pair_projection_holds_one_dot_product(spark):
+    """Catalyst does not share lambda (HOF) terms between expressions, so a
+    pair projection that scored with cosine() would evaluate q·q and c·c for
+    every pair. With norms projected per row, the projection that computes
+    each pair's sim holds exactly one zip_with dot product."""
+    emb = load_table(spark, SF, "embeddings")
+    q = emb.filter(F.col("vec_id") < 4)
+    for op in (SIM.cosine_topk, SIM.lsh_topk, SIM.ivf_topk):
+        plan = op(emb, q, k=3)._jdf.queryExecution().optimizedPlan().toString()
+        pair = [line for line in plan.splitlines() if " AS sim#" in line]
+        assert len(pair) == 1, (op.__name__, plan)
+        assert pair[0].count("zip_with(") == 1, (op.__name__, pair[0])
 
 
 def test_incremental_minhash_reingested_doc(spark):

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from schemamap_spark.operators.packing import pack_sequences, packing_stats
 from schemamap_spark.session import load_table
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF001 as SF
 
 
 def _docs(spark, sizes):

@@ -14,7 +14,7 @@ from schemamap_spark.operators.dsir import dsir_select
 from schemamap_spark.operators.packing import pack_sequences
 from schemamap_spark.session import load_table
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF001 as SF
 
 
 def test_full_training_pipeline_composes(spark):

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
+from conftest import SF001 as SF_DIR
 
 
 def _pairs():

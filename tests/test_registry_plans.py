@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from schemamap_spark.plans.dryrun import tables_in_plan
+from conftest import SF001
 
 
 def test_update_function_definition(spark):
@@ -40,8 +41,8 @@ def test_update_function_definition(spark):
 
 
 def test_tables_in_plan(spark):
-    a = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-    b = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    a = spark.read.parquet(f"{SF001}/nation.parquet")
+    b = spark.read.parquet(f"{SF001}/customer.parquet")
     # the reference's MDE idiom: left join … and false still declares the table
     import pyspark.sql.functions as F
 

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from schemamap_spark.operators.sampling import assign_splits, deterministic_sample
 from schemamap_spark.session import load_table
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF001 as SF
 
 
 def test_splits_partition_everything(spark):
@@ -165,7 +165,7 @@ def test_mixture_sample_deterministic_replay(spark):
 def test_sample_n_per_group_deterministic_and_sized(spark):
     from schemamap_spark.operators.sampling import sample_n_per_group
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF, "documents")
     a = sorted(r.doc_id for r in sample_n_per_group(docs, "source", 3).collect())
     b = sorted(
         r.doc_id

@@ -8,11 +8,12 @@ from pyspark.sql import functions as F
 from schemamap_spark.catalog.types import pg_type_to_spark, spark_type_to_pg
 from schemamap_spark.operators.skew import bucketed_join, salted_join, write_bucketed
 from schemamap_spark.session import load_table
+from conftest import SF001
 
 
 def test_salted_join_equals_plain_join(spark):
-    c = load_table(spark, "/root/testdata/sf0.001", "customer")
-    n = load_table(spark, "/root/testdata/sf0.001", "nation").withColumnRenamed(
+    c = load_table(spark, SF001, "customer")
+    n = load_table(spark, SF001, "nation").withColumnRenamed(
         "n_nationkey", "c_nationkey"
     )
     plain = c.join(n, "c_nationkey").groupBy("n_name").count()
@@ -25,8 +26,8 @@ def test_salted_join_equals_plain_join(spark):
 def test_bucketed_join_no_shuffle(spark):
     from schemamap_spark.plans.dryrun import explain_str
 
-    o = load_table(spark, "/root/testdata/sf0.001", "orders")
-    c = load_table(spark, "/root/testdata/sf0.001", "customer").withColumnRenamed(
+    o = load_table(spark, SF001, "orders")
+    c = load_table(spark, SF001, "customer").withColumnRenamed(
         "c_custkey", "o_custkey"
     )
     write_bucketed(o, "b_orders", "o_custkey", 8)
@@ -47,7 +48,7 @@ def test_scan_pushdown_and_broadcast_plan_invariants(spark):
     from schemamap_spark.plans.dryrun import explain_str
     from schemamap_spark.suite.relational import q02_filter_in, q03_join_agg
 
-    sf = "/root/testdata/sf0.001"
+    sf = SF001
     p2 = explain_str(q02_filter_in(spark, sf))
     assert "In(o_orderstatus, [F,O])" in p2          # IN-list pushed to scan
     assert "GreaterThan(o_totalprice,1000.0)" in p2  # range pushed to scan
@@ -67,7 +68,7 @@ def test_cosine_near_pairs_no_bnlj_and_exact(spark):
     from schemamap_spark.operators.similarity import cosine, cosine_near_pairs
     from schemamap_spark.plans.dryrun import explain_str
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, SF001, "embeddings")
     pruned = cosine_near_pairs(emb, threshold=0.45)
     assert "BroadcastNestedLoopJoin" not in explain_str(pruned)
 
@@ -105,7 +106,7 @@ def test_streaming_dedup(spark, tmp_path):
     from schemamap_spark.streaming.pipeline import deduplicated_stream
 
     d = str(tmp_path / "dup_events")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").limit(200)
+    ev = load_table(spark, SF001, "events").limit(200)
     ev.write.mode("overwrite").parquet(d)
     ev.write.mode("append").parquet(d)  # every event twice
 
@@ -137,7 +138,7 @@ def test_range_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
 
     from schemamap_spark.sources.sinks import write_range_sorted
 
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
+    events = load_table(spark, SF001, "events")
     target = str(tmp_path / "events_sorted")
     write_range_sorted(events, target, ["user_id"], num_files=8)
 
@@ -229,7 +230,7 @@ def test_zordered_write_prunes_on_both_dimensions(spark, tmp_path):
     interleaved dimension. Content round-trips exactly."""
     from schemamap_spark.sources.sinks import write_range_sorted, write_zordered
 
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
+    events = load_table(spark, SF001, "events")
     z_dir, r_dir = str(tmp_path / "events_z"), str(tmp_path / "events_r")
     write_zordered(events, z_dir, ["user_id", "value"], num_files=16)
     write_range_sorted(events, r_dir, ["user_id"], num_files=16)
@@ -352,7 +353,7 @@ def test_compact_parquet_dir(spark, tmp_path):
     from schemamap_spark.sources.sinks import compact_parquet_dir
 
     d = str(tmp_path / "frag")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     for i in range(6):  # simulate streaming appends: many tiny files
         ev.filter(F.col("event_id") % 6 == i).repartition(4).write.mode(
             "append"

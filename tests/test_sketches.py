@@ -12,13 +12,14 @@ from schemamap_spark.operators.sketches import (
     ndv_estimates,
 )
 from schemamap_spark.session import load_table
+from conftest import SF001
 
 
 def test_union_of_batch_sketches_equals_full_batch(spark):
     """The mergeability contract: sketch(b1) ∪ sketch(b2) must estimate
     exactly what sketching the whole table does — register max is
     order/split-insensitive."""
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     cols = ["user_id", "event_type"]
     b1 = ev.filter(F.col("event_id") % 2 == 0)
     b2 = ev.filter(F.col("event_id") % 2 == 1)
@@ -34,7 +35,7 @@ def test_union_of_batch_sketches_equals_full_batch(spark):
 
 
 def test_ndv_accuracy_and_exact_small_domains(spark):
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     est = {r.column: r.ndv for r in ndv_estimates(
         column_sketches(ev, ["event_type", "user_id"])
     ).collect()}
@@ -46,7 +47,7 @@ def test_ndv_accuracy_and_exact_small_domains(spark):
 
 def test_incremental_store_roundtrip(spark, tmp_path):
     """Batches append ~KB sketch rows; the dashboard reads only the store."""
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     store_dir = str(tmp_path / "ndv_store")
     for i in range(3):
         append_sketches(
@@ -62,7 +63,7 @@ def test_incremental_store_roundtrip(spark, tmp_path):
 
 
 def test_double_column_casts_to_string(spark):
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     est = {r.column: r.ndv for r in ndv_estimates(
         column_sketches(ev, ["value"])
     ).collect()}
@@ -71,7 +72,7 @@ def test_double_column_casts_to_string(spark):
 
 
 def test_empty_cols_rejected(spark):
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     with pytest.raises(ValueError, match="non-empty"):
         column_sketches(ev, [])
 

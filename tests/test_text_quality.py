@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from schemamap_spark.functions import text as TX
+from conftest import SF001
 
 
 def _one(spark, text: str, col):
@@ -265,7 +266,7 @@ def test_perplexity_separates_garbage_from_corpus(spark):
     from schemamap_spark.operators.ngrams import bigram_lm_train, perplexity_score
     from schemamap_spark.session import load_table
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF001, "documents")
     lm, denom, V = bigram_lm_train(docs)
     lm, denom = lm.persist(), denom.persist()
 
