@@ -17,6 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from schemamap_spark.operators.dedup import (
+    decontaminate,
+    exact_digest,
+    incremental_exact_dedup,
+    jaccard_similar_pairs,
+)
+
 
 def hygiene_gate(
     docs: DataFrame,
@@ -109,7 +116,6 @@ def curate_corpus(
     lineage with the returned frame — persist upstream if aggregating them
     separately at scale would re-read the scan.
     """
-    from schemamap_spark.operators.dedup import jaccard_similar_pairs
     from schemamap_spark.operators.graph import connected_components
     from schemamap_spark.operators.sampling import assign_splits
 
@@ -122,18 +128,15 @@ def curate_corpus(
         # decontaminate AFTER the hygiene gate (smaller corpus side) and
         # BEFORE dedup (a contaminated representative must not shadow a
         # clean near-duplicate)
-        from schemamap_spark.operators.dedup import decontaminate
-
         scored = decontaminate(
             scored, benchmark, contamination_threshold, contamination_k,
             id_col=id_col, text_col=text_col,
         )
 
-    with_fp = scored.withColumn(
-        "fingerprint", F.md5(F.lower(F.trim(F.col(text_col))))
-    )
-    exact_reps = with_fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    survivors = with_fp.join(exact_reps, ["fingerprint", id_col], "left_semi")
+    # one row per digest, by the incremental store's representative rule;
+    # the output's column order stays fingerprint, id, then the gated columns
+    fresh, _ = incremental_exact_dedup(scored, id_col=id_col, text_col=text_col)
+    survivors = fresh.select("fingerprint", id_col, *[c for c in scored.columns if c != id_col])
 
     # id_col/text_col must reach the shingling stage: with non-default names
     # the old hardcoded call failed on missing doc_id/text — or silently
@@ -270,7 +273,7 @@ def corpus_report(
     g = (
         docs.withColumn("_q", quality_score(text_col))
         .withColumn("_tok", token_count(text_col))
-        .withColumn("_fp", F.md5(F.lower(F.trim(F.col(text_col)))))
+        .withColumn("_fp", exact_digest(text_col))
     )
     keys = [group_col] if group_col else []
     agged = g.groupBy(*keys).agg(
@@ -356,7 +359,7 @@ def _corpus_stats_partials_cached(
     g = (
         docs.withColumn("_q", quality_score(text_col))
         .withColumn("_tok", token_count(text_col))
-        .withColumn("_fp", F.md5(F.lower(F.trim(F.col(text_col)))))
+        .withColumn("_fp", exact_digest(text_col))
     )
     # the scored frame feeds BOTH partial outputs; unpersisted, the two
     # store writes would each re-run quality/token/digest over the batch

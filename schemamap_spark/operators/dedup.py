@@ -19,6 +19,11 @@ and are designed for the 100 TB regime:
                         within Hamming distance 3 shares ≥1 exact chunk) →
                         Hamming verification. No false negatives for k<=3.
 
+One core serves every path: exact_digest is the one exact-dup digest,
+ngrams.ngrams_from_tokens the one positional k-gram expression (shingles are
+its distinct set), _bucket_pairs the one i < j bucket self-join, and
+_drop_hot_keys the one max_df hot-key guard.
+
 Spark-first notes: everything is DataFrame ops + built-in functions (codegen
 stays on); the only shuffles are the groupBy/join on short keys; no Python
 row loops. sort_array/canonical ordering keeps outputs deterministic.
@@ -26,12 +31,23 @@ row loops. sort_array/canonical ordering keeps outputs deterministic.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from schemamap_spark.operators.ngrams import ngrams_from_tokens
+from schemamap_spark.session import ensure_parallelism
 
 
 def tokens(col: str = "text") -> F.Column:
     return F.split(F.col(col), " ")
+
+
+def exact_digest(text_col: str = "text") -> F.Column:
+    """The exact-dup digest, md5(lower(trim(text))): the format of the
+    incremental fingerprint store, so every exact-dup path uses this one."""
+    return F.md5(F.lower(F.trim(F.col(text_col))))
 
 
 def shingles_from_tokens(toks_col: str, k: int = 3) -> F.Column:
@@ -42,39 +58,19 @@ def shingles_from_tokens(toks_col: str, k: int = 3) -> F.Column:
     for every element access (k × n_tokens splits per document) — Catalyst's
     CollapseProject keeps a separately-projected non-cheap expression
     evaluated once."""
-    parts = ", ".join(f"{toks_col}[i - 1 + {j}]" for j in range(k))
-    # the short-doc guard must be a conditional, NOT greatest(..., 0):
-    # sequence(1, 0) yields the DESCENDING array [1, 0], whose transform then
-    # indexes past the token array (an ANSI-mode runtime error)
-    return F.array_distinct(
-        F.expr(
-            f"case when size({toks_col}) < {k} then cast(array() as array<string>) "
-            f"else transform(sequence(1, size({toks_col}) - {k - 1}), "
-            f"i -> concat_ws(' ', {parts})) end"
-        )
-    )
+    return F.array_distinct(ngrams_from_tokens(toks_col, k))
 
 
 def shingles(col: str = "text", k: int = 3) -> F.Column:
     """Shingles straight from a text column — only for one-shot expressions;
     prefer shingles_from_tokens via a projected token column in pipelines."""
-    base = f"split({col}, ' ')"
-    parts = ", ".join(f"{base}[i - 1 + {j}]" for j in range(k))
-    return F.array_distinct(
-        F.expr(
-            f"case when size({base}) < {k} then cast(array() as array<string>) "
-            f"else transform(sequence(1, size({base}) - {k - 1}), "
-            f"i -> concat_ws(' ', {parts})) end"
-        )
-    )
+    return shingles_from_tokens(f"split({col}, ' ')", k)
 
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (normalized) texts, one row per duplicated
     digest: (fingerprint, dup_count, doc_ids sorted)."""
-    with_fp = docs.select(
-        "doc_id", F.md5(F.lower(F.trim(F.col("text")))).alias("fingerprint")
-    )
+    with_fp = docs.select("doc_id", exact_digest().alias("fingerprint"))
     return (
         with_fp.groupBy("fingerprint")
         .agg(
@@ -85,23 +81,22 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingled(
-    docs: DataFrame, k: int, id_col: str = "doc_id", text_col: str = "text"
+def shingles_for(
+    docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
+    """(doc_id, sh) shingle sets of docs with at least k tokens — what every
+    shingle-based operator verifies on, and the old_shingles input for
+    incremental_minhash_dedup, computed over (only) the docs you pass."""
     # Small-file inputs arrive as 1-2 partitions; shingling/hashing is the
     # CPU-heavy fan-out, so spread it across the cluster FIRST. At 100 TB the
     # scan is already wide and AQE will coalesce the extra shuffle away.
-    from schemamap_spark.session import ensure_parallelism
-
     docs = ensure_parallelism(docs, id_col)
     # Filter on token count, not on size(sh): a size(sh)>0 predicate gets
     # pushed below the repartition and re-evaluates the whole shingle
     # expression on the narrow pre-shuffle plan. size(toks) >= k is the
     # equivalent cheap predicate.
     return (
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("toks")
-        )
+        docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
         .filter(F.size("toks") >= k)
         .select("doc_id", shingles_from_tokens("toks", k).alias("sh"))
     )
@@ -124,7 +119,7 @@ def jaccard_similar_pairs(
     # persisted so the 3 lineage branches (index + both verify sides) share
     # one computation; Spark's ContextCleaner unpersists it once the
     # returned DataFrame is garbage-collected on the driver
-    sh = _shingled(docs, k, id_col, text_col).persist()
+    sh = shingles_for(docs, k, id_col, text_col).persist()
     exploded = sh.select("doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s"))
 
     freq = exploded.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -207,6 +202,29 @@ def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFra
     return scored.select("i", "j", F.round("jac", 6).alias("jaccard")).orderBy("i", "j")
 
 
+def _bucket_pairs(
+    rows: DataFrame, keys: list[str], carry: str | None = None
+) -> DataFrame:
+    """Distinct (i, j) doc_id pairs with i < j that agree on every `keys`
+    column — the one candidate self-join of the banded paths (LSH band
+    buckets, simhash chunks). `carry` rides along as `<carry>_i` and
+    `<carry>_j`, so a verifier needing a per-doc value joins only once."""
+    a, b = rows.alias("a"), rows.alias("b")
+    on = reduce(
+        lambda x, y: x & y,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in keys]
+        + [F.col("a.doc_id") < F.col("b.doc_id")],
+    )
+    carried = [] if carry is None else [
+        F.col(f"a.{carry}").alias(f"{carry}_i"), F.col(f"b.{carry}").alias(f"{carry}_j")
+    ]
+    return (
+        a.join(b, on)
+        .select(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"), *carried)
+        .distinct()
+    )
+
+
 def _band_rows(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(doc_id, band, bucket) LSH band rows from a shingled frame — the ONE
     banding definition, shared by batch pair-finding and the incremental
@@ -278,30 +296,30 @@ def minhash_lsh_similar_pairs(
     exact-verified so false positives only cost join work. Band keys
     (band_id, hash(sig_slice)) are the only join key.
     """
+    return _lsh_pairs(docs, threshold, k, num_hashes, bands, id_col, text_col)[0]
+
+
+def _lsh_pairs(
+    docs: DataFrame, threshold: float, k: int, num_hashes: int, bands: int,
+    id_col: str, text_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(verified pairs, sh, banded) — the one MinHash-LSH candidate-and-
+    verify path, shared by batch mode and incremental mode's in-batch pairs
+    (so those equal batch mode by construction)."""
     # persisted: reused by the signature branch and both verify branches
-    sh = _shingled(docs, k, id_col, text_col).persist()
-    # banded persisted too: it feeds BOTH sides of the self-join below, and
-    # unpersisted the 64-minhash signature projection — the dominant CPU
-    # cost of the whole operator — is computed once PER SIDE (the r19
+    sh = shingles_for(docs, k, id_col, text_col).persist()
+    # banded persisted too: it feeds BOTH sides of the bucket self-join,
+    # and unpersisted the 64-minhash signature projection — the dominant
+    # CPU cost of the whole operator — is computed once PER SIDE (the r19
     # before-plan shows the full sig/banding subtree twice, nodes 10-12 and
     # 16-18; when one side broadcasts, exchange reuse can never dedup
     # them). Band rows are 3 small ints per (doc × band) — bounded
     # metadata, never the shingle arrays — so the cache is cheap at any
-    # scale; incremental_minhash_dedup has persisted the same frame since
-    # it shipped. Same ContextCleaner lifetime as `sh` above.
+    # scale; incremental mode also returns it as the new band-store rows.
+    # Same ContextCleaner lifetime as `sh` above.
     banded = _band_rows(sh, num_hashes, bands).persist()
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"))
-        .distinct()
-    )
-    return _verify_jaccard(cand, sh, threshold)
+    cand = _bucket_pairs(banded, ["band", "bucket"])
+    return _verify_jaccard(cand, sh, threshold), sh, banded
 
 
 def simhash_fingerprints(
@@ -315,7 +333,7 @@ def simhash_fingerprints(
     (doc_id, simhash). Engine-specific (xxhash64 has no portable SQL twin),
     so correctness is pinned by a committed golden parquet
     (tools/gen_simhash_golden.py) rather than a recomputing oracle."""
-    sh = _shingled(docs, k, id_col, text_col)
+    sh = shingles_for(docs, k, id_col, text_col)
     hashed = sh.select("doc_id", F.expr("transform(sh, s -> xxhash64(s))").alias("hs"))
 
     # SQL-string construction, same rationale as _band_rows: the 64 vote
@@ -389,24 +407,11 @@ def simhash_near_pairs(
         "simhash",
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_id", "chunk_val"),
     )
-    cand = (
-        chunked.alias("a")
-        .join(
-            chunked.alias("b"),
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("i"),
-            F.col("b.doc_id").alias("j"),
-            F.col("a.simhash").alias("h_i"),
-            F.col("b.simhash").alias("h_j"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(chunked, ["chunk_id", "chunk_val"], carry="simhash")
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j"))))
+        cand.withColumn(
+            "hamming", F.bit_count(F.col("simhash_i").bitwiseXOR(F.col("simhash_j")))
+        )
         .filter(F.col("hamming") <= max_hamming)
         .select("i", "j", "hamming")
         .orderBy("i", "j")
@@ -427,22 +432,17 @@ def winnow_fingerprints(
     All built-in Column ops (positional shingles -> xxhash64 -> windowed
     array_min -> distinct); output (id, fingerprints array<long>). Work is
     O(tokens * w) per doc and embarrassingly parallel."""
-    from schemamap_spark.session import ensure_parallelism
-
     docs = ensure_parallelism(docs, id_col)
-    parts = ", ".join(f"toks[i - 1 + {j}]" for j in range(k))
-    grams = (
-        f"transform(sequence(1, greatest(size(toks) - {k - 1}, 0)), "
-        f"i -> xxhash64(concat_ws(' ', {parts})))"
-    )
     fps = (
         f"array_distinct(transform(sequence(1, greatest(size(hs) - {w - 1}, 0)), "
         f"i -> array_min(slice(hs, i, {w}))))"
     )
     return (
-        docs.select(F.col(id_col), F.split(F.col(text_col), " ").alias("toks"))
+        docs.select(F.col(id_col), tokens(text_col).alias("toks"))
         .filter(F.size("toks") >= k)
-        .select(id_col, F.expr(grams).alias("hs"))
+        .select(
+            id_col, F.transform(ngrams_from_tokens("toks", k), lambda g: F.xxhash64(g)).alias("hs")
+        )
         .select(id_col, F.expr(fps).alias("fingerprints"))
     )
 
@@ -473,14 +473,9 @@ def containment_pairs(
     # jaccard_similar_pairs' shingle cache)
     fp = winnow_fingerprints(docs, k, w, id_col, text_col).persist()
     sizes = fp.select(F.col(id_col), F.size("fingerprints").alias("n_fp"))
-    ex = fp.select(F.col(id_col), F.explode("fingerprints").alias("f"))
-    if max_df is not None:
-        hot = (
-            ex.groupBy("f").agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("f")
-        )
-        ex = ex.join(F.broadcast(hot), "f", "left_anti")
+    ex = _drop_hot_keys(
+        fp.select(F.col(id_col), F.explode("fingerprints").alias("f")), "f", max_df
+    )
     shared = (
         ex.alias("a")
         .join(
@@ -505,6 +500,21 @@ def containment_pairs(
     )
 
 
+def _drop_hot_keys(rows: DataFrame, key: str, max_df: int | None) -> DataFrame:
+    """`rows` minus every row whose `key` value sits on more than max_df rows
+    (all of `rows` when max_df is None) — the one hot-key guard of the
+    inverted-index joins. Rows are one per (doc, key), so the row count is
+    the key's document frequency."""
+    if max_df is None:
+        return rows
+    hot = (
+        rows.groupBy(key).agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+        .select(key)
+    )
+    return rows.join(F.broadcast(hot), key, "left_anti")
+
+
 def contamination_report(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -527,13 +537,11 @@ def contamination_report(
     k-gram can only lower reported contamination of genuinely common text).
     """
     def grams(df: DataFrame, out_id: str) -> DataFrame:
-        # shingles() is already distinct, so the hashed grams are too
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.explode(
-                F.transform(shingles(text_col, k), lambda s: F.xxhash64(s))
-            ).alias("g"),
-        )
+        # tokens projected once per doc (the shingles_from_tokens rule);
+        # shingles are distinct, so the hashed grams are too
+        toks = df.select(F.col(id_col).alias(out_id), tokens(text_col).alias("toks"))
+        hashed = F.transform(shingles_from_tokens("toks", k), lambda g: F.xxhash64(g))
+        return toks.select(out_id, F.explode(hashed).alias("g"))
 
     bench = grams(benchmark, "bench_id")
     bench_sizes = bench.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bench_ngrams"))
@@ -544,13 +552,7 @@ def contamination_report(
         # would run twice (the bm25-index rule; cache lives with the plan)
         from pyspark import StorageLevel
 
-        corp = corp.persist(StorageLevel.MEMORY_AND_DISK)
-        hot = (
-            corp.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("g")
-        )
-        corp = corp.join(F.broadcast(hot), "g", "left_anti")
+        corp = _drop_hot_keys(corp.persist(StorageLevel.MEMORY_AND_DISK), "g", max_df)
 
     shared = (
         bench.join(corp, "g")
@@ -608,13 +610,11 @@ def incremental_exact_dedup(
     The representative is the least row by (`id_col` with NULL ids last,
     then the other columns in order), so a batch that repeats an id still
     yields one row per digest, and the same one whatever the input order.
-    The columns must be orderable (no map columns).
+    The columns must be orderable (no map columns). curate_corpus collapses
+    exact dups with this same call.
 
     At 100 TB: the anti-join keys are digests on both sides; with the store
     bucketed by fingerprint the join is shuffle-free on the store side."""
-    with_fp = new_docs.withColumn(
-        "fingerprint", F.md5(F.lower(F.trim(F.col(text_col))))
-    )
     # one aggregation picks the representative: min of a struct compares
     # field by field, so the id decides and the payload breaks its ties
     # (a struct orders NULL fields first, hence the leading isNull key)
@@ -622,7 +622,7 @@ def incremental_exact_dedup(
         c for c in new_docs.columns if c != id_col
     ]
     batch_unique = (
-        with_fp.groupBy("fingerprint")
+        new_docs.groupBy(exact_digest(text_col).alias("fingerprint"))
         .agg(F.min(F.struct(*key)).alias("_rep"))
         .select(*[F.col("_rep")[c].alias(c) for c in new_docs.columns], "fingerprint")
     )
@@ -672,21 +672,9 @@ def incremental_minhash_dedup(
     ignored, so pairs are emitted once with jaccard computed from the new
     text. (Callers refreshing a store should also replace the id's old band
     rows with the returned ones.)"""
-    sh_new = _shingled(new_docs, k, id_col, text_col).persist()
-    banded_new = _band_rows(sh_new, num_hashes, bands).persist()
-
-    cand_in = (
-        banded_new.alias("a")
-        .join(
-            banded_new.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"))
-        .distinct()
+    pairs, sh_new, banded_new = _lsh_pairs(
+        new_docs, threshold, k, num_hashes, bands, id_col, text_col
     )
-    pairs = _verify_jaccard(cand_in, sh_new, threshold)
 
     if band_store is not None:
         # Re-ingested doc_ids (present in both the batch and the store) make
@@ -726,14 +714,6 @@ def incremental_minhash_dedup(
     return pairs.orderBy("i", "j"), banded_new
 
 
-def shingles_for(
-    docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, sh) shingle sets — the old_shingles input for
-    incremental_minhash_dedup, computed over (only) the docs you pass."""
-    return _shingled(docs, k, id_col, text_col)
-
-
 def drop_repeated_lines(
     docs: DataFrame,
     max_doc_freq: int = 2,
@@ -757,8 +737,6 @@ def drop_repeated_lines(
     the per-document reassembly groupBy, bounded by document size. The df
     guard is exact (no sampling): boilerplate detection must not miss the
     one banner that is in half the corpus."""
-    from schemamap_spark.session import ensure_parallelism
-
     lines = (
         ensure_parallelism(docs, id_col)
         .select(

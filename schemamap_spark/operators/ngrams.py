@@ -36,10 +36,11 @@ from pyspark.sql import functions as F
 
 def ngrams_from_tokens(toks_col: str, n: int) -> F.Column:
     """ALL n-token grams (with repeats — tf needs multiplicity) from a
-    pre-split token-array column. Same tokenization and windowing as the
-    dedup shingles (operators/dedup.shingles_from_tokens) minus the distinct:
-    a conditional short-doc guard (sequence(1, 0) would DESCEND and index out
-    of bounds under ANSI mode) and concat_ws over materialized tokens."""
+    pre-split token-array column: the one positional k-gram expression
+    (dedup shingles are its array_distinct, winnowing hashes it). The
+    short-doc guard must be a conditional, NOT greatest(..., 0): sequence(1,
+    0) yields the DESCENDING array [1, 0], whose transform then indexes past
+    the token array (an ANSI-mode runtime error)."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     parts = ", ".join(f"{toks_col}[i - 1 + {j}]" for j in range(n))

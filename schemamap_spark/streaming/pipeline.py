@@ -192,7 +192,7 @@ def trending_ngrams_stream(
     scalable half. State is bounded by the watermark horizon; gram
     cardinality within a window is the working-set knob (pre-filter with
     stop_grams for unbounded vocabularies)."""
-    from schemamap_spark.operators.ngrams import ngrams_from_tokens
+    from schemamap_spark.operators.dedup import shingles_from_tokens
 
     grams = (
         docs.select(
@@ -203,7 +203,7 @@ def trending_ngrams_stream(
         .filter(F.size("toks") >= n)
         .select(
             "ts", "doc_id",
-            F.explode(F.array_distinct(ngrams_from_tokens("toks", n))).alias("gram"),
+            F.explode(shingles_from_tokens("toks", n)).alias("gram"),
         )
     )
     return (

@@ -483,6 +483,26 @@ def test_ab_flags_incorrect_and_failed_runs(ab, monkeypatch, capsys):
     assert rows["setup_s"][-1] == flagged
 
 
+def test_ab_stops_when_both_sides_fail_the_first_pair(ab, monkeypatch, capsys):
+    """A failure both trees share (a golden pinned to another scale, a
+    missing data dir) ends the run after one pair with the error."""
+    calls = []
+
+    def child(tree, seed):
+        calls.append((seed, tree))
+        return {"error": f"GoldenScaleMismatch in {tree}"}
+
+    monkeypatch.setattr(ab, "export_tree", lambda rev, stack: rev)
+    with pytest.raises(SystemExit) as ei:
+        ab.main(["OLD", "NEW", "--query", "dedup_simhash", "--seeds", "1-10"],
+                child=child)
+    assert calls == [(1, "OLD"), (1, "NEW")]
+    assert ei.value.code != 0
+    assert "parent: GoldenScaleMismatch in OLD" in str(ei.value.code)
+    assert "change: GoldenScaleMismatch in NEW" in str(ei.value.code)
+    assert capsys.readouterr().out == ""
+
+
 def test_ab_refuses_bad_operands_before_any_child(ab, monkeypatch, capsys):
     def never(*a, **k):
         raise AssertionError("nothing may run before the operands check")

@@ -14,6 +14,8 @@ from schemamap_spark.operators.bpe import (
 )
 from schemamap_spark.session import load_table
 
+from conftest import SF001
+
 CLASSIC = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
 
 
@@ -50,7 +52,7 @@ def test_bpe_tokenize_roundtrip_and_counts(spark):
 
 
 def test_bpe_distributed_equals_driver_encoding(spark):
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
+    docs = load_table(spark, SF001, "documents").limit(50)
     merges = bpe_train(docs, num_merges=50, sample_docs=50)
     rank = {m: i for i, m in enumerate(merges)}
     got = {r.doc_id: r.bpe_tokens for r in bpe_tokenize(docs, merges).collect()}
@@ -63,7 +65,7 @@ def test_bpe_distributed_equals_driver_encoding(spark):
 
 
 def test_bpe_train_deterministic_and_validated(spark):
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF001, "documents")
     m1 = bpe_train(docs, num_merges=30, sample_docs=40)
     m2 = bpe_train(docs, num_merges=30, sample_docs=40)
     assert m1 == m2

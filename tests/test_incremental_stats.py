@@ -13,7 +13,7 @@ from schemamap_spark.operators.curation import (
 )
 from schemamap_spark.session import load_table
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF001 as SF
 
 
 def test_merged_partials_match_full_batch(spark, tmp_path):

@@ -9,7 +9,7 @@ from schemamap_spark.operators import similarity as SIM
 from schemamap_spark.operators.graph import transitive_closure
 from schemamap_spark.session import load_table
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF001 as SF
 
 
 def test_jaccard_equals_minhash(spark):
@@ -706,6 +706,20 @@ def test_curate_corpus_is_deterministic(spark):
     assert a == b and len(a) > 0
 
 
+def test_curate_corpus_repeated_doc_id_keeps_one_row_per_digest(spark):
+    """A doc_id that repeats with the same text collapses to one row, as in
+    incremental_exact_dedup: the exact-dup stage keeps one row per digest."""
+    from schemamap_spark.operators.curation import curate_corpus
+    from schemamap_spark.operators.dedup import incremental_exact_dedup
+
+    t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    u = "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi"
+    docs = spark.createDataFrame([(1, t), (1, t), (2, u)], "doc_id long, text string")
+    got = sorted(r.doc_id for r in curate_corpus(docs, quality_min=0.0).collect())
+    fresh, _ = incremental_exact_dedup(docs)
+    assert got == sorted(r.doc_id for r in fresh.collect()) == [1, 2]
+
+
 def test_curate_corpus_repetition_gates_and_redaction(spark):
     """Repetition gates drop looping docs; redaction collapses docs that
     differ only in identifiers into exact duplicates."""
@@ -1285,6 +1299,9 @@ def test_incremental_dedup_bucketed_store_joins_without_store_shuffle(spark):
         assert fresh.count() == 5
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_incremental_minhash_matches_batch_mode(spark):
     """Splitting a corpus into two batches and running incremental minhash
     (batch 2 vs batch 1's band store) finds exactly the pairs batch mode
     finds on the union — banding is the same deterministic definition."""
@@ -2023,7 +2040,7 @@ def test_bm25_index_tokenizes_once(spark):
     reuse point, and the corpus text must be tokenized exactly once."""
     from schemamap_spark.operators.retrieval import bm25_index, bm25_topk
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF, "documents")
     q = docs.filter("doc_id <= 3").select(F.col("doc_id").alias("query_id"), "text")
 
     out = bm25_topk(docs, q, k=5, max_df_ratio=0.9)
@@ -2060,7 +2077,7 @@ def test_bm25_prebuilt_index_is_single_stats_source(spark):
     skew idf. `n_docs` overrides the index-derived N explicitly."""
     from schemamap_spark.operators.retrieval import bm25_index, bm25_topk
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF, "documents")
     small = docs.filter("doc_id <= 30")
     q = docs.filter("doc_id = 1").select(F.col("doc_id").alias("query_id"), "text")
 
@@ -2138,7 +2155,7 @@ def test_rrf_fuse_hand_computed(spark):
     # composes with the real BM25 output shape
     from schemamap_spark.operators.retrieval import bm25_topk
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF, "documents")
     q = docs.filter("doc_id = 1").select(F.col("doc_id").alias("query_id"), "text")
     r1 = bm25_topk(docs, q, k=5)
     r2 = bm25_topk(docs, q, k=5, b=0.0)  # second "system": no length norm
@@ -2275,7 +2292,7 @@ def test_hybrid_rerank_corpus_never_shuffles_or_broadcasts(spark):
     into a full corpus-vector shuffle or broadcast at real scale."""
     from schemamap_spark.operators.retrieval import hybrid_rerank_topk
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, SF, "embeddings")
     q = emb.filter("vec_id < 4")
     ranking = spark.createDataFrame(
         [(1, 5, 1), (1, 6, 2), (2, 7, 1), (3, 5, 1)],

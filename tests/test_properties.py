@@ -47,6 +47,79 @@ def test_merge_upsert_model(spark, target, updates):
     assert got == want
 
 
+# D9: an incremental dedup store gives the one-shot answer whatever the cut
+# of its input into batches. Texts draw from a tiny vocabulary so exact and
+# near duplicates are common; cut points split the rows into 1-4 batches.
+dup_text = st.lists(st.sampled_from(["a", "b", "c", "d"]), max_size=10).map(" ".join)
+cuts = st.lists(st.integers(0, 10), max_size=3)
+
+
+def _batches(spark, rows, cut_points):
+    bounds = sorted({0, len(rows), *(min(c, len(rows)) for c in cut_points)})
+    return [
+        spark.createDataFrame(rows[lo:hi], "doc_id long, text string")
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+
+
+@SET
+@given(
+    # ids and digests repeat often, within a batch and across batches
+    # (" A B" and "a b" share a digest)
+    rows=st.lists(
+        st.tuples(st.integers(0, 3), st.sampled_from(["a b", " A B", "b a", "", "c"])),
+        min_size=1,
+        max_size=10,
+    ),
+    cut_points=cuts,
+)
+def test_incremental_exact_dedup_is_cut_invariant(spark, rows, cut_points):
+    from schemamap_spark.operators.dedup import incremental_exact_dedup
+
+    store, digests = None, []
+    for batch in _batches(spark, rows, cut_points):
+        _, fps = incremental_exact_dedup(batch, store)
+        fps = fps.localCheckpoint()
+        digests += [r.fingerprint for r in fps.collect()]
+        store = fps if store is None else store.unionByName(fps)
+    one_shot, _ = incremental_exact_dedup(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    )
+    assert len(digests) == len(set(digests))
+    assert set(digests) == {r.fingerprint for r in one_shot.collect()}
+
+
+@SET
+@given(
+    texts=st.lists(dup_text, min_size=1, max_size=10),
+    cut_points=cuts,
+    threshold=st.sampled_from([0.3, 0.5, 0.8]),
+)
+def test_incremental_minhash_dedup_is_cut_invariant(spark, texts, cut_points, threshold):
+    from schemamap_spark.operators.dedup import (
+        incremental_minhash_dedup,
+        minhash_lsh_similar_pairs,
+        shingles_for,
+    )
+
+    opts = dict(threshold=threshold, k=2, num_hashes=16, bands=8)
+    seen, store, got = None, None, {}
+    for batch in _batches(spark, list(enumerate(texts)), cut_points):
+        old = None if seen is None else shingles_for(seen, k=2)
+        pairs, bands = incremental_minhash_dedup(batch, store, old, **opts)
+        for r in pairs.collect():
+            assert (r.i, r.j) not in got
+            got[(r.i, r.j)] = r.jaccard
+        bands = bands.localCheckpoint()
+        store = bands if store is None else store.unionByName(bands)
+        seen = batch if seen is None else seen.unionByName(batch)
+    want = {
+        (r.i, r.j): r.jaccard
+        for r in minhash_lsh_similar_pairs(seen, **opts).collect()
+    }
+    assert got == want
+
+
 @SET
 @given(
     edges=st.lists(st.tuples(ids, ids), min_size=0, max_size=15),

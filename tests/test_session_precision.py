@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from schemamap_spark.session import load_table
 
+from conftest import SF001, SF01
+
 # ns values chosen so double division demonstrably rounds wrong: each is
 # > 2^53 and its exact µs value ends in a digit double rounding perturbs.
 NS_CASES = [
@@ -46,15 +48,15 @@ def test_load_table_plan_cache(spark):
     never collide."""
     from schemamap_spark.session import load_table
 
-    a1 = load_table(spark, "/root/testdata/sf0.001", "nation")
-    a2 = load_table(spark, "/root/testdata/sf0.001", "nation")
+    a1 = load_table(spark, SF001, "nation")
+    a2 = load_table(spark, SF001, "nation")
     assert a1 is a2
-    b = load_table(spark, "/root/testdata/sf0.01", "nation")
+    b = load_table(spark, SF01, "nation")
     assert b is not a1  # keyed by dir
-    c = load_table(spark, "/root/testdata/sf0.001", "region")
+    c = load_table(spark, SF001, "region")
     assert c is not a1  # keyed by table
-    f = load_table(spark, "/root/testdata/sf0.001", "nation", fresh=True)
+    f = load_table(spark, SF001, "nation", fresh=True)
     assert f is not a1
     assert sorted(map(tuple, f.collect())) == sorted(map(tuple, a1.collect()))
     # fresh refreshed the cache entry
-    assert load_table(spark, "/root/testdata/sf0.001", "nation") is f
+    assert load_table(spark, SF001, "nation") is f

@@ -16,7 +16,9 @@ from schemamap_spark.sources.shards import (
     write_training_shards,
 )
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+from conftest import SF001
+
+SF = os.environ.get("SPARK_GRAFT_SF_DIR", SF001)
 
 
 @pytest.fixture(scope="module")

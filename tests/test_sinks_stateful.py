@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from schemamap_spark.session import load_table
 from schemamap_spark.sources.sinks import staged_merge_sql, write_parquet_atomic
 
+from conftest import SF001
+
 
 def test_staged_merge_sql():
     sql = staged_merge_sql(
@@ -107,7 +109,7 @@ def test_running_user_stats_stateful(spark, tmp_path):
     from schemamap_spark.streaming.pipeline import running_user_stats
 
     d = str(tmp_path / "ev")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").limit(500)
+    ev = load_table(spark, SF001, "events").limit(500)
     ev.repartition(2).write.mode("overwrite").parquet(d)
 
     stream = stream_events_from_directory(spark, d)

@@ -24,13 +24,15 @@ from schemamap_spark.streaming import (
     windowed_counts,
 )
 
+from conftest import SF001
+
 
 @pytest.fixture(scope="module")
 def stream_dir(spark, tmp_path_factory):
     """Events re-written as several micro-second-timestamp parquet files so
     the file stream has multiple triggers to chew through."""
     d = str(tmp_path_factory.mktemp("events_stream"))
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     ev.repartition(4).write.mode("overwrite").parquet(d)
     yield d
     shutil.rmtree(d, ignore_errors=True)
@@ -177,7 +179,7 @@ def test_continuous_rollup_cascade_matches_batch(spark, tmp_path):
     from schemamap_spark.streaming import continuous_hourly_rollup, daily_from_hourly
 
     d = str(tmp_path / "ev_in")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     ev.repartition(2).write.mode("overwrite").parquet(d)
     sentinel = ev.limit(1).select(
         (F.col("event_id") + 10_000_000).alias("event_id"),
@@ -220,7 +222,7 @@ def test_continuous_rollup_is_incremental(spark, tmp_path):
     from schemamap_spark.streaming import continuous_hourly_rollup
 
     d = str(tmp_path / "ev_in")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").limit(2000)
+    ev = load_table(spark, SF001, "events").limit(2000)
     ev.write.mode("overwrite").parquet(d)
     rollup, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
 
@@ -240,7 +242,7 @@ def test_curated_document_stream_matches_batch(spark, tmp_path):
     from schemamap_spark.streaming import curated_document_stream, start_memory_sink
 
     d = str(tmp_path / "docs_stream")
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF001, "documents")
     docs.repartition(3).write.mode("overwrite").parquet(d)
 
     kw = dict(quality_min=0.3, max_top_bigram_ratio=0.5, redact=True, normalize=True)
@@ -432,7 +434,7 @@ def test_dsir_gate_stream_matches_batch(spark, tmp_path):
     )
     from schemamap_spark.streaming import dsir_gate_stream
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF001, "documents")
     targ = docs.filter(F.col("source").isin("src0", "src1"))
     t_counts = bucket_counts(hashed_gram_features(targ), "ct")
     r_counts = bucket_counts(hashed_gram_features(docs), "cr")
@@ -472,7 +474,7 @@ def test_mixture_fill_stream_respects_budgets(spark, tmp_path):
     layout (Knuth-hash priority, not arrival luck)."""
     from schemamap_spark.streaming import mixture_fill_stream
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF001, "documents")
     tok = F.size(F.split("text", " ")).cast("long")
     totals = {
         r.source: r.t
@@ -526,7 +528,7 @@ def test_enrich_stream_sees_dimension_updates_between_batches(spark, tmp_path):
     )
     write_parquet_atomic(scd2_init(snap, "2020-01-01 00:00:00"), dim_dir)
 
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     src = str(tmp_path / "ev_in")
     ev.limit(100).repartition(2).write.mode("overwrite").parquet(src)
 
@@ -575,7 +577,7 @@ def test_dedup_store_survives_compaction(spark, tmp_path):
     )
     from schemamap_spark.streaming.pipeline import incremental_dedup_stream
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF001, "documents")
     src = str(tmp_path / "in")
     docs.repartition(4).write.mode("overwrite").parquet(src)
     fresh, store = str(tmp_path / "fresh"), str(tmp_path / "store")
@@ -643,7 +645,7 @@ def test_corpus_stats_stream_matches_batch(spark, tmp_path):
     )
     from schemamap_spark.streaming import corpus_stats_stream
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    docs = load_table(spark, SF001, "documents")
     src = str(tmp_path / "docs_src")
     docs.repartition(4).write.mode("overwrite").parquet(src)
 

@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from schemamap_spark.operators.temporal import asof_join, range_join
 
+from conftest import SF001
+
 
 def _ts(s):
     return dt.datetime.fromisoformat(s)
@@ -38,7 +40,7 @@ def test_asof_basic_and_tie_and_nomatch(spark):
 def test_asof_preserves_left_rowcount(spark):
     from schemamap_spark.session import load_table
 
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    ev = load_table(spark, SF001, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "ts", F.col("event_id").alias("vid")

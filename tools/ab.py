@@ -93,7 +93,10 @@ def query_child(query: str):
 
 def run_pairs(trees: dict[str, str], seeds: list[int], child) -> dict:
     """side -> [(seed, result)], pair i running `child(tree, seeds[i])`
-    on both sides, parent first on even i and change first on odd i."""
+    on both sides, parent first on even i and change first on odd i.
+    Exits non-zero after the first pair when both sides fail: the same
+    failure (say a golden pinned to another scale) would repeat in
+    every later pair."""
     runs: dict[str, list] = {side: [] for side in SIDES}
     for i, seed in enumerate(seeds):
         for side in SIDES if i % 2 == 0 else SIDES[::-1]:
@@ -101,6 +104,9 @@ def run_pairs(trees: dict[str, str], seeds: list[int], child) -> dict:
             runs[side].append((seed, r))
             print(f"# seed {seed} {side}: {r.get('metrics', r)}",
                   file=sys.stderr, flush=True)
+        if i == 0 and all("error" in runs[side][0][1] for side in SIDES):
+            sys.exit("both sides failed the first pair, stopping:\n" + "\n".join(
+                f"{side}: {runs[side][0][1]['error']}" for side in SIDES))
     return runs
 
 
