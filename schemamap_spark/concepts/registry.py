@@ -40,6 +40,11 @@ class ConceptRegistry:
         self.version += 1
         return name
 
+    def builtin_definitions(self) -> tuple:
+        """(name, factory) per builtin concept: unchanged by a define of a new
+        name, changed by redefining a builtin (functions compare by identity)."""
+        return tuple((n, self._concepts.get(n)) for n in sorted(BUILTIN_CONCEPTS))
+
     def names(self) -> list[str]:
         return sorted(self._concepts)
 

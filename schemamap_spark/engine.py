@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +24,8 @@ from schemamap_spark.entities.candidates import master_data_entity_candidates
 from schemamap_spark.entities.registry import EntityRegistry
 from schemamap_spark.mapping.bidi import BidiMappingRegistry
 from schemamap_spark.smo.builder import build_smo
+from schemamap_spark.sources import fscommit
+from schemamap_spark.sources.sinks import _swap_into_place
 
 
 class SchemamapEngine:
@@ -61,23 +64,26 @@ class SchemamapEngine:
         blocked; parquet dirs are immutable once written). The swap routes
         through sources/fscommit, so a warehouse on hdfs:// (or any
         real-rename scheme) commits the same way a local one does."""
-        from schemamap_spark.sources import fscommit
-        from schemamap_spark.sources.sinks import _swap_into_place
-
-        # canonical sort only when persisting (byte-stable snapshot files);
-        # in-memory consumers (status, concepts) don't pay for it
         # refresh is the user's "re-read the catalog" signal: drop the
         # candidates plan memo too (columns/status memos key on the SMO
         # snapshot identity, which this method rebinds)
         self._plans.pop("candidates", None)
-        smo = build_smo(self.catalog, ordered=self.warehouse_dir is not None)
+        smo = build_smo(self.catalog)
         if self.warehouse_dir:
             fs = fscommit.fs_for(self.warehouse_dir, self.spark)
             target = fscommit.join(self.warehouse_dir, "smo")
             tmp = fs.mktempdir(self.warehouse_dir, ".smo_new_")
-            smo.write.mode("overwrite").parquet(tmp)
+            # hash partitions on (schema, table), one per core, each sorted
+            # on the unique canonical key (SCHEMA:967): byte-stable files. A
+            # global orderBy's range sampler would run the SMO joins twice,
+            # and its bounds move between runs.
+            width = self.spark.sparkContext.defaultParallelism
+            smo.repartition(width, "schema_name", "table_name").sortWithinPartitions(
+                "schema_name", "table_name", "column_name"
+            ).write.mode("overwrite").parquet(tmp)
             _swap_into_place(tmp, target, fs)
-            self._smo = self.spark.read.parquet(target)
+            # the written schema: the re-read runs no schema-inference job
+            self._smo = self.spark.read.schema(smo.schema).parquet(target)
         else:
             self._smo = smo.localCheckpoint(eager=not concurrently) if smo.isStreaming is False else smo
         return self._smo
@@ -93,7 +99,9 @@ class SchemamapEngine:
     ) -> DataFrame:
         """The frame last built for `slot`, reused while `anchor` is the same
         object (`is`) and `version` is equal; otherwise `build()` replaces it.
-        Only the plan is kept: every action on the frame still recomputes."""
+        A hit reuses data, not only the plan: under AQE an action re-runs the
+        frame's finalized adaptive plan and skips every map stage, so what
+        passed a shuffle is as of the frame's first action."""
         hit = self._plans.get(slot)
         if hit is not None and hit[0] is anchor and hit[1] == version:
             return hit[2]
@@ -104,24 +112,24 @@ class SchemamapEngine:
     def columns(self) -> DataFrame:
         """Wide, concept-extended view (the reference's dynamic `columns`).
 
-        The PLAN is memoized per (concept-registry version, SMO snapshot):
-        building the 15 concept expression trees costs ~0.3 s of driver
-        wall per call (r18 profile) for a view whose definition only
-        changes on define_concept / refresh — the reference likewise
-        regenerates its view on (re)definition, not per SELECT. Reference
-        identity (`is`) keys the snapshot: refresh() rebinds self._smo, so
-        a stale plan can never survive a refresh. Every action on the
-        returned frame still recomputes from the snapshot — this caches no
-        data beyond what the localCheckpoint already holds."""
+        Memoized per (concept-registry version, SMO snapshot): building the
+        15 concept expression trees costs ~0.3 s of driver wall per call
+        (r18 profile) for a view whose definition only changes on
+        define_concept / refresh — the reference likewise regenerates its
+        view on (re)definition, not per SELECT. Reference identity (`is`)
+        keys the snapshot: refresh() rebinds self._smo, so a stale frame
+        never survives a refresh. A hit reuses the frame's shuffle output
+        (see _memo), which is sound because a snapshot is immutable."""
         smo = self.smo()
         return self._memo(
             "columns", smo, self.concepts.version, lambda: self.concepts.wide_columns(smo)
         )
 
     def status(self) -> DataFrame:
-        # same plan-memo discipline (and invalidation key) as columns()
+        # keyed on the builtin concepts, the only ones the aggregate reads:
+        # a user define keeps the frame and its shuffle output (see _memo)
         return self._memo(
-            "status", self.smo(), self.concepts.version,
+            "status", self.smo(), self.concepts.builtin_definitions(),
             lambda: status_aggregate(self.columns()),
         )
 
@@ -135,17 +143,13 @@ class SchemamapEngine:
         return json.dumps(row, indent=2, sort_keys=True, default=str)
 
     def master_data_entity_candidates(self) -> DataFrame:
-        # plan-memo per catalog (same discipline as columns()/status()):
-        # the candidate-ranking PLAN is a pure function of the catalog's
-        # scan definitions — data-independent — so rebuilding its
-        # expression trees per call only costs driver wall. The memo is
-        # only sound for LAZY adapters (parquet/JDBC scans re-read their
-        # source on every action); an adapter that materializes catalog
-        # snapshots at plan-build time (SparkNativeCatalog's local
-        # relation of the listed tables) would freeze the table
-        # set forever, so those skip the memo entirely (ADVICE r18).
-        # refresh() also clears the memo — it is the user's explicit
-        # "re-read the catalog" signal.
+        # memo per catalog, like columns()/status(). A hit reuses the frame's
+        # shuffle output (see _memo): for a lazy adapter (parquet/JDBC scans)
+        # the rows are as of the first call since the last refresh(), the
+        # user's "re-read the catalog" signal, which clears the memo. An
+        # adapter that materializes catalog snapshots at plan-build time
+        # (SparkNativeCatalog's local relation of the listed tables) skips
+        # the memo entirely (ADVICE r18).
         if getattr(self.catalog, "materializes_snapshots", False):
             return master_data_entity_candidates(self.catalog)
         return self._memo(
@@ -160,8 +164,6 @@ class SchemamapEngine:
         engine's catalog adapter when it exposes role/grant scans (the JDBC
         adapter pushes the raw pg_auth_members / role_table_grants reads down
         to the server), else from the repo doctor fixtures."""
-        import os
-
         from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
         from schemamap_spark.operators.graph import transitive_closure
 
@@ -210,8 +212,6 @@ class SchemamapEngine:
         }
 
     def _i18n_path(self) -> str | None:
-        from schemamap_spark.sources import fscommit
-
         return (
             fscommit.join(self.warehouse_dir, "i18n.json")
             if self.warehouse_dir
@@ -222,8 +222,6 @@ class SchemamapEngine:
         """The reference stores i18n in-database (SCHEMA:258-277); with a
         warehouse dir the store is a JSON file that survives engine restarts,
         loaded lazily on first read."""
-        from schemamap_spark.sources import fscommit
-
         path = self._i18n_path()
         if not self._i18n and path:
             fs = fscommit.fs_for(self.warehouse_dir, self.spark)
@@ -235,10 +233,6 @@ class SchemamapEngine:
         """Shallow-merge like the reference's `i18n_stored || $1` jsonb update
         (SCHEMA:266-277); persisted through the warehouse when one exists —
         write-temp + atomic replace through the fscommit seam."""
-        import uuid
-
-        from schemamap_spark.sources import fscommit
-
         self._i18n = {**self.i18n(), **doc}
         path = self._i18n_path()
         if path:

@@ -506,9 +506,12 @@ def _bucket_col(vec: F.Column, weights: F.Column) -> F.Column:
         ).otherwise(F.lit(0)),
     )
     # bucket id = sum(bit_p * 2^p); fold MSB-first so plane 0 lands in the LSB,
-    # matching the historical unrolled formula bit for bit
-    return F.aggregate(
-        F.reverse(proj_bits), F.lit(0).cast("long"), lambda acc, b: acc * 2 + b
+    # matching the historical unrolled formula bit for bit. The coalesce
+    # (never taken: weights are never NULL) types the bucket non-null, so a
+    # join's inferred isnotnull(bucket) is not a second evaluation per row.
+    return F.coalesce(
+        F.aggregate(F.reverse(proj_bits), F.lit(0).cast("long"), lambda acc, b: acc * 2 + b),
+        F.lit(0).cast("long"),
     )
 
 

@@ -15,8 +15,10 @@ Scale design (100 TB-catalog mindset — think "millions of columns"):
   join back to columns, so the join is 1:1 (no row multiplication, no
   re-aggregation).
 - Arrays are sort_array()-canonicalized: deterministic output regardless of
-  partitioning / task order, which is what makes golden tests and atomic
-  refresh snapshots byte-stable.
+  partitioning / task order, which is what makes golden tests byte-stable.
+- No global sort: a range sampler would compute the joins twice. A persisted
+  snapshot is byte-stable through engine.refresh's layout (hash partitions,
+  each sorted on the canonical key); its read-back order is no sort order.
 """
 
 from __future__ import annotations
@@ -68,18 +70,13 @@ def _per_column_indexes(indexes: DataFrame) -> DataFrame:
     )
 
 
-def build_smo(catalog: CatalogAdapter, ordered: bool = False) -> DataFrame:
+def build_smo(catalog: CatalogAdapter) -> DataFrame:
     """Raw catalog frames → SMO DataFrame (schema per SMO_COLUMNS).
 
     Null-handling choice: columns with no constraints/indexes carry EMPTY
     arrays (not null) — concepts then compose with `F.exists` without null
     guards; the reference's NULL-from-FILTER jsonb behaves equivalently under
     its `exists(jsonb_array_elements(...))` tests.
-
-    `ordered` applies the reference's canonical (schema, table, column) sort
-    (SCHEMA:967) — wanted when PERSISTING a snapshot or printing, but a pure
-    cost for aggregate consumers (a global sort feeding an agg is ~5x the
-    whole status query); default off, consumers order at the edge.
     """
     rel = catalog.relations().filter(F.col("has_usage"))
     cols = catalog.columns()
@@ -93,16 +90,13 @@ def build_smo(catalog: CatalogAdapter, ordered: bool = False) -> DataFrame:
     con = _per_column_constraints(catalog.constraints())
     idx = _per_column_indexes(catalog.indexes())
 
-    out = (
+    return (
         base.join(con, on=[*_KEY, "attnum"], how="left")
         .join(idx, on=[*_KEY, "attnum"], how="left")
         .withColumn("constraints", F.coalesce("constraints", F.array().cast("array<struct<name:string,type:string,definition:string,sequence_name:string>>")))
         .withColumn("indexes", F.coalesce("indexes", F.array().cast("array<struct<name:string,type:string,definition:string,immediate:boolean>>")))
         .select(*SMO_COLUMNS)
     )
-    if ordered:
-        return out.orderBy("schema_name", "table_name", "column_name")
-    return out
 
 
 # Scalar (per-column) attributes compared by smo_diff; constraint/index

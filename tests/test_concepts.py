@@ -67,12 +67,19 @@ def test_status_consistency(engine):
     assert st.pii_count > 0 and st.indexed_count > 0
 
 
-def test_columns_plan_memo_invalidation(engine):
-    """r18: columns()/status() memoize the concept-wide PLAN per
-    (registry version, SMO snapshot). The memo must be invisible:
+def test_columns_plan_memo_invalidation(spark):
+    """columns() memoizes the concept-wide frame per (registry version, SMO
+    snapshot); status() per (builtin concept definitions, SMO snapshot),
+    the only concepts its aggregate reads. The memo must be invisible:
     repeated calls return the same prepared frame (no per-call expression
-    rebuild), a define_concept invalidates it immediately, and refresh()
-    rebinds it to the new snapshot."""
+    rebuild), a define_concept invalidates columns() immediately and
+    status() when it redefines a builtin, and refresh() rebinds both to the
+    new snapshot. A fresh engine: the builtin redefinition must not leak."""
+    from schemamap_spark import SchemamapEngine
+    from schemamap_spark.catalog import FixtureCatalog
+    from schemamap_spark.concepts.builtins import BUILTIN_CONCEPTS
+
+    engine = SchemamapEngine(spark, FixtureCatalog(spark))
     w1 = engine.columns()
     assert engine.columns() is w1  # plan reuse, not a rebuild
     s1 = engine.status()
@@ -82,7 +89,12 @@ def test_columns_plan_memo_invalidation(engine):
     w2 = engine.columns()
     assert w2 is not w1
     assert "is_memo_probe" in [f.name for f in w2.schema.fields]
-    assert engine.status() is not s1  # status keys on the same version
+    assert engine.status() is s1  # a user concept adds no status counter
+
+    engine.concepts.define("pii", lambda smo: BUILTIN_CONCEPTS["pii"](smo))
+    s2 = engine.status()
+    assert s2 is not s1  # a redefined builtin changes what status counts
+    assert s2.collect() == s1.collect()  # (same rule, new definition)
 
     smo_before = engine.smo()
     engine.refresh()
@@ -90,6 +102,7 @@ def test_columns_plan_memo_invalidation(engine):
     w3 = engine.columns()
     assert w3 is not w2  # new snapshot -> new plan
     assert "is_memo_probe" in [f.name for f in w3.schema.fields]
+    assert engine.status() is not s2
 
 
 def test_builtin_sql_forms_match_column_forms(engine):

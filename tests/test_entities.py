@@ -206,7 +206,7 @@ def _fresh_engine(spark):
     return SchemamapEngine(spark, FixtureCatalog(spark))
 
 
-def _jobs_in_group(spark, fn) -> int:
+def _job_ids_in_group(spark, fn) -> list[int]:
     import uuid
 
     sc = spark.sparkContext
@@ -217,7 +217,11 @@ def _jobs_in_group(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_in_group(spark, fn) -> int:
+    return len(_job_ids_in_group(spark, fn))
 
 
 def test_status_json_runs_only_the_status_jobs(spark):
@@ -252,6 +256,83 @@ def test_status_json_runs_only_the_status_jobs(spark):
     assert [r.mde_name for r in engine.entities.list_mdes().collect()] == ["jobs_probe"]
     assert engine.entities.list_tenants().schema == TENANTS_SCHEMA
     assert native.constraints().count() == 0 and native.indexes().count() == 0
+
+
+def test_user_define_keeps_the_status_memo(spark):
+    """status() keys on the builtin concept definitions, the only ones its
+    aggregate reads: after a warm status_json, a user define followed by
+    status_json runs exactly the jobs of a memo hit."""
+    engine = _fresh_engine(spark)
+    engine.status_json()
+    hit = _jobs_in_group(spark, engine.status_json)
+
+    def define_then_status():
+        engine.concepts.define("jobs_probe", lambda smo: smo["attnum"] <= 2)
+        return engine.status_json()
+
+    assert _jobs_in_group(spark, define_then_status) == hit
+
+
+def test_status_memo_hit_reuses_shuffle_output(spark):
+    """A memo hit re-runs the frame's finalized adaptive plan: every map
+    stage of its jobs is skipped (it reads the first action's shuffle
+    output), and only each job's result stage runs tasks."""
+    engine = _fresh_engine(spark)
+    engine.status().collect()
+    jobs = _job_ids_in_group(spark, lambda: engine.status().collect())
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        [tracker.getStageInfo(s) for s in tracker.getJobInfo(j).stageIds] for j in jobs
+    ]
+    assert any(len(st) > 1 for st in stages), stages  # there are map stages
+    for st in stages:
+        assert [s.numCompletedTasks > 0 for s in st].count(True) == 1, st
+
+
+def test_refresh_writes_byte_stable_snapshot_files(spark, tmp_path):
+    """Two refreshes of one unchanged catalog write files with identical
+    content: the layout is a hash partitioning plus a per-partition sort on
+    the unique (schema, table, column) key, with no sampled range bounds
+    that move between runs. The catalog is the fixture replicated 20 times
+    under tenant prefixes (perfbench's dashboard catalog, ~33k SMO rows), so
+    the snapshot spans several files."""
+    import hashlib
+    import os
+
+    from perfbench import gen
+
+    from schemamap_spark import SchemamapEngine
+    from schemamap_spark.catalog import FixtureCatalog
+
+    catalog = gen.catalog(str(tmp_path / "catalog"), 1, 20)
+    wh = str(tmp_path / "wh")
+    engine = SchemamapEngine(spark, FixtureCatalog(spark, catalog), warehouse_dir=wh)
+
+    def digests() -> list[str]:
+        d = os.path.join(wh, "smo")
+        return sorted(
+            hashlib.sha256(open(os.path.join(d, f), "rb").read()).hexdigest()
+            for f in os.listdir(d)
+            if f.endswith(".parquet")
+        )
+
+    engine.refresh()
+    first = digests()
+    engine.refresh()
+    assert len(first) > 1 and digests() == first
+
+
+def test_refresh_runs_no_range_sampler(spark, tmp_path):
+    """refresh() writes its snapshot without a global sort, whose range
+    sampler would compute the SMO joins a second time, and re-reads it
+    with the written schema (no schema-inference job): 7 jobs per warm
+    refresh, where the sorted write and the inferring re-read took 9."""
+    from schemamap_spark import SchemamapEngine
+    from schemamap_spark.catalog import FixtureCatalog
+
+    engine = SchemamapEngine(spark, FixtureCatalog(spark), warehouse_dir=str(tmp_path))
+    engine.refresh()
+    assert _jobs_in_group(spark, engine.refresh) == 7
 
 
 def _old_status_json(engine) -> str:

@@ -1601,6 +1601,18 @@ def test_topk_pair_projection_holds_one_dot_product(spark):
         assert pair[0].count("zip_with(") == 1, (op.__name__, pair[0])
 
 
+def test_lsh_topk_evaluates_each_bucket_once(spark):
+    """The join on the hyperplane bucket infers isnotnull(bucket); were the
+    bucket nullable, Catalyst would push that filter below each side's
+    projection and evaluate the bucket twice per row. One copy per side."""
+    emb = load_table(spark, SF, "embeddings")
+    q = emb.filter(F.col("vec_id") < 4)
+    for multi_probe in (0, 1):
+        df = SIM.lsh_topk(emb, q, k=3, multi_probe=multi_probe)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("aggregate(reverse(transform(W") == 2, (multi_probe, plan)
+
+
 def test_incremental_minhash_reingested_doc(spark):
     """A doc_id present in both the store and the new batch (re-ingest)
     resolves new-batch-wins: each pair is emitted exactly once, with jaccard
