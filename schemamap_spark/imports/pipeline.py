@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from schemamap_spark.imports.states import MigrationState, check_transition
 from schemamap_spark.imports.validation import ColumnRule, validate
 from schemamap_spark.mapping.bidi import BidiMappingRegistry
+from schemamap_spark.session import col_named
 from schemamap_spark.sources.merge import merge_upsert
 
 
@@ -187,15 +188,17 @@ class ImportPipeline:
         casts: target_col -> Spark type string applied after mapping."""
         mid = self._record(mde_name, source)
         loaded = 0
+        casts = casts or {}
         try:
-            mapped = staging.select(
-                *[
-                    self.mappings.forward(fn_name)(F.col(src)).alias(dst)
-                    for src, (dst, fn_name) in column_mappings.items()
-                ]
-            )
-            for col, typ in (casts or {}).items():
-                mapped = mapped.withColumn(col, F.col(col).cast(typ))
+            unmapped = set(casts) - {dst for dst, _ in column_mappings.values()}
+            if unmapped:
+                raise ValueError(f"no mapping produces cast column(s) {sorted(unmapped)}")
+            # one projection (one eager analysis) for mappings and casts
+            cols = []
+            for src, (dst, fn_name) in column_mappings.items():
+                c = self.mappings.forward(fn_name)(col_named(src))
+                cols.append((c.cast(casts[dst]) if dst in casts else c).alias(dst))
+            mapped = staging.select(*cols)
             self._transition(mid, MigrationState.LOADED)
         except Exception as e:  # load/mapping failure path
             self._transition(mid, MigrationState.LOAD_FAILED, {"error": str(e)})
@@ -209,7 +212,10 @@ class ImportPipeline:
             # ONE action / ONE scan for the whole funnel accounting — the
             # mapping select preserves row count, so loaded == ok + bad.
             # Counting loaded/violations/clean as three separate actions
-            # recomputed scan+mapping+validation three times.
+            # recomputed scan+mapping+validation three times. validate()
+            # has already resolved its key sets, so this count and the
+            # later write of `merged` share them; each still parses the
+            # staging batch once.
             counts = import_counts(checked).collect()[0]
             loaded, n_ok, n_bad = counts.loaded, counts.valid, counts.violation_rows
 

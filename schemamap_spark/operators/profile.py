@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from schemamap_spark.session import col_named
+
 
 def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """(column, n_rows, n_nulls, null_ratio, approx_ndv, min_value,
@@ -41,10 +43,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         )
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, c in enumerate(cols):
-        # bare F.col(c) PARSES the name — a dot becomes nested-field access,
-        # an unpaired backtick is a syntax error; quote it (`` escapes `)
-        # so any legal column name resolves as itself
-        col = F.col("`" + c.replace("`", "``") + "`")
+        col = col_named(c)
         aggs += [
             F.sum(col.isNull().cast("long")).alias(f"__nul_{i}"),
             F.approx_count_distinct(col).alias(f"__ndv_{i}"),

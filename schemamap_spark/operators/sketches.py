@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from schemamap_spark.session import col_named
+
 # types hll_sketch_agg accepts natively (it REJECTS smallint/tinyint —
 # verified against Spark 4.1: DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE);
 # narrow ints widen to int (value-preserving), everything else casts to
@@ -34,9 +36,7 @@ _WIDEN = {"smallint", "tinyint"}
 
 def _sketchable(df: DataFrame, col: str) -> F.Column:
     t = dict(df.dtypes)[col]
-    # bare F.col(col) PARSES the name (dots nest, unpaired backticks are a
-    # syntax error); backtick-quote it so any legal name resolves as itself
-    c = F.col("`" + col.replace("`", "``") + "`")
+    c = col_named(col)
     if t in _NATIVE:
         return c
     if t in _WIDEN:

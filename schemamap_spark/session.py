@@ -35,7 +35,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Tables provided by the driver test data (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -128,6 +129,14 @@ def configure_session(spark: SparkSession) -> SparkSession:
     # unless read as long; load_table converts back to timestamp.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def col_named(name: str) -> Column:
+    """The column called `name`, taken whole. A bare `F.col(name)` parses
+    the name: a dot becomes struct-field access and an unpaired backtick a
+    syntax error. Backtick-quoted (`` escapes `), any legal column name,
+    such as the spreadsheet header `user.email`, resolves as itself."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:

@@ -25,3 +25,22 @@ def engine(spark):
     from schemamap_spark.catalog import FixtureCatalog
 
     return SchemamapEngine(spark, FixtureCatalog(spark))
+
+
+def job_ids_in_group(spark, fn) -> list[int]:
+    """The ids of the Spark jobs that `fn()` runs, read by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jobs_probe_" + uuid.uuid4().hex[:8]
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_in_group(spark, fn) -> int:
+    return len(job_ids_in_group(spark, fn))

@@ -7,12 +7,14 @@ import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _run_cli(*args: str) -> tuple[int, str, str]:
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO)
     p = subprocess.run(
         [sys.executable, "-m", "schemamap_spark.cli", *args],
-        capture_output=True, text=True, cwd="/root/repo", env=env, timeout=300,
+        capture_output=True, text=True, cwd=REPO, env=env, timeout=300,
     )
     return p.returncode, p.stdout, p.stderr
 

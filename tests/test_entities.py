@@ -9,13 +9,13 @@ from pyspark.sql import functions as F
 from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
 from schemamap_spark.entities import TENANTS_SCHEMA
 
+from conftest import job_ids_in_group, jobs_in_group
+
 
 def test_tenants_default_empty_then_override(spark, engine):
     assert engine.entities.list_tenants().count() == 0
-    fixture_dir = "/root/repo/fixtures"
-
     engine.entities.define_tenants(
-        lambda s: s.read.parquet(f"{fixture_dir}/tenants.parquet")
+        lambda s: s.read.parquet(f"{DEFAULT_FIXTURE_DIR}/tenants.parquet")
     )
     t = engine.entities.list_tenants()
     assert t.count() == 25
@@ -28,7 +28,7 @@ def test_tenants_default_empty_then_override(spark, engine):
 def test_mde_registry(spark, engine):
     engine.entities.define_master_data_entity(
         "organizations",
-        lambda s: s.read.parquet("/root/repo/fixtures/organizations.parquet"),
+        lambda s: s.read.parquet(f"{DEFAULT_FIXTURE_DIR}/organizations.parquet"),
     )
     assert [r.mde_name for r in engine.entities.list_mdes().collect()] == ["organizations"]
     assert spark.table("mde_organizations").count() == 200
@@ -47,7 +47,7 @@ def test_candidate_ranking(engine):
 
 
 def test_i18n_roundtrip(engine):
-    doc = json.load(open("/root/repo/fixtures/i18n.json"))
+    doc = json.load(open(f"{DEFAULT_FIXTURE_DIR}/i18n.json"))
     engine.update_i18n(doc)
     assert engine.i18n()["en"]["models"]["organizations"] == "Organizations"
     engine.update_i18n({"fr": {"models": {}}})
@@ -206,24 +206,6 @@ def _fresh_engine(spark):
     return SchemamapEngine(spark, FixtureCatalog(spark))
 
 
-def _job_ids_in_group(spark, fn) -> list[int]:
-    import uuid
-
-    sc = spark.sparkContext
-    group = "jobs_probe_" + uuid.uuid4().hex[:8]
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def _jobs_in_group(spark, fn) -> int:
-    return len(_job_ids_in_group(spark, fn))
-
-
 def test_status_json_runs_only_the_status_jobs(spark):
     """The tenant and MDE lists of status_json come from the driver-side
     registry: a warm status_json runs exactly the jobs of the status
@@ -237,9 +219,9 @@ def test_status_json_runs_only_the_status_jobs(spark):
         lambda s: s.read.parquet(f"{DEFAULT_FIXTURE_DIR}/organizations.parquet"),
     )
     engine.status_json()  # warm: snapshot, plan memo, codegen
-    status_jobs = _jobs_in_group(spark, lambda: engine.status().collect())
+    status_jobs = jobs_in_group(spark, lambda: engine.status().collect())
     assert status_jobs > 0
-    assert _jobs_in_group(spark, engine.status_json) == status_jobs
+    assert jobs_in_group(spark, engine.status_json) == status_jobs
 
     native = SparkNativeCatalog(spark)
     for df in (
@@ -264,13 +246,13 @@ def test_user_define_keeps_the_status_memo(spark):
     status_json runs exactly the jobs of a memo hit."""
     engine = _fresh_engine(spark)
     engine.status_json()
-    hit = _jobs_in_group(spark, engine.status_json)
+    hit = jobs_in_group(spark, engine.status_json)
 
     def define_then_status():
         engine.concepts.define("jobs_probe", lambda smo: smo["attnum"] <= 2)
         return engine.status_json()
 
-    assert _jobs_in_group(spark, define_then_status) == hit
+    assert jobs_in_group(spark, define_then_status) == hit
 
 
 def test_status_memo_hit_reuses_shuffle_output(spark):
@@ -279,7 +261,7 @@ def test_status_memo_hit_reuses_shuffle_output(spark):
     output), and only each job's result stage runs tasks."""
     engine = _fresh_engine(spark)
     engine.status().collect()
-    jobs = _job_ids_in_group(spark, lambda: engine.status().collect())
+    jobs = job_ids_in_group(spark, lambda: engine.status().collect())
     tracker = spark.sparkContext.statusTracker()
     stages = [
         [tracker.getStageInfo(s) for s in tracker.getJobInfo(j).stageIds] for j in jobs
@@ -332,7 +314,7 @@ def test_refresh_runs_no_range_sampler(spark, tmp_path):
 
     engine = SchemamapEngine(spark, FixtureCatalog(spark), warehouse_dir=str(tmp_path))
     engine.refresh()
-    assert _jobs_in_group(spark, engine.refresh) == 7
+    assert jobs_in_group(spark, engine.refresh) == 7
 
 
 def _old_status_json(engine) -> str:

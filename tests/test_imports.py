@@ -5,35 +5,38 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR as FIX
 from schemamap_spark.imports import ColumnRule, ImportPipeline, MigrationState
 from schemamap_spark.imports.states import check_transition
 from schemamap_spark.sources.merge import OptimisticLockError, merge_upsert
 from schemamap_spark.sources.readers import read_staging_csv
 
-FIX = "/root/repo/fixtures"
+
+ORG_MAPPINGS = {
+    "id": ("id", "identity"),
+    "name": ("name", "trim_str"),
+    "website": ("website", "identity"),
+}
+
+
+def _import_orgs(spark, rules, pipe=None, column_mappings=ORG_MAPPINGS, casts=None):
+    staging = read_staging_csv(spark, f"{FIX}/staging_organizations.csv")
+    target = spark.read.parquet(f"{FIX}/organizations.parquet").select("id", "name", "website")
+    return (pipe or ImportPipeline(spark)).run(
+        staging, target, keys=["id"], column_mappings=column_mappings,
+        casts=casts or {"id": "bigint"}, rules=rules,
+    )
 
 
 def test_full_import_run(spark):
-    staging = read_staging_csv(spark, f"{FIX}/staging_organizations.csv")
-    target = spark.read.parquet(f"{FIX}/organizations.parquet").select("id", "name", "website")
-
     pipe = ImportPipeline(spark)
-    res = pipe.run(
-        staging=staging,
-        target=target,
-        keys=["id"],
-        column_mappings={
-            "id": ("id", "identity"),
-            "name": ("name", "trim_str"),
-            "website": ("website", "identity"),
-        },
-        casts={"id": "bigint"},
-        rules=[
+    res = _import_orgs(
+        spark,
+        [
             ColumnRule("name", not_null=True, min_length=3, max_length=255, unique=True),
             ColumnRule("website", like="http%"),
         ],
-        mde_name="organizations",
-        source="CSV",
+        pipe,
     )
     assert res.state is MigrationState.IMPORTED
     assert res.loaded_rows == 200
@@ -50,7 +53,8 @@ def test_full_import_run(spark):
 def test_import_counts_single_scan(spark):
     """The funnel accounting (loaded/valid/violations) must be ONE aggregation
     over ONE scan of the staging lineage — three separate count() actions used
-    to recompute scan+mapping+validation three times."""
+    to recompute scan+mapping+validation three times. A `unique` rule's
+    duplicate keys are resolved by validate(), so they add no second scan."""
     from schemamap_spark.imports.pipeline import import_counts
     from schemamap_spark.imports.validation import validate
     from schemamap_spark.plans.dryrun import explain_str
@@ -58,7 +62,7 @@ def test_import_counts_single_scan(spark):
     staging = read_staging_csv(spark, f"{FIX}/staging_organizations.csv")
     checked = validate(
         staging,
-        [ColumnRule("name", not_null=True, min_length=3)],
+        [ColumnRule("name", not_null=True, min_length=3, unique=True)],
     )
     counts_df = import_counts(checked)
     # simple mode prints each physical node once ("formatted" repeats nodes
@@ -68,6 +72,80 @@ def test_import_counts_single_scan(spark):
     row = counts_df.collect()[0]
     assert row.loaded == 200
     assert row.valid + row.violation_rows == row.loaded
+
+
+def test_merged_plan_scans_staging_once(spark):
+    """The merge reads the staging batch once: its plan carries the
+    duplicate-key set as rows, not as an aggregate over the staging scan."""
+    res = _import_orgs(spark, [ColumnRule("name", not_null=True, unique=True)])
+    assert res.state is MigrationState.IMPORTED
+    plan = res.merged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan csv") == 1, plan
+    assert "Aggregate" not in plan, plan
+
+
+def test_import_aggregates_duplicate_keys_once(spark, tmp_path):
+    """run() and one write of res.merged run the duplicate-key aggregation
+    once, inside validate(): on a batch without duplicates a `unique` rule
+    adds exactly the jobs of that one aggregation, and neither the funnel
+    count nor the write re-runs it."""
+    from schemamap_spark.imports.validation import validate
+    from schemamap_spark.sources.sinks import write_parquet_atomic
+
+    from conftest import jobs_in_group
+
+    def import_and_write(unique):
+        res = _import_orgs(spark, [ColumnRule("id", unique=unique), ColumnRule("website", like="http%")])
+        assert res.state is MigrationState.IMPORTED
+        write_parquet_atomic(res.merged, str(tmp_path / f"out_{unique}"))
+
+    staging = read_staging_csv(spark, f"{FIX}/staging_organizations.csv")
+    one_aggregation = jobs_in_group(spark, lambda: validate(staging, [ColumnRule("id", unique=True)]))
+    assert one_aggregation > 0
+    without = jobs_in_group(spark, lambda: import_and_write(False))
+    assert jobs_in_group(spark, lambda: import_and_write(True)) == without + one_aggregation
+
+
+def test_dotted_header_imports_and_validates(spark, tmp_path):
+    """Staging columns are named by the header row, and spreadsheet headers
+    often contain dots: a dotted name is one column, not a struct path."""
+    from schemamap_spark.imports.validation import validate
+
+    p = tmp_path / "dotted.csv"
+    p.write_text("id,user.email,name\n1,a@x.test,Ada\n2,bad,Bob\n3,a@x.test,Cy\n4,c@x.test,Di\n")
+    staging = read_staging_csv(spark, str(p))
+    ref = spark.createDataFrame([("a@x.test",), ("bad",)], "`ref.email` string")
+    checked = validate(
+        staging, [ColumnRule("user.email", like="%@%", unique=True, fk=(ref, "ref.email"))]
+    )
+    assert {r.id: sorted(r.violations) for r in checked.collect()} == {
+        "1": ["user.email:unique"],
+        "2": ["user.email:like"],
+        "3": ["user.email:unique"],
+        "4": ["user.email:fk"],
+    }
+
+    target = spark.createDataFrame([(1, "old@x.test")], "id long, email string")
+    res = ImportPipeline(spark).run(
+        staging, target, keys=["id"],
+        column_mappings={"id": ("id", "identity"), "user.email": ("email", "trim_str")},
+        casts={"id": "bigint"}, rules=[ColumnRule("email", like="%@%")],
+    )
+    assert res.state is MigrationState.IMPORTED, res.summary
+    assert sorted(map(tuple, res.merged.collect())) == [
+        (1, "a@x.test"), (3, "a@x.test"), (4, "c@x.test"),
+    ]
+
+
+def test_unresolvable_mapping_is_load_failed(spark):
+    """A cast of a column the mapping does not produce, or a mapping of a
+    column the staging batch lacks, ends the import in LOAD_FAILED."""
+    pipe = ImportPipeline(spark)
+    res = _import_orgs(spark, [], pipe, casts={"id": "bigint", "nope": "int"})
+    assert res.state is MigrationState.LOAD_FAILED and "nope" in res.summary["error"]
+    res = _import_orgs(spark, [], pipe, column_mappings={"missing": ("id", "identity")})
+    assert res.state is MigrationState.LOAD_FAILED and "missing" in res.summary["error"]
+    assert [r.state for r in pipe.data_migrations().collect()] == ["LOAD_FAILED"] * 2
 
 
 def test_fk_validation(spark):
@@ -336,11 +414,10 @@ def test_reconcile_attaches_master_ids(spark):
     """Pre-merge MDM reconciliation over the fixture app: padded staged
     names resolve to their master organization id; corrupted names get a
     null matched_id (the create-new-entity path); row count is preserved."""
-    from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
     from schemamap_spark.imports.pipeline import ImportPipeline
 
-    staging = spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/staging_organizations_csv.parquet")
-    master = spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/organizations.parquet")
+    staging = spark.read.parquet(f"{FIX}/staging_organizations_csv.parquet")
+    master = spark.read.parquet(f"{FIX}/organizations.parquet")
     pipe = ImportPipeline(spark)
     out = pipe.reconcile(staging, master, match_col="name", threshold=0.9)
 

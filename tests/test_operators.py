@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
 from schemamap_spark.operators import dedup as DD
 from schemamap_spark.operators import similarity as SIM
 from schemamap_spark.operators.graph import transitive_closure
@@ -49,8 +50,6 @@ def test_lsh_buckets_match_committed_golden(spark):
     """Live hyperplane-LSH bucket ids over sf0.01 must equal the committed
     golden parquet — drift in the weight derivation or projection fold shows
     up here (and in the driver's ann_lsh_cosine hash check) immediately."""
-    from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
-
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
     weights = SIM._plane_weights(spark, 8, 64)
     wdf = F.broadcast(spark.createDataFrame([(weights,)], "W array<array<double>>"))
@@ -73,8 +72,6 @@ def test_simhash_fingerprints_match_committed_golden(spark):
     """Live fingerprints over sf0.01 must equal the committed golden parquet
     byte-for-byte — any drift in shingling, xxhash64 use, or bit voting shows
     up here (and in the driver's dedup_simhash hash check) immediately."""
-    from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
-
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
     live = {
         r.doc_id: r.simhash
@@ -338,7 +335,7 @@ def test_transitive_closure_sql_matches_iterative(spark):
     fixpoint on the doctor fixture (incl. its cycles, if any)."""
     from schemamap_spark.operators.graph import transitive_closure_sql
 
-    edges = spark.read.parquet("/root/repo/fixtures/role_edges.parquet")
+    edges = spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/role_edges.parquet")
     it = {(r.member, r.roleof) for r in transitive_closure(edges).collect()}
     rc = {(r.member, r.roleof) for r in transitive_closure_sql(edges).collect()}
     assert it == rc and len(it) > 0
@@ -347,7 +344,7 @@ def test_transitive_closure_sql_matches_iterative(spark):
 def test_multimodal_decode_plumbing(spark):
     from schemamap_spark.operators.multimodal import decode_images
 
-    images = spark.read.parquet("/root/repo/fixtures/images.parquet")
+    images = spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/images.parquet")
     out = decode_images(images, fake=True)
     rows = out.collect()
     assert len(rows) == images.count()
@@ -400,7 +397,7 @@ def test_multimodal_real_header_decode(spark):
 
     # the fixture corpus (synthetic payloads, no real containers) flows
     # through without failures as all-NULL-dim rows
-    images = spark.read.parquet("/root/repo/fixtures/images.parquet")
+    images = spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/images.parquet")
     decoded = decode_images(images, fake=False)
     assert decoded.count() == images.count()
 
@@ -414,7 +411,7 @@ def test_frame_sampling_plumbing(spark):
     from schemamap_spark.operators.multimodal import _FAKE_FRAME_SIZE, sample_frames
 
     videos = (
-        spark.read.parquet("/root/repo/fixtures/images.parquet")
+        spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/images.parquet")
         .selectExpr("image_id as video_id", "payload")
     )
     sizes = {r.video_id: len(r.payload) for r in videos.collect()}
@@ -440,7 +437,7 @@ def test_frame_sampling_plumbing(spark):
 def test_resize_images_plumbing(spark):
     from schemamap_spark.operators.multimodal import resize_images
 
-    images = spark.read.parquet("/root/repo/fixtures/images.parquet")
+    images = spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/images.parquet")
     out = resize_images(images, 8, 6, fake=True)
     rows = out.collect()
     assert len(rows) == images.count()

@@ -206,6 +206,42 @@ def test_validation_model(spark, rows):
     assert got == want
 
 
+key_vals = st.one_of(st.none(), st.sampled_from(["a", "b", "c"]))
+
+
+@SET
+@given(
+    rows=st.lists(st.tuples(key_vals, key_vals), min_size=1, max_size=12),
+    ref=st.lists(key_vals, min_size=1, max_size=6),
+)
+def test_validation_keys_model(spark, rows, ref):
+    """unique and fk rules vs a Python model: repeated values and NULLs in
+    two unique columns, one of which also references a key frame (itself
+    with repeats and NULLs). Every input row comes out exactly once."""
+    from schemamap_spark.imports import ColumnRule, validate
+
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows)], "id long, a string, b string"
+    )
+    ref_df = spark.createDataFrame([(k,) for k in ref], "k string")
+    out = validate(
+        df, [ColumnRule("a", unique=True), ColumnRule("b", unique=True, fk=(ref_df, "k"))]
+    ).collect()
+    assert len(out) == len(rows)
+    got = {r.id: sorted(r.violations) for r in out}
+    want = {}
+    for i, (a, b) in enumerate(rows):
+        v = []
+        if a is not None and [r[0] for r in rows].count(a) > 1:
+            v.append("a:unique")
+        if b is not None and [r[1] for r in rows].count(b) > 1:
+            v.append("b:unique")
+        if b is not None and b not in ref:
+            v.append("b:fk")
+        want[i] = sorted(v)
+    assert got == want
+
+
 @SET
 @given(
     lefts=st.lists(st.tuples(ids, st.integers(0, 50)), min_size=0, max_size=10),

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
 from schemamap_spark.plans.dryrun import tables_in_plan
 from conftest import SF001
 
@@ -22,7 +23,7 @@ def test_update_function_definition(spark):
 
     # redefinition (create-or-replace), mirrors core_test.clj:55-72
     engine.entities.define_tenants(
-        lambda s: s.read.parquet("/root/repo/fixtures/tenants.parquet")
+        lambda s: s.read.parquet(f"{DEFAULT_FIXTURE_DIR}/tenants.parquet")
     )
     assert fns.get("list_tenants")().count() == 25
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from schemamap_spark.catalog.fixture import DEFAULT_FIXTURE_DIR
 from schemamap_spark.session import load_table
 from schemamap_spark.sources.sinks import staged_merge_sql, write_parquet_atomic
 
@@ -138,8 +139,8 @@ def test_migrations_persistence(spark, tmp_path):
     from schemamap_spark.imports import ColumnRule, ImportPipeline
     from schemamap_spark.sources.readers import read_staging_csv
 
-    staging = read_staging_csv(spark, "/root/repo/fixtures/staging_organizations.csv")
-    target = spark.read.parquet("/root/repo/fixtures/organizations.parquet").select("id", "name")
+    staging = read_staging_csv(spark, f"{DEFAULT_FIXTURE_DIR}/staging_organizations.csv")
+    target = spark.read.parquet(f"{DEFAULT_FIXTURE_DIR}/organizations.parquet").select("id", "name")
     pipe = ImportPipeline(spark)
     pipe.run(
         staging=staging, target=target, keys=["id"],
